@@ -18,9 +18,13 @@ edge list shuffles on src, the labels on id) plus one min-groupBy with
 map-side combine. Labels are (id, label) longs only — never payloads.
 The loop's lineage is cut by localCheckpoint every ``checkpoint_every``
 rounds (unbounded lineage would make round k replay rounds 1..k-1);
-the per-round convergence test is a count() action over the changed
+the per-round convergence test is an isEmpty() action over the changed
 set, O(1) result on the driver (the standard distributed-CC stopping
-rule — not a data collect).
+rule — not a data collect). It is isEmpty(), not ``.limit(1).count()``:
+a codegen'd LocalLimit names its counter after a global id
+(``_limit_counter_<n>``), so every limit-count call compiles new
+classes, while isEmpty()'s plan repeats exactly and hits Spark's
+codegen cache.
 
 No counterpart in the reference (its dedup is single-batch
 drop_duplicates, pos_transform.py); this is the beyond-reference
@@ -73,16 +77,15 @@ def connected_components(
                 new_labels = new_labels.localCheckpoint(eager=False)
             new_labels = new_labels.persist()
 
-            changed = (
+            converged = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "id")
                 .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
+                .isEmpty()
             )
             labels.unpersist()
             labels = new_labels
-            if changed == 0:
+            if converged:
                 break
         else:
             raise RuntimeError(
@@ -153,8 +156,8 @@ def connected_components_star(
     Per round: two groupBy-min + two joins over an edge list that only
     shrinks toward the final star form; ids only, never payloads.
     Convergence test = the star edge set reaching a fixpoint
-    (large-star output == its input), checked with an O(1)-result
-    count over the symmetric difference.
+    (large-star output == its input), checked with isEmpty() over the
+    symmetric difference.
     """
     e = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
@@ -167,13 +170,10 @@ def connected_components_star(
         if (i + 1) % checkpoint_every == 0:
             new_e = new_e.localCheckpoint(eager=False)
         new_e = new_e.persist()
-        changed = (
-            new_e.exceptAll(e).limit(1).count()
-            + e.exceptAll(new_e).limit(1).count()
-        )
+        converged = new_e.exceptAll(e).isEmpty() and e.exceptAll(new_e).isEmpty()
         e.unpersist()
         e = new_e
-        if changed == 0:
+        if converged:
             break
     else:
         raise RuntimeError(f"star CC did not converge in {max_iter} rounds")

@@ -129,7 +129,7 @@ def batch_is_valid(df: DataFrame, rules: list[Rule]) -> bool:
     inventory_validate.py:244-247 rejects the whole file). Driver-side
     boolean for pipeline control flow."""
     flagged = with_flags(df, rules)
-    return flagged.filter(~F.col("is_valid")).limit(1).count() == 0
+    return flagged.filter(~F.col("is_valid")).isEmpty()
 
 
 def quarantine_split(

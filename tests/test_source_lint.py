@@ -41,6 +41,16 @@ _HOFS = {
 }
 
 
+def _package_trees():
+    """(path, parsed module) for every .py file in the package."""
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as fh:
+                    yield path, ast.parse(fh.read(), filename=path)
+
+
 def _lambda_args_with_defaults(call: ast.Call) -> list[ast.Lambda]:
     out = []
     for arg in list(call.args) + [kw.value for kw in call.keywords]:
@@ -53,26 +63,20 @@ def _lambda_args_with_defaults(call: ast.Call) -> list[ast.Lambda]:
 
 def test_no_defaulted_lambda_params_in_spark_hofs():
     offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for name in files:
-            if not name.endswith(".py"):
+    for path, tree in _package_trees():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
                 continue
-            path = os.path.join(root, name)
-            with open(path) as f:
-                tree = ast.parse(f.read(), filename=path)
-            for node in ast.walk(tree):
-                if not isinstance(node, ast.Call):
-                    continue
-                fn = node.func
-                called = (
-                    fn.attr
-                    if isinstance(fn, ast.Attribute)
-                    else fn.id
-                    if isinstance(fn, ast.Name)
-                    else None
-                )
-                if called in _HOFS and _lambda_args_with_defaults(node):
-                    offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+            fn = node.func
+            called = (
+                fn.attr
+                if isinstance(fn, ast.Attribute)
+                else fn.id
+                if isinstance(fn, ast.Name)
+                else None
+            )
+            if called in _HOFS and _lambda_args_with_defaults(node):
+                offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
     assert not offenders, (
         "defaulted lambda parameter passed to a Spark higher-order "
         "function — the HOF infers SQL-lambda arity from the Python "
@@ -138,25 +142,46 @@ def test_no_nondeterministic_exprs_in_package_source():
     frame is persisted first (dense_ids documents the contract)."""
     banned = {"rand", "randn", "monotonically_increasing_id", "uuid"}
     offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for fn in files:
-            if not fn.endswith(".py"):
+    for path, tree in _package_trees():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
                 continue
-            path = os.path.join(root, fn)
-            with open(path) as fh:
-                tree = ast.parse(fh.read(), filename=path)
-            for node in ast.walk(tree):
-                if not isinstance(node, ast.Call):
-                    continue
-                f = node.func
-                name = (
-                    f.attr
-                    if isinstance(f, ast.Attribute)
-                    else f.id if isinstance(f, ast.Name) else None
-                )
-                if name in banned:
-                    offenders.append(f"{path}:{node.lineno} calls {name}()")
+            f = node.func
+            name = (
+                f.attr
+                if isinstance(f, ast.Attribute)
+                else f.id if isinstance(f, ast.Name) else None
+            )
+            if name in banned:
+                offenders.append(f"{path}:{node.lineno} calls {name}()")
     assert not offenders, (
         "nondeterministic expression in package source (retry-unsafe "
         "in shuffle keys; use a deterministic hash):\n" + "\n".join(offenders)
+    )
+
+
+def test_no_limit_count_in_package_source():
+    """``.limit(n).count()`` is banned from the package: whole-stage
+    codegen names a LocalLimit's counter after a global id
+    (``_limit_counter_<n>``), so the generated source differs on every
+    call and each call compiles new classes (4 per call measured),
+    bypassing Spark's codegen cache. ``isEmpty()`` and ``take(1)``
+    answer the same emptiness question with a plan that repeats
+    exactly."""
+    offenders = []
+    for path, tree in _package_trees():
+        for node in ast.walk(tree):
+            f = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr == "count"
+                and isinstance(f.value, ast.Call)
+                and isinstance(f.value.func, ast.Attribute)
+                and f.value.func.attr == "limit"
+            ):
+                offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+    assert not offenders, (
+        ".limit(n).count() recompiles its generated code on every call; "
+        "test emptiness with isEmpty() or take(1) instead. Offenders: "
+        f"{offenders}"
     )
