@@ -8,10 +8,13 @@ DataFrames: every node repeatedly adopts the smallest label among
 itself and its neighbors until fixpoint. Rounds needed = graph
 diameter; near-dup graphs are unions of small dense clusters (pairs,
 triangles, small stars), so convergence is 2-4 rounds in practice.
-For adversarial long-chain graphs the alternating large-star/small-star
-scheme (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC 2014) drops rounds to O(log n); the propagation step
-below is its building block.
+A graph whose diameter exceeds ``max_iter`` (an adversarial long
+chain) raises instead of returning unconverged labels. The
+alternating large-star/small-star scheme (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC 2014) bounds rounds at
+O(log n) on any graph, but runs two groupBys, two joins and two
+convergence jobs per round; every caller here clusters near-dup
+graphs, which propagation finishes in those 2-4 rounds.
 
 Scale notes: each round is one join (labels onto edge endpoints — the
 edge list shuffles on src, the labels on id) plus one min-groupBy with
@@ -96,123 +99,19 @@ def connected_components(
         sym.unpersist()
 
 
-def _symmetric(edges: DataFrame) -> DataFrame:
-    return edges.union(
-        edges.select(F.col("a").alias("b"), F.col("b").alias("a")).select("a", "b")
-    ).distinct()
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star (Kiveris et al. 2014): every node links its LARGER
-    neighbors to the minimum of its neighborhood (incl. itself).
-    Emits (v, m) for v in N(u), v > u, with m = min(N(u) + {u})."""
-    sym = _symmetric(edges)
-    mins = sym.groupBy("a").agg(F.min("b").alias("_mn"))
-    m = F.least(F.col("_mn"), F.col("a")).alias("_m")
-    return (
-        sym.join(mins, "a")
-        .select("a", "b", m)
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("_m").alias("b"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star: orient every edge large->small, then link each
-    node's smaller neighbors (and itself) to the neighborhood min."""
-    oriented = (
-        edges.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    mins = oriented.groupBy("a").agg(F.min("b").alias("_m"))  # all b < a
-    withm = oriented.join(mins, "a")
-    to_nbrs = withm.filter(F.col("b") != F.col("_m")).select(
-        F.col("b").alias("a"), F.col("_m").alias("b")
-    )
-    to_self = mins.select(F.col("a"), F.col("_m").alias("b"))
-    return to_nbrs.union(to_self).distinct()
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 40,
-    checkpoint_every: int = 2,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014): converges in O(log n) rounds on ANY graph — the
-    upgrade over min-label propagation (O(diameter) rounds) for
-    adversarial long-chain graphs. Same contract as
-    ``connected_components``: (id, cluster_rep) with rep = min id.
-
-    Per round: two groupBy-min + two joins over an edge list that only
-    shrinks toward the final star form; ids only, never payloads.
-    Convergence test = the star edge set reaching a fixpoint
-    (large-star output == its input), checked with isEmpty() over the
-    symmetric difference.
-    """
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    for i in range(max_iter):
-        new_e = _small_star(_large_star(e))
-        if (i + 1) % checkpoint_every == 0:
-            new_e = new_e.localCheckpoint(eager=False)
-        new_e = new_e.persist()
-        converged = new_e.exceptAll(e).isEmpty() and e.exceptAll(new_e).isEmpty()
-        e.unpersist()
-        e = new_e
-        if converged:
-            break
-    else:
-        raise RuntimeError(f"star CC did not converge in {max_iter} rounds")
-
-    # final form: (child, root) star edges; roots + untouched nodes map
-    # to themselves
-    stars = e.select(F.col("a").alias("id"), F.col("b").alias("cluster_rep"))
-    out = (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(stars, "id", "left")
-        .select(
-            "id", F.coalesce("cluster_rep", F.col("id")).alias("cluster_rep")
-        )
-    )
-    e.unpersist()
-    return out
-
-
 def dedup_verdicts(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     pair_a: str = "doc_a",
     pair_b: str = "doc_b",
-    use_star: bool = False,
 ) -> DataFrame:
     """Near-dup pairs -> per-document dedup verdict: cluster
     representative (min doc_id in the connected cluster) and a keep
     flag (representative survives, other members drop). Documents in
     no pair keep themselves.
-
-    ``use_star=True`` routes through the alternating large-star/
-    small-star variant (O(log n) rounds on ANY graph) — the switch for
-    graphs whose diameter is not known to be small; the default
-    min-label propagation wins on near-dup graphs (diameter 2-4, fewer
-    shuffles per round). Identical output either way (property-tested).
     """
-    algo = connected_components_star if use_star else connected_components
-    cc = algo(
+    cc = connected_components(
         docs.select(id_col),
         pairs.select(pair_a, pair_b),
         id_col=id_col,

@@ -28,6 +28,12 @@ from pyspark.sql import functions as F
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.partitioning import (
     spread,
 )
+from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
+    BUCKET_CAP,
+    salted_bipartite_join,
+    salted_pair_join,
+    salted_pair_tasks,
+)
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.text import (
     shingles,
     tokens,
@@ -35,13 +41,6 @@ from group_2_shopware_enterprise_data_engineering_project_spark.operators.text i
 
 NUM_PERM = 16
 BAND_ROWS = 2
-# Hard per-reducer cap for the band-bucket self-join (same policy as
-# similarity.BUCKET_CAP): a degenerate bucket — boilerplate bodies,
-# empty-shingle signatures — of b docs would otherwise emit O(b^2)
-# pairs in ONE reducer; AQE skew-join re-schedules partitions but
-# cannot bound output volume. Buckets above the cap are salt-split
-# losslessly (see candidate_pairs), bounding any task at ~cap^2 pairs.
-BUCKET_CAP = 1024
 
 
 def shingle_sets(
@@ -145,11 +144,6 @@ def candidate_pairs(
     the k5 dead-end measured the same barrier cost in r12). Callers
     that fan the pair set into several branches (calibration's three
     joins) keep the default."""
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
-        salted_pair_join,
-        salted_pair_tasks,
-    )
-
     if materialize:
         # Persist the bucket frame (ids + digests only, ~50 B/row —
         # tiny next to the corpus) so the salt-split's oversized-bucket
@@ -398,10 +392,6 @@ def incremental_dedup(
         is identical to the plain bucket join;
       - new-vs-new candidates use the salt-split self-join as usual.
     """
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
-        salted_bipartite_join,
-    )
-
     new_ss = shingle_sets(new_docs, text_col, id_col, k).persist()
     own_buckets = new_buckets is None
     own_index = index is None

@@ -34,6 +34,9 @@ from pyspark.sql import types as T
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.partitioning import (
     spread,
 )
+from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
+    banded_hamming_pairs,
+)
 
 MEDIA_META = T.StructType(
     [
@@ -185,7 +188,6 @@ def resize_plan(
 
 PHASH_BITS = 60  # 15 hex chars -> sign-safe BIGINT in every engine
 PHASH_BANDS = 4
-_BAND_BITS = PHASH_BITS // PHASH_BANDS
 
 
 def media_phash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -206,49 +208,18 @@ def media_near_dup(
     max_hamming: int = 6,
     id_col: str = "media_id",
 ) -> DataFrame:
-    """Near-duplicate media pairs by banded Hamming join over the
+    """Near-duplicate media pairs (id_a, id_b, hamming) by the shared
+    banded-Hamming join (`saltjoin.banded_hamming_pairs`) over the
     60-bit phash: 4 x 15-bit bands — any pair within Hamming distance
     4-1=3 shares at least one exact band (LSH guarantee), wider radii
     are caught with the usual banding recall; candidates verified by
-    exact bit_count(xor). The shuffle carries (band_idx, band_value,
-    id) — never payloads; skewed bands are ordinary join skew under
-    AQE."""
-    hashed = media_phash(df).select(F.col(id_col).alias("mid"), "phash")
-    bands = hashed.select(
-        "mid",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        (
-                            F.shiftrightunsigned(F.col("phash"), i * _BAND_BITS)
-                            % F.lit(1 << _BAND_BITS)
-                        ).alias("band_val"),
-                    )
-                    for i in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("mid", "phash", "b.band_idx", "b.band_val")
-    a = bands.select(
-        "band_idx", "band_val", F.col("mid").alias("id_a"), F.col("phash").alias("ha")
+    exact bit_count(xor). The shuffle carries (band_idx, band_key, id,
+    phash) — never payloads; a hot band is salt-split at the shared
+    bucket cap."""
+    hashed = media_phash(df).select(id_col, "phash")
+    return banded_hamming_pairs(
+        hashed, id_col, "phash", PHASH_BITS, PHASH_BANDS, max_hamming
     )
-    b = bands.select(
-        "band_idx", "band_val", F.col("mid").alias("id_b"), F.col("phash").alias("hb")
-    )
-    cands = (
-        a.join(b, ["band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-    )
-    return cands.select(
-        "id_a",
-        "id_b",
-        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long").alias("hamming"),
-    ).where(F.col("hamming") <= max_hamming)
 
 
 def scene_segments(

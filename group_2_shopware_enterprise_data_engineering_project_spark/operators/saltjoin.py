@@ -1,6 +1,7 @@
 """Lossless salt-split self-join: THE bounded-reducer pattern for
 bucketed candidate generation, shared by every near-dup family
-(embedding SRP buckets, semdedup clusters, MinHash band buckets).
+(embedding SRP buckets, semdedup clusters, MinHash band buckets, and
+the SimHash / media-pHash banded-Hamming join, `banded_hamming_pairs`).
 
 A bucket of n > cap rows hashes its members into s = ceil(n/cap)
 groups; each row is replicated into one task row per sub-task it
@@ -31,6 +32,14 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Hard per-reducer cap for every near-dup self-join: a bucket larger
+# than this — a dense embedding cluster, a boilerplate MinHash band, a
+# hot signature band — is salt-split across (s*(s+1))/2 sub-tasks,
+# bounding a task's candidate-pair work at ~BUCKET_CAP^2 regardless of
+# skew (AQE skew-join re-schedules partitions but cannot bound join
+# OUTPUT volume).
+BUCKET_CAP = 1024
 
 
 def salted_pair_tasks(
@@ -112,6 +121,63 @@ def salted_pair_join(
     callers select their pair columns via the ``a.``/``b.`` aliases."""
     a, b = tasks.alias("a"), tasks.alias("b")
     return a.join(b, salted_join_cond(bucket_cols, id_col))
+
+
+def banded_hamming_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    hash_col: str,
+    n_bits: int,
+    n_bands: int,
+    max_hamming: int,
+) -> DataFrame:
+    """(id_a, id_b, hamming) pairs, id_a < id_b, whose ``n_bits``-wide
+    bit signatures (a LongType ``hash_col``) differ in at most
+    ``max_hamming`` bits — the candidate + verify stage of SimHash and
+    perceptual-hash near-dup.
+
+    The signature splits into ``n_bands`` bands of n_bits // n_bands
+    bits, keyed by an UNSIGNED shift + mask (so a negative signed-64
+    signature bands on its raw bit pattern); rows self-join on
+    (band_idx, band_key) through the salted pair join, so a hot band
+    is capped at ~BUCKET_CAP^2 candidates per task, and candidates are
+    verified by exact bit_count(xor). By pigeonhole every pair within
+    Hamming n_bands - 1 shares an intact band: recall is 100% up to
+    there, and wider radii get the usual banding recall. The shuffle
+    carries (band key, id, signature) — never payloads. The salt does
+    not order ids across groups, so pairs are oriented with
+    least/greatest; a pair sharing several bands is kept once."""
+    band_bits = n_bits // n_bands
+    mask = (1 << band_bits) - 1
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band_idx"),
+                F.shiftrightunsigned(F.col(hash_col), i * band_bits)
+                .bitwiseAND(F.lit(mask))
+                .alias("band_key"),
+            )
+            for i in range(n_bands)
+        ]
+    )
+    keys = ("band_idx", "band_key")
+    exploded = sigs.select(id_col, hash_col, F.explode(bands).alias("_b")).select(
+        id_col, hash_col, "_b.band_idx", "_b.band_key"
+    )
+    tasks = salted_pair_tasks(exploded, BUCKET_CAP, keys, id_col)
+    pairs = (
+        salted_pair_join(tasks, keys, id_col)
+        .select(
+            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
+            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
+            F.bit_count(F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}")))
+            .cast("long")
+            .alias("hamming"),
+        )
+        .distinct()
+    )
+    # No terminal global sort on the (potentially huge) pair list.
+    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def salted_bipartite_tasks(

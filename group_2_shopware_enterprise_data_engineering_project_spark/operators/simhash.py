@@ -6,15 +6,17 @@ batches — the sanctioned slow path; per-token md5 bit-voting has no
 native Spark expression). Everything AFTER signature computation is
 native DataFrame ops:
 
-- near-pair candidate generation splits the 64-bit signature into 4
-  16-bit bands and self-joins on band equality — by pigeonhole, any
-  pair with Hamming distance <= 3 shares at least one intact band, so
-  recall is 100% at the d<=3 design point (same rotate-and-block idea
-  as Manku et al.).
+- near-pair candidate generation is the shared banded-Hamming join
+  (`saltjoin.banded_hamming_pairs`, also behind media pHash near-dup):
+  the 64-bit signature splits into 4 16-bit bands and rows self-join
+  on band equality through the salted pair join, which caps a hot
+  band's fan-out — by pigeonhole, any pair with Hamming distance <= 3
+  shares at least one intact band, so recall is 100% at the d<=3
+  design point (same rotate-and-block idea as Manku et al.).
 - exact Hamming verify = bit_count(a XOR b), a codegen'd long op.
 
 Scale: signatures are 8 bytes/doc; the band join shuffles (16-bit key,
-id) pairs. Deterministic md5 hashing -> stable across runs/engines.
+id, signature) rows. Deterministic md5 hashing -> stable across runs/engines.
 Token hashes are the LITTLE-endian uint64 of the first 8 md5 digest
 bytes — exactly DuckDB's ``md5_number_upper`` — so the whole pipeline
 (bit-voting signature, band split, Hamming verify) mirrors into the
@@ -30,6 +32,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.partitioning import spread
+from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
+    banded_hamming_pairs,
+)
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,54 +71,6 @@ def simhash_signatures(
     return docs.select(F.col(id_col).alias("doc_id"), simhash_udf(F.col(text_col)).alias("simhash"))
 
 
-def simhash_near_pairs(
-    sigs: DataFrame, max_hamming: int = 3
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) pairs with Hamming(simhash) <= max_hamming.
-
-    4 x 16-bit band join guarantees full recall for max_hamming <= 3;
-    larger distances would need more/rotated bands.
-    """
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.shiftrightunsigned(F.col("simhash"), b * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("band_key"),
-            )
-            for b in range(4)
-        ]
-    )
-    exploded = sigs.select(
-        "doc_id", "simhash", F.explode(bands).alias("band")
-    ).select(
-        "doc_id",
-        "simhash",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
-    )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).cast("long").alias("hamming"),
-        )
-        .distinct()
-    )
-    # No terminal global sort on the (potentially huge) pair list.
-    return pairs.filter(F.col("hamming") <= max_hamming)
-
-
 def simhash_dedup(
     docs: DataFrame,
     text_col: str = "text",
@@ -121,12 +78,16 @@ def simhash_dedup(
     max_hamming: int = 3,
 ) -> DataFrame:
     # Persist: the band self-join references the signature DF on both
-    # sides, which would run the Pandas UDF twice over the corpus.
+    # sides and the salt's band sizing once more, which would run the
+    # Pandas UDF up to three times over the corpus.
     # Released on return — the result (id pairs + distance, no text)
     # is eagerly materialized first, so the corpus-sized signature
     # cache never outlives this call.
     sigs = simhash_signatures(docs, text_col, id_col).persist()
     try:
-        return simhash_near_pairs(sigs, max_hamming).localCheckpoint(eager=True)
+        pairs = banded_hamming_pairs(sigs, "doc_id", "simhash", 64, 4, max_hamming)
+        return pairs.select(
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
+        ).localCheckpoint(eager=True)
     finally:
         sigs.unpersist()

@@ -32,6 +32,11 @@ from pyspark.sql import functions as F
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.partitioning import (
     spread,
 )
+from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
+    BUCKET_CAP,
+    salted_pair_join,
+    salted_pair_tasks,
+)
 
 NUM_PLANES = 8
 DIM = 64
@@ -44,10 +49,6 @@ DIM = 64
 MIN_PLANES = 8
 MAX_PLANES = 24
 TARGET_BUCKET_ROWS = 1024
-# Hard per-reducer cap for the near-dup self-join: any bucket larger
-# than this is salt-split across (s*(s+1))/2 sub-tasks, bounding a
-# task's candidate-pair work at ~BUCKET_CAP^2 regardless of skew.
-BUCKET_CAP = 1024
 
 
 def derive_num_planes(
@@ -655,7 +656,7 @@ def embedding_near_dup_pairs(
     # sizing branch would otherwise re-run lsh_bucket over the corpus;
     # r7 bisect, PERF.md)
     bucketed = bucketed.persist()
-    tasks = _salted_pair_tasks(bucketed, bucket_cap).persist()
+    tasks = salted_pair_tasks(bucketed, bucket_cap).persist()
     try:
         return _near_dup_pairs_body(tasks, threshold)
     finally:
@@ -664,10 +665,6 @@ def embedding_near_dup_pairs(
 
 
 def _near_dup_pairs_body(tasks: DataFrame, threshold: float) -> DataFrame:
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
-        salted_pair_join,
-    )
-
     pairs = (
         salted_pair_join(tasks, ("bucket",), "vec_id")
         .select(
@@ -736,7 +733,7 @@ def semdedup(
     - the only wide exchange is the self-join's shuffle on
       centroid_id, with cluster count derived linearly from corpus
       size (`derive_semdedup_centroids`) so expected per-cluster work
-      is constant, and `_salted_pair_tasks` hard-capping any skewed
+      is constant, and `saltjoin.salted_pair_tasks` hard-capping any skewed
       cluster at ~bucket_cap^2 candidate pairs per task;
     - the shuffle carries (vec_id, v, cluster) — vectors, not
       payloads, and only cluster-mates ever meet.
@@ -763,11 +760,7 @@ def _semdedup_body(
     bucketed = assigned.select(
         "vec_id", "v", "nv", F.col("centroid_id").alias("bucket")
     )
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
-        salted_pair_join,
-    )
-
-    tasks = _salted_pair_tasks(bucketed, bucket_cap)
+    tasks = salted_pair_tasks(bucketed, bucket_cap)
     # Same lossless sub-task enumeration as embedding_near_dup_pairs;
     # orientation matters here: the HIGHER id of each pair is the dup
     # candidate, so attribute the similarity to greatest(vec_id).
@@ -798,17 +791,6 @@ def _semdedup_body(
     # one narrow row per input vector (ids + sim + flag, no vectors) —
     # eager so semdedup() can release the assignment cache on return
     return out.localCheckpoint(eager=True)
-
-
-def _salted_pair_tasks(bucketed: DataFrame, bucket_cap: int) -> DataFrame:
-    """Shared lossless salt-split (see operators/saltjoin.py — single
-    implementation of the bounded-reducer pattern, reused by the
-    MinHash band join as well)."""
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjoin import (
-        salted_pair_tasks,
-    )
-
-    return salted_pair_tasks(bucketed, bucket_cap, ("bucket",), "vec_id")
 
 
 def label_stats(emb: DataFrame) -> DataFrame:
@@ -1289,75 +1271,6 @@ def ivfpq_topk(
         (F.lit(0.0) - F.col("cos_sim")).alias("approx_dist"),
         "rank",
     )
-
-
-# --- GEMM-based brute-force scoring (Arrow/numpy matmul path) --------------
-
-
-def brute_force_topk_gemm(
-    emb: DataFrame,
-    query_ids: list[int] | None = None,
-    query_pred: Column | None = None,
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k like `brute_force_topk`, but scoring runs as
-    ONE numpy matrix multiply per Arrow batch (corpus-batch × queryᵀ)
-    instead of a per-row codegen fold — the throughput path when the
-    query set is large enough that |Q| fused fold expressions stop
-    fitting codegen budgets (hundreds+ of queries).
-
-    Per partition: normalize the corpus batch rows, GEMM against the
-    broadcast normalized query matrix, keep each batch's local top-k
-    per query (bounded memory), then reduce with the global partial
-    top-k. Scores differ from the fold path only in summation order
-    (numpy uses SIMD/pairwise summation), i.e. last-ulp — which is why
-    this variant has no SQL oracle; the fold path is the bit-exact
-    reference and `tests/test_similarity.py` pins set-agreement
-    between the two.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if query_pred is None:
-        query_pred = F.col("vec_id").isin(query_ids or [])
-    q_rows = (
-        emb.filter(query_pred)
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["v"] for r in q_rows], dtype=np.float64)
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    sc = emb.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, qn))
-
-    schema = "query_id long, neighbor_id long, cos_sim double"
-
-    def _batches(it):
-        ids_b, qn_b = bq.value
-        for pdf in it:
-            if pdf.empty:
-                continue
-            nm = np.stack(pdf["embedding"].map(np.asarray).values).astype(np.float64)
-            norms = np.linalg.norm(nm, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            sims = (nm / norms) @ qn_b.T  # |batch| x |Q|
-            nids = pdf["vec_id"].values.astype(np.int64)
-            top = min(k + 1, sims.shape[0])  # +1 allows dropping self
-            for qi, qid in enumerate(ids_b):
-                col = sims[:, qi]
-                idx = np.argpartition(-col, top - 1)[:top]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": nids[idx],
-                        "cos_sim": col[idx],
-                    }
-                )
-
-    sims = spread(emb).select("vec_id", "embedding").mapInPandas(_batches, schema)
-    sims = sims.filter(F.col("neighbor_id") != F.col("query_id"))
-    return _topk_per_query(sims, k).orderBy("query_id", "rank")
 
 
 def pool_chunk_embeddings(

@@ -38,7 +38,7 @@ from group_2_shopware_enterprise_data_engineering_project_spark.operators.compon
 
 
 def _gate_sets(
-    docs: DataFrame, jaccard_threshold: float, materialize: bool
+    docs: DataFrame, jaccard_threshold: float
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """ONE copy of the curation gate chain, shared by `curate_corpus`
     and `curation_audit` so the audit's 'kept' label can never drift
@@ -50,33 +50,40 @@ def _gate_sets(
       passed    (doc_id, n_tokens, quality_score) quality-gate passers
       rep_keep  (doc_id)                          repetition-gate keeps
 
-    Each stage runs only on the previous stage's survivors. With
-    ``materialize`` each id set is eagerly checkpointed — required
-    when a caller consumes a set in MORE than one plan branch (the
-    audit's attribution joins), where lazy plans would re-execute the
-    whole upstream chain per branch."""
-    mat = (
-        (lambda d: d.localCheckpoint(eager=True)) if materialize else (lambda d: d)
+    Each stage runs only on the previous stage's survivors. Each id
+    set is eagerly checkpointed, because the chain fans out into
+    several plan branches (surv1 feeds the pairs, the verdicts and
+    surv2; in the audit every set also feeds an attribution join),
+    where lazy plans would re-execute the whole upstream chain per
+    branch."""
+    exact = (
+        text.exact_dedup(docs)
+        .select(F.col("keep_id").alias("doc_id"))
+        .localCheckpoint(eager=True)
     )
-    exact = mat(text.exact_dedup(docs).select(F.col("keep_id").alias("doc_id")))
     surv1 = docs.join(exact, "doc_id", "semi")
 
     pairs = minhash.minhash_lsh_dedup(surv1, threshold=jaccard_threshold)
     verdicts = dedup_verdicts(surv1, pairs.select("doc_a", "doc_b"))
-    keep2 = mat(verdicts.filter(F.col("is_keep")).select("doc_id"))
+    keep2 = (
+        verdicts.filter(F.col("is_keep"))
+        .select("doc_id")
+        .localCheckpoint(eager=True)
+    )
     surv2 = surv1.join(keep2, "doc_id", "semi")
 
     scored = text.quality_score(text.text_stats(surv2))
-    passed = mat(
-        scored.filter(F.col("is_quality")).select(
-            "doc_id", "n_tokens", "quality_score"
-        )
+    passed = (
+        scored.filter(F.col("is_quality"))
+        .select("doc_id", "n_tokens", "quality_score")
+        .localCheckpoint(eager=True)
     )
     q_docs = surv2.join(passed.select("doc_id"), "doc_id", "semi")
-    rep_keep = mat(
+    rep_keep = (
         text.repetition_signals(q_docs)
         .filter(F.col("repetition_keep"))
         .select("doc_id")
+        .localCheckpoint(eager=True)
     )
     return exact, keep2, passed, rep_keep
 
@@ -84,7 +91,7 @@ def _gate_sets(
 def curate_corpus(docs: DataFrame, jaccard_threshold: float = 0.4) -> DataFrame:
     """Run the full curation pass; returns the surviving corpus as
     (doc_id, n_tokens, quality_score, split). Gate chain in
-    `_gate_sets` (shared with `curation_audit`), run MATERIALIZED:
+    `_gate_sets` (shared with `curation_audit`), which MATERIALIZES:
     the chain is linear stage-to-stage but each intermediate survivor
     frame feeds multiple plan branches (surv1 -> pairs AND verdicts
     AND surv2; surv2 -> scoring AND the repetition gate), so the lazy
@@ -92,7 +99,7 @@ def curate_corpus(docs: DataFrame, jaccard_threshold: float = 0.4) -> DataFrame:
     plan time vs 4 materialized, and measurably slower at sf0.1. The
     id sets are survivor-sized; at corpus scale they are the cheap
     thing to persist."""
-    _, _, passed, rep_keep = _gate_sets(docs, jaccard_threshold, materialize=True)
+    _, _, passed, rep_keep = _gate_sets(docs, jaccard_threshold)
     survivors = passed.join(rep_keep, "doc_id", "semi")
     # hash-stable split assignment
     return prep.split_assign(survivors, "doc_id").select(
@@ -146,14 +153,10 @@ def curation_audit(docs: DataFrame, jaccard_threshold: float = 0.4) -> DataFrame
     curation review actually asks — "where did the other 40% go" — at
     the cost of the same single corpus pass: the gate chain is the
     SHARED `_gate_sets` (so the 'kept' label equals the survivor set
-    by construction, pinned by the partition-law pytest), run with
-    ``materialize=True`` because each id set here feeds BOTH the next
-    stage and a final attribution branch — lazy plans would re-execute
-    the whole upstream chain per branch. All four sets are
-    doc_id-sized."""
-    exact, keep2, passed, rep_keep = _gate_sets(
-        docs, jaccard_threshold, materialize=True
-    )
+    by construction, pinned by the partition-law pytest), whose
+    eagerly checkpointed id sets each feed BOTH the next stage and a
+    final attribution branch here. All four sets are doc_id-sized."""
+    exact, keep2, passed, rep_keep = _gate_sets(docs, jaccard_threshold)
 
     def _mark(ids: DataFrame, flag: str) -> DataFrame:
         return ids.select("doc_id").withColumn(flag, F.lit(1))

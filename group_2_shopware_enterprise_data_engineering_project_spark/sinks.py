@@ -1,6 +1,6 @@
-"""Sinks: hour-partitioned parquet (K1), partitioned append/overwrite
-(K2/K3), partition registration (K9). MERGE sinks (K4/K5) live in
-operators/merge.py; quarantine/DLQ (K6/K7) in operators/validate.py.
+"""Sinks: hour-partitioned parquet (K1), partition registration (K9).
+Partitioned append/overwrite (K2/K3) and the MERGE sinks (K4/K5) live
+in operators/merge.py; quarantine/DLQ (K6/K7) in operators/validate.py.
 
 K1 reference parity: the WEB/CRM lambdas group records by
 (year, month, day, hour) of the event/ingestion time and write one
@@ -120,14 +120,6 @@ def read_hour_partitioned(spark: SparkSession, path: str) -> DataFrame:
         + [StructField(k, StringType(), True) for k in HOUR_PARTITION_KEYS]
     )
     return spark.read.schema(full).option("basePath", path).parquet(path)
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_by: tuple[str, ...], mode: str = "append"
-) -> None:
-    """K2 (append) / K3 (overwrite) — date-partitioned table writes
-    (reference transfom_pos.py:156-168)."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
 def register_partitions(spark: SparkSession, table_name: str) -> None:

@@ -1,4 +1,5 @@
-"""Dedup family: exact, minhash-LSH, n-gram Jaccard, simhash.
+"""Dedup family: exact, minhash-LSH, n-gram Jaccard, simhash and the
+banded-Hamming join behind simhash and media pHash.
 
 Strategy: plant exact duplicates and near-duplicates in a small corpus
 and assert each detector finds them (and nothing spurious at high
@@ -7,11 +8,14 @@ thresholds), plus determinism across runs.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from group_2_shopware_enterprise_data_engineering_project_spark.operators import (
     dedup,
     minhash,
+    saltjoin,
     simhash,
 )
 
@@ -86,6 +90,46 @@ def test_simhash_signature_properties(spark):
     sigs = {r.doc_id: r.simhash for r in simhash.simhash_signatures(df).collect()}
     assert sigs[0] == 0
     assert sigs[1] == sigs[2] != 0
+
+
+@pytest.mark.parametrize("n_bits,n_bands", [(64, 4), (60, 4)])
+def test_banded_hamming_pairs_matches_all_pairs(spark, monkeypatch, n_bits, n_bands):
+    """At both signature widths in use (SimHash 64 x 4, pHash 60 x 4)
+    the banded join returns exactly the all-pairs set with
+    popcount(a ^ b) <= 3, where banding guarantees full recall. Planted
+    pairs sit at Hamming 0..3; one pair differs only in the top bit,
+    which at 64 bits makes one side a negative signed long, so every
+    band must split on the raw bit pattern. The cap is lowered so a
+    planted hot band (seven near-copies sharing band 0) is salt-split
+    and its pairs meet across salt groups."""
+    monkeypatch.setattr(saltjoin, "BUCKET_CAP", 2)
+    rng = random.Random(n_bits)
+    sigs = [rng.getrandbits(n_bits) for _ in range(30)]
+    for d in range(4):
+        for base in rng.sample(sigs[:30], 3):
+            sigs.append(base ^ sum(1 << b for b in rng.sample(range(n_bits), d)))
+    top = rng.getrandbits(n_bits) | (1 << (n_bits - 1))
+    sigs += [top, top ^ (1 << (n_bits - 1))]
+    hot = rng.getrandbits(n_bits)
+    sigs += [hot ^ (1 << b) for b in rng.sample(range(n_bits // n_bands, n_bits), 7)]
+    signed = [s - (1 << 64) if s >> 63 else s for s in sigs]
+    assert any(s < 0 for s in signed) == (n_bits == 64)
+    df = spark.createDataFrame(list(enumerate(signed)), "id long, sig long")
+
+    got = {
+        (r.id_a, r.id_b): r.hamming
+        for r in saltjoin.banded_hamming_pairs(
+            df, "id", "sig", n_bits, n_bands, 3
+        ).collect()
+    }
+    want = {
+        (i, j): bin(a ^ b).count("1")
+        for i, a in enumerate(sigs)
+        for j, b in enumerate(sigs)
+        if i < j and bin(a ^ b).count("1") <= 3
+    }
+    assert set(want.values()) == {0, 1, 2, 3}
+    assert got == want
 
 
 def test_bpe_ish_tokens(spark):

@@ -9,7 +9,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from group_2_shopware_enterprise_data_engineering_project_spark.operators import similarity
+from group_2_shopware_enterprise_data_engineering_project_spark.operators import (
+    saltjoin,
+    similarity,
+)
 
 DIM = 64
 N = 40
@@ -184,7 +187,7 @@ def test_bucket_cap_bounds_subtask_size(spark):
             F.transform("embedding", lambda x: x.cast("double")), planes
         ).alias("bucket"),
     )
-    tasks = similarity._salted_pair_tasks(bucketed, cap)
+    tasks = saltjoin.salted_pair_tasks(bucketed, cap)
     sizes = tasks.groupBy("bucket", "_i", "_j").count().collect()
     # each sub-task holds one i-group + one j-group; groups are
     # hash-assigned so sizes are ~cap in expectation, O(cap) whp — a
@@ -576,33 +579,15 @@ def test_ivfpq_plan_joins_codes_on_list_id(emb):
     assert "CartesianProduct" not in plan
 
 
-def test_gemm_bruteforce_agrees_with_fold_path(emb):
-    """The GEMM scorer must return the same neighbor sets as the
-    bit-exact fold path; scores may differ in the last ulp (summation
-    order), so compare ids and score values with a tolerance."""
-    df, _ = emb
-    qp = [0, 3, 7]
-    fold = similarity.brute_force_topk(df, query_ids=qp, k=5).collect()
-    gemm = similarity.brute_force_topk_gemm(df, query_ids=qp, k=5).collect()
-    f_by_q: dict[int, dict[int, float]] = {}
-    for r in fold:
-        f_by_q.setdefault(r.query_id, {})[r.neighbor_id] = r.cos_sim
-    g_by_q: dict[int, dict[int, float]] = {}
-    for r in gemm:
-        g_by_q.setdefault(r.query_id, {})[r.neighbor_id] = r.cos_sim
-    assert set(f_by_q) == set(g_by_q)
-    for q in f_by_q:
-        assert set(f_by_q[q]) == set(g_by_q[q]), q
-        for n, s in f_by_q[q].items():
-            assert abs(s - g_by_q[q][n]) < 1e-9
-
-
 def test_pool_chunk_embeddings_exact_and_partition_invariant(spark):
     """Fixed-point pooling: exact sums, one-division means, and the
     same result at any partitioning (the property a float sum lacks)."""
     from pyspark.sql import functions as F
 
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators import similarity
+    from group_2_shopware_enterprise_data_engineering_project_spark.operators import (
+    saltjoin,
+    similarity,
+)
 
     rows = [
         (0, [1.0, -0.5]),

@@ -41,9 +41,10 @@ _HOFS = {
 }
 
 
-def _package_trees():
-    """(path, parsed module) for every .py file in the package."""
-    for root, _dirs, files in os.walk(PKG):
+def _package_trees(base: str = PKG):
+    """(path, parsed module) for every .py file under ``base`` (the
+    package by default)."""
+    for root, _dirs, files in os.walk(base):
         for name in files:
             if name.endswith(".py"):
                 path = os.path.join(root, name)
@@ -184,4 +185,95 @@ def test_no_limit_count_in_package_source():
         ".limit(n).count() recompiles its generated code on every call; "
         "test emptiness with isEmpty() or take(1) instead. Offenders: "
         f"{offenders}"
+    )
+
+
+REPO = os.path.dirname(PKG)
+
+#: (module relative to the package, top-level name) -> why it stays
+#: with no consumer in package code or in the repo's entry points
+#: (bench.py, __spark_entry__.py, tools/, perfbench/). Frozen: a new
+#: unconsumed public name must be deleted or listed here with a
+#: reason, and an entry whose name gains a consumer or goes away must
+#: leave the list.
+UNCONSUMED_ALLOWLIST: dict[tuple[str, str], str] = {
+    ("functions/layout.py", "linear_write"): "single-column layout baseline that tests/test_layout.py compares Z-order against",
+    ("functions/partitioning.py", "salted_agg"): "two-phase skewed-key aggregation, exercised only by tests/test_partitioning.py",
+    ("operators/merge.py", "delta_upsert_additive"): "Delta MERGE path, gated on delta-spark (tests/test_delta_interop.py)",
+    ("operators/merge.py", "delta_upsert_replace"): "Delta MERGE path, gated on delta-spark (tests/test_delta_interop.py)",
+    ("operators/similarity.py", "pq_codebook_kmeans"): "trained PQ codebook, exercised only by tests/test_similarity.py",
+    ("operators/stats.py", "hll_merge"): "shard-wise HLL register merge, exercised only by tests/test_search_stats.py",
+    ("operators/text.py", "fingerprint"): "whole-document md5 key, exercised only by tests/test_dedup.py and tests/test_multimodal.py",
+    ("operators/transform.py", "extract_date_from_filename"): "reference filename-date parsing, exercised only by tests/test_transform.py",
+    ("operators/transform.py", "extract_partition_keys"): "reference partition-path parsing, exercised only by tests/test_transform.py",
+    ("operators/validate.py", "batch_is_valid"): "file-level validity gate, exercised only by tests/test_validate.py",
+    ("operators/validate.py", "quarantine_split"): "valid/rejected zone split, exercised only by tests/test_validate.py",
+    ("sinks.py", "checked_write"): "expectation-gated write, exercised only by tests/test_validate.py",
+    ("sources/tables.py", "load_tables"): "public loader of every testdata table; no caller",
+    ("sources/tables.py", "register_views"): "temp-view SQL surface, exercised only by tests/test_sources.py",
+    ("streaming/micro_batch.py", "BatchGuard"): "at-least-once replay guard, exercised only by tests/test_streaming.py",
+    ("streaming/micro_batch.py", "hour_partitioned_sink"): "no caller; sole user of the module's write_hour_partitioned import, which perfbench/layers.py patches",
+    ("streaming/micro_batch.py", "stream_kafka_source"): "Kafka source, gated on the Kafka connector (tests/test_streaming.py)",
+    ("streaming/polling.py", "run_polling_loop"): "reference poll loop, exercised only by tests/test_streaming.py",
+    ("streaming/stateful.py", "running_counts"): "stateful running count, exercised only by tests/test_streaming.py",
+}
+
+
+def _unconsumed_public_names() -> set[tuple[str, str]]:
+    """Top-level public def/class of every non-``queries/`` package
+    module that no AST Name/Attribute references, outside its own
+    body, in package code or in the repo's entry points. Matching is
+    by name only, so a same-named symbol elsewhere counts as a use."""
+    pkg = list(_package_trees())
+    entry = [
+        (path, ast.parse(open(path).read(), filename=path))
+        for path in (
+            os.path.join(REPO, "bench.py"),
+            os.path.join(REPO, "__spark_entry__.py"),
+        )
+    ]
+    for sub in ("tools", "perfbench"):
+        entry += list(_package_trees(os.path.join(REPO, sub)))
+    refs: dict[str, list[tuple[str, int]]] = {}
+    for path, tree in pkg + entry:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs.setdefault(node.id, []).append((path, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                refs.setdefault(node.attr, []).append((path, node.lineno))
+    found = set()
+    for path, tree in pkg:
+        rel = os.path.relpath(path, PKG)
+        if rel.startswith("queries" + os.sep):
+            continue
+        for d in tree.body:
+            if not isinstance(
+                d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or d.name.startswith("_"):
+                continue
+            if not any(
+                not (p == path and d.lineno <= ln <= d.end_lineno)
+                for p, ln in refs.get(d.name, [])
+            ):
+                found.add((rel, d.name))
+    return found
+
+
+def test_every_package_function_has_a_consumer():
+    """Public package code must have a consumer: the engine itself, the
+    repo entry points, the tools or the benchmark. Tests alone do not
+    count — code that only tests reach is a second path to maintain
+    with nothing relying on it — so every such name is either deleted
+    or on the frozen allowlist with its reason."""
+    found = _unconsumed_public_names()
+    unlisted = sorted(found - set(UNCONSUMED_ALLOWLIST))
+    assert not unlisted, (
+        "public package names with no consumer outside tests — delete "
+        "them, or list them in UNCONSUMED_ALLOWLIST with a reason: "
+        f"{unlisted}"
+    )
+    stale = sorted(set(UNCONSUMED_ALLOWLIST) - found)
+    assert not stale, (
+        "allowlist entries that now have a consumer or no longer exist "
+        f"— remove them: {stale}"
     )
