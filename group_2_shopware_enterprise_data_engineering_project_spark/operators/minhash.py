@@ -80,6 +80,13 @@ def minhash_signature(shingle_col: Column, num_perm: int = NUM_PERM) -> Column:
     )
 
 
+def _signed(ss: DataFrame, num_perm: int) -> DataFrame:
+    """(doc_id, signature) of a `shingle_sets` frame."""
+    return ss.select(
+        "doc_id", minhash_signature(F.col("shingles"), num_perm).alias("signature")
+    )
+
+
 def signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -87,10 +94,7 @@ def signatures(
     k: int = 3,
     num_perm: int = NUM_PERM,
 ) -> DataFrame:
-    ss = shingle_sets(docs, text_col, id_col, k)
-    return ss.select(
-        "doc_id", minhash_signature(F.col("shingles"), num_perm).alias("signature")
-    )
+    return _signed(shingle_sets(docs, text_col, id_col, k), num_perm)
 
 
 def band_buckets(
@@ -199,13 +203,19 @@ def exact_jaccard(
     (doc_a, doc_b) is unique in every caller's pair set, so grouping
     by (doc_a, doc_b, *carry) == grouping by (doc_a, doc_b).
     """
-    exploded = shingle_df.select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-    sizes = shingle_df.select(
-        "doc_id", F.size("shingles").alias("sz")
-    )
-    inter = (
+    inter = _intersections(shingle_df, pairs, carry_cols)
+    return _jaccard(_with_sizes(inter, shingle_df), carry_cols)
+
+
+def _intersections(
+    ss: DataFrame, pairs: DataFrame, carry_cols: tuple[str, ...] = ()
+) -> DataFrame:
+    """(doc_a, doc_b, *carry_cols, n_inter): shared-shingle counts of
+    the GIVEN pairs only — the inverted index restricted to candidate
+    docs on each side before the shingle-equality join. Pairs sharing
+    no shingle produce no row."""
+    exploded = ss.select("doc_id", F.explode("shingles").alias("shingle"))
+    return (
         pairs.join(
             exploded.alias("x"), pairs["doc_a"] == F.col("x.doc_id")
         )
@@ -217,18 +227,35 @@ def exact_jaccard(
         .groupBy("doc_a", "doc_b", *carry_cols)
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-            *carry_cols,
-        )
+
+
+def _with_sizes(pairs: DataFrame, ss: DataFrame) -> DataFrame:
+    """``pairs`` plus each side's shingle-set size (sz_a, sz_b)."""
+    sizes = ss.select("doc_id", F.size("shingles").alias("sz"))
+    return pairs.join(
+        sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"),
+        "doc_a",
+    ).join(
+        sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"),
+        "doc_b",
+    )
+
+
+def _union_size(n_inter: Column) -> Column:
+    """|A u B| = |A| + |B| - |A n B| over a `_with_sizes` row."""
+    return F.col("sz_a") + F.col("sz_b") - n_inter
+
+
+def _jaccard(sized: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_a, doc_b, jaccard, *carry_cols) from a `_with_sizes` frame
+    of `_intersections` rows: the one Jaccard formula."""
+    return sized.select(
+        "doc_a",
+        "doc_b",
+        (F.col("n_inter").cast("double") / _union_size(F.col("n_inter"))).alias(
+            "jaccard"
+        ),
+        *carry_cols,
     )
 
 
@@ -255,10 +282,7 @@ def minhash_lsh_dedup(
     ss = shingle_sets(docs, text_col, id_col, k).persist()
     buckets = None
     try:
-        sigs = ss.select(
-            "doc_id", minhash_signature(F.col("shingles"), num_perm).alias("signature")
-        )
-        buckets = band_buckets(sigs, num_perm, band_rows).persist()
+        buckets = band_buckets(_signed(ss, num_perm), num_perm, band_rows).persist()
         # Lazy candidates (materialize=False): `buckets` is persisted
         # right above and the pair set is consumed exactly once by the
         # verify join, so the eager checkpoint inside candidate_pairs
@@ -296,33 +320,17 @@ def allpairs_jaccard_dedup(
     materialization of the (small) surviving-pair result."""
     ss = shingle_sets(docs, text_col, id_col, k).persist()
     try:
-        return _allpairs_jaccard_body(ss, threshold).localCheckpoint(eager=True)
+        exploded = ss.select("doc_id", F.explode("shingles").alias("shingle"))
+        inter = (
+            exploded.alias("x")
+            .join(exploded.alias("y"), (F.col("x.shingle") == F.col("y.shingle")) & (F.col("x.doc_id") < F.col("y.doc_id")))
+            .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+        )
+        out = _jaccard(_with_sizes(inter, ss)).filter(F.col("jaccard") >= threshold)
+        return out.localCheckpoint(eager=True)
     finally:
         ss.unpersist()
-
-
-def _allpairs_jaccard_body(ss: DataFrame, threshold: float) -> DataFrame:
-    exploded = ss.select("doc_id", F.explode("shingles").alias("shingle"))
-    sizes = ss.select("doc_id", F.size("shingles").alias("sz"))
-    inter = (
-        exploded.alias("x")
-        .join(exploded.alias("y"), (F.col("x.shingle") == F.col("y.shingle")) & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def bucket_index(
@@ -399,11 +407,9 @@ def incremental_dedup(
     ex_ss = None
     try:
         if own_buckets:
-            new_sigs = new_ss.select(
-                "doc_id",
-                minhash_signature(F.col("shingles"), num_perm).alias("signature"),
-            )
-            new_buckets = band_buckets(new_sigs, num_perm, band_rows).persist()
+            new_buckets = band_buckets(
+                _signed(new_ss, num_perm), num_perm, band_rows
+            ).persist()
         if own_index:
             # Persisted for the same reason candidate_pairs persists its
             # bucket frame (r7 bisect, PERF.md): the bipartite salt
@@ -567,9 +573,7 @@ def calibration(
     """
     ss = shingle_sets(docs, text_col, id_col, k).persist()
     try:
-        sigs = ss.select(
-            "doc_id", minhash_signature(F.col("shingles"), num_perm).alias("signature")
-        ).persist()
+        sigs = _signed(ss, num_perm).persist()
         try:
             pairs = candidate_pairs(
                 band_buckets(sigs, num_perm, band_rows), bucket_cap
@@ -604,37 +608,15 @@ def calibration(
                     .alias("n_agree"),
                 )
             )
-            exploded = ss.select("doc_id", F.explode("shingles").alias("shingle"))
-            sizes = ss.select("doc_id", F.size("shingles").alias("sz"))
-            inter = (
-                pairs.join(exploded.alias("x"), pairs["doc_a"] == F.col("x.doc_id"))
-                .join(
-                    exploded.alias("y"),
-                    (pairs["doc_b"] == F.col("y.doc_id"))
-                    & (F.col("x.shingle") == F.col("y.shingle")),
-                )
-                .groupBy("doc_a", "doc_b")
-                .agg(F.count(F.lit(1)).cast("long").alias("inter_n"))
-            )
-            out = (
-                agree.join(inter, ["doc_a", "doc_b"], "left")
-                .join(
-                    sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("_sa")),
-                    "doc_a",
-                )
-                .join(
-                    sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("_sb")),
-                    "doc_b",
-                )
-                .select(
-                    "doc_a",
-                    "doc_b",
-                    "n_agree",
-                    F.coalesce("inter_n", F.lit(0)).cast("long").alias("inter_n"),
-                    (F.col("_sa") + F.col("_sb") - F.coalesce("inter_n", F.lit(0)))
-                    .cast("long")
-                    .alias("union_n"),
-                )
+            n_inter = F.coalesce("n_inter", F.lit(0))
+            out = _with_sizes(
+                agree.join(_intersections(ss, pairs), ["doc_a", "doc_b"], "left"), ss
+            ).select(
+                "doc_a",
+                "doc_b",
+                "n_agree",
+                n_inter.cast("long").alias("inter_n"),
+                _union_size(n_inter).cast("long").alias("union_n"),
             )
             # |pairs|-sized rows — eager, so both caches release on return
             return out.localCheckpoint(eager=True)

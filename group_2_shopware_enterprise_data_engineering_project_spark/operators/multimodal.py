@@ -215,7 +215,8 @@ def media_near_dup(
     are caught with the usual banding recall; candidates verified by
     exact bit_count(xor). The shuffle carries (band_idx, band_key, id,
     phash) — never payloads; a hot band is salt-split at the shared
-    bucket cap."""
+    bucket cap. The hashed frame is persisted inside the join, so the
+    md5 over payloads runs once, and the pairs return materialized."""
     hashed = media_phash(df).select(id_col, "phash")
     return banded_hamming_pairs(
         hashed, id_col, "phash", PHASH_BITS, PHASH_BANDS, max_hamming

@@ -146,7 +146,13 @@ def banded_hamming_pairs(
     there, and wider radii get the usual banding recall. The shuffle
     carries (band key, id, signature) — never payloads. The salt does
     not order ids across groups, so pairs are oriented with
-    least/greatest; a pair sharing several bands is kept once."""
+    least/greatest; a pair sharing several bands is kept once.
+
+    ``sigs`` is persisted for the call: the band self-join reads it on
+    both sides and the salt's band sizing once more, so an unpersisted
+    signature projection (a Pandas UDF, an md5 over payloads) would
+    run up to three times. The surviving pairs (ids + distance) are
+    eagerly checkpointed and the cache is released on return."""
     band_bits = n_bits // n_bands
     mask = (1 << band_bits) - 1
     bands = F.array(
@@ -161,23 +167,31 @@ def banded_hamming_pairs(
         ]
     )
     keys = ("band_idx", "band_key")
-    exploded = sigs.select(id_col, hash_col, F.explode(bands).alias("_b")).select(
-        id_col, hash_col, "_b.band_idx", "_b.band_key"
-    )
-    tasks = salted_pair_tasks(exploded, BUCKET_CAP, keys, id_col)
-    pairs = (
-        salted_pair_join(tasks, keys, id_col)
-        .select(
-            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
-            F.bit_count(F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}")))
-            .cast("long")
-            .alias("hamming"),
+    sigs = sigs.select(id_col, hash_col).persist()
+    try:
+        exploded = sigs.select(
+            id_col, hash_col, F.explode(bands).alias("_b")
+        ).select(id_col, hash_col, "_b.band_idx", "_b.band_key")
+        tasks = salted_pair_tasks(exploded, BUCKET_CAP, keys, id_col)
+        pairs = (
+            salted_pair_join(tasks, keys, id_col)
+            .select(
+                F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
+                F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
+                F.bit_count(
+                    F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+                )
+                .cast("long")
+                .alias("hamming"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    # No terminal global sort on the (potentially huge) pair list.
-    return pairs.filter(F.col("hamming") <= max_hamming)
+        # No terminal global sort on the (potentially huge) pair list.
+        return pairs.filter(F.col("hamming") <= max_hamming).localCheckpoint(
+            eager=True
+        )
+    finally:
+        sigs.unpersist()
 
 
 def salted_bipartite_tasks(

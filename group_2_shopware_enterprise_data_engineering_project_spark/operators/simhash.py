@@ -77,17 +77,11 @@ def simhash_dedup(
     id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
-    # Persist: the band self-join references the signature DF on both
-    # sides and the salt's band sizing once more, which would run the
-    # Pandas UDF up to three times over the corpus.
-    # Released on return — the result (id pairs + distance, no text)
-    # is eagerly materialized first, so the corpus-sized signature
-    # cache never outlives this call.
-    sigs = simhash_signatures(docs, text_col, id_col).persist()
-    try:
-        pairs = banded_hamming_pairs(sigs, "doc_id", "simhash", 64, 4, max_hamming)
-        return pairs.select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
-        ).localCheckpoint(eager=True)
-    finally:
-        sigs.unpersist()
+    # banded_hamming_pairs persists the signatures (the Pandas UDF runs
+    # once) and returns its pairs eagerly checkpointed.
+    pairs = banded_hamming_pairs(
+        simhash_signatures(docs, text_col, id_col), "doc_id", "simhash", 64, 4, max_hamming
+    )
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
+    )

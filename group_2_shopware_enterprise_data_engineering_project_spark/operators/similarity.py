@@ -1,33 +1,44 @@
-"""Embedding similarity search (ANN) over array<float> columns.
+"""Embedding similarity search (ANN) and embedding near-dup over
+array<float> columns.
 
-Two paths, per the standard ANN playbook:
+Entry points compose a small set of stage helpers, each with one
+implementation:
 
-- **Brute-force cosine top-k** — the exact baseline: broadcast the
-  query set, crossJoin the corpus, compute cosine with native
-  higher-order array expressions (zip_with product + aggregate fold —
-  JVM-side, no Python), rank per query with a window. O(|Q| x N) dot
-  products; the right choice whenever |Q| is small, at any corpus
-  size, because the corpus side never shuffles — it streams past the
-  broadcast queries and only (query_id, neighbor_id, sim) survive.
+- exact scoring: `dot` / `l2_norm` / `cosine` (fixed left-fold order),
+  `cosine_pre` with per-vector norms, and the partial top-k
+  `_topk_per_query` — used by every ranked entry point;
+- SRP-LSH buckets: `_srp_bucketed` (vec_id, v, _vn, bucket), behind
+  `lsh_topk` / `lsh_topk_multiprobe` (via `_lsh_search`) and
+  `embedding_near_dup_pairs` (salted same-bucket pair join);
+- coarse quantizer: `_sampled_lloyd` trains `kmeans_centroids` and,
+  one run per subspace, `pq_codebook_kmeans`; `_assign_nearest` is
+  the packed-centroid fold behind `ivf_assign`, `ivf_topk`, `semdedup`
+  and the trainer itself;
+- IVF probing: `_ivf_candidates` (ranked probe lists + exact cosine
+  over the probed lists), behind `ivf_topk` and `ivf_recall_curve`;
+- product quantization: `pq_seed_codebook` (also the residual codebook
+  of `ivfpq_topk`), `_nearest_codes` (struct(d, c) per subspace: its
+  codes encode through `_pq_encode` for `pq_encode`, `pq_topk` and
+  `ivfpq_topk`, its distances sum to `pq_distortion`), and the ADC
+  scorer `_adc_topk`, behind `pq_topk` and `ivfpq_topk`;
+- recall curves: `_recall_curve` scores `ivf_recall_curve` and
+  `prefix_recall_curve` against brute-force truth.
 
-- **Sign-random-projection LSH** (SimHash-for-vectors, Charikar 2002)
-  — the scale path: H Rademacher hyperplanes (+-1 entries derived
-  from md5, so fully deterministic and SQL-mirrorable), bucket =
-  H-bit sign pattern; candidates share a bucket, then exact cosine
-  verify + rank within candidates. The corpus shuffles once on the
-  H-bit bucket key; recall tunes with H (and would use multi-probe /
-  band OR-ing for production recall targets).
-
-All math in double precision with a fixed left-to-right fold order so
-results are bit-identical to the DuckDB oracle.
+`brute_force_topk` is the exact baseline: broadcast queries, the
+corpus streams past them and never shuffles. All math is double
+precision with a fixed left-to-right fold order, so results are
+bit-identical to the DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import hashlib
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.partitioning import (
     spread,
@@ -223,6 +234,19 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return F.concat(*bits)
 
 
+def _srp_bucketed(emb: DataFrame, num_planes: int) -> DataFrame:
+    """(vec_id, v, _vn, bucket): the corpus as double vectors with their
+    l2 norm and H-bit SRP bucket — the one bucketed frame that both
+    `_lsh_search` and `embedding_near_dup_pairs` join on."""
+    planes = hyperplane_signs(num_planes)
+    return spread(emb).select(
+        F.col("vec_id"),
+        _as_double(F.col("embedding")).alias("v"),
+        l2_norm(_as_double(F.col("embedding"))).alias("_vn"),
+        lsh_bucket(_as_double(F.col("embedding")), planes).alias("bucket"),
+    )
+
+
 def _lsh_search(
     emb: DataFrame,
     query_ids: list[int] | None,
@@ -240,13 +264,7 @@ def _lsh_search(
     cannot drift between the two public entry points."""
     if num_planes is None:
         num_planes = derive_num_planes(emb.count())
-    planes = hyperplane_signs(num_planes)
-    bucketed = spread(emb).select(
-        F.col("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-        l2_norm(_as_double(F.col("embedding"))).alias("_vn"),
-        lsh_bucket(_as_double(F.col("embedding")), planes).alias("bucket"),
-    )
+    bucketed = _srp_bucketed(emb, num_planes)
     if query_pred is None:
         query_pred = F.col("vec_id").isin(query_ids or [])
     flip = lambda i: F.concat(  # noqa: E731 — flip sign bit i (1-based)
@@ -444,48 +462,67 @@ def _int_mean_centroids(assigned: DataFrame, scale: int = KMEANS_SCALE) -> DataF
     )
 
 
+def _sampled_lloyd(
+    emb: DataFrame, n_centroids: int, iters: int, sample: int, m: int = 1
+) -> DataFrame:
+    """The one sampled-Lloyd trainer, behind `kmeans_centroids` (m=1,
+    whole vectors) and `pq_codebook_kmeans` (one run per contiguous
+    subspace of DIM // m dims). A deterministic md5-ordered sample
+    (distributed top-k take, never a full sort) is persisted; each run
+    seeds from the sample's first ``n_centroids`` rows in that order
+    and iterates `_int_mean_centroids(_assign_nearest(...))`. Training
+    runs eagerly and the result is rebuilt as a local-rows DataFrame
+    (sub, centroid_id, cv): centroids are a *model*, so driver
+    materialization keeps downstream plans free of the training
+    lineage, and the sample cache is released before return."""
+    sub_dim = DIM // m
+    base = spread(emb).select(
+        "vec_id", _as_double(F.col("embedding")).alias("v")
+    )
+    samp = base.orderBy(_sample_key(), "vec_id").limit(sample).persist()
+    try:
+        rows = []
+        for s in range(m):
+            view = samp if m == 1 else samp.select(
+                "vec_id", F.slice(F.col("v"), s * sub_dim + 1, sub_dim).alias("v")
+            )
+            cents = (
+                view.orderBy(_sample_key(), "vec_id")
+                .limit(n_centroids)
+                .select(
+                    (
+                        F.row_number().over(Window.orderBy(_sample_key(), "vec_id"))
+                        - 1
+                    ).alias("centroid_id"),
+                    F.col("v").alias("cv"),
+                )
+            )
+            for _ in range(iters):
+                cents = _int_mean_centroids(_assign_nearest(view, cents))
+            rows += [(s, *r) for r in cents.collect()]
+        schema = T.StructType(
+            [T.StructField("sub", T.LongType(), False), *cents.schema.fields]
+        )
+        return emb.sparkSession.createDataFrame(rows, schema)
+    finally:
+        samp.unpersist()
+
+
 def kmeans_centroids(
     emb: DataFrame,
     n_centroids: int | None = None,
     iters: int = KMEANS_ITERS,
     sample: int = KMEANS_SAMPLE,
 ) -> DataFrame:
-    """Train IVF centroids: Lloyd iterations on a deterministic
-    md5-ordered sample (distributed top-k take, never a full sort),
-    seeded by the sample's first `n_centroids` rows. n_centroids=None
-    derives C from the corpus size (sqrt rule). Returns (centroid_id,
-    cv) MATERIALIZED — training runs eagerly, the sample cache is
-    released, and the result is rebuilt as a local-rows DataFrame.
-    Centroids are a *model* (<= MAX_CENTROIDS rows by construction),
-    so driver materialization is the standard k-means contract; it
-    also keeps downstream plans free of the training lineage and
-    leaves no persisted RDDs pinned for the session's lifetime."""
+    """Train IVF centroids: `_sampled_lloyd` over whole vectors, seeded
+    by the md5-ordered sample's first `n_centroids` rows.
+    n_centroids=None derives C from the corpus size (sqrt rule).
+    Returns (centroid_id, cv) MATERIALIZED as local rows — the
+    standard k-means contract for a model of <= MAX_CENTROIDS rows; no
+    persisted RDD stays pinned for the session's lifetime."""
     if n_centroids is None:
         n_centroids = derive_n_centroids(emb.count())
-    base = spread(emb).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
-    samp = (
-        base.orderBy(_sample_key(), "vec_id").limit(sample).persist()
-    )
-    try:
-        seed = (
-            samp.orderBy(_sample_key(), "vec_id")
-            .limit(n_centroids)
-            .select(
-                (
-                    F.row_number().over(Window.orderBy(_sample_key(), "vec_id")) - 1
-                ).alias("centroid_id"),
-                F.col("v").alias("cv"),
-            )
-        )
-        cents = seed
-        for _ in range(iters):
-            cents = _int_mean_centroids(_assign_nearest(samp, cents))
-        rows = cents.collect()
-        return emb.sparkSession.createDataFrame(rows, cents.schema)
-    finally:
-        samp.unpersist()
+    return _sampled_lloyd(emb, n_centroids, iters, sample).drop("sub")
 
 
 def _centroids(emb: DataFrame, n_centroids: int):
@@ -549,34 +586,39 @@ def ivf_topk(
         # trained centroids arrive materialized (kmeans_centroids) —
         # broadcast-hint only, no persist to leak across the session
         centroids = F.broadcast(centroids)
+    if query_pred is None:
+        query_pred = F.col("vec_id").isin(query_ids or [])
     # persist released in the finally below: the result (top-k per
     # query) is materialized eagerly first, so the corpus-sized
     # assignment cache never outlives this call (cache-release
     # discipline per kmeans_centroids/pagerank).
     assigned = ivf_assign(emb, centroids=centroids).persist()
     try:
-        return _ivf_topk_body(assigned, query_pred, query_ids, centroids, n_probe, k)
+        cands = _ivf_candidates(assigned, query_pred, centroids, n_probe)
+        out = _topk_per_query(cands, k).orderBy("query_id", "rank")
+        # |Q| x k rows — eager materialization is cheap and releases
+        # the corpus-sized assignment cache on return
+        return out.localCheckpoint(eager=True)
     finally:
         assigned.unpersist()
 
 
-def _ivf_topk_body(
-    assigned: DataFrame,
-    query_pred,
-    query_ids,
-    centroids: DataFrame,
-    n_probe: int,
-    k: int,
+def _ivf_candidates(
+    assigned: DataFrame, query_pred: Column, centroids: DataFrame, n_probe: int
 ) -> DataFrame:
-    if query_pred is None:
-        query_pred = F.col("vec_id").isin(query_ids or [])
+    """The one IVF probe stage, behind `ivf_topk` and
+    `ivf_recall_curve`: each query ranks every centroid by cosine
+    (|Q| x C rows, both sides driver-small) by (p_sim DESC,
+    centroid_id) and keeps the ``n_probe`` nearest lists; the corpus
+    vectors in those lists (self excluded) are scored by exact cosine.
+    ``assigned`` is an `ivf_assign` frame (vec_id, v, nv, centroid_id).
+    Returns (query_id, neighbor_id, cos_sim, _pr), ``_pr`` being the
+    1-based probe rank of the list the candidate was found through."""
     queries = assigned.filter(query_pred).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nv").alias("_qn"),
     )
-    # Per-query probe list: rank all centroids by cosine (|Q| x C rows,
-    # both sides driver-small) and keep the n_probe nearest.
     wq = Window.partitionBy("query_id").orderBy(
         F.col("p_sim").desc(), F.col("centroid_id")
     )
@@ -596,13 +638,13 @@ def _ivf_topk_body(
         )
         .withColumn("_pr", F.row_number().over(wq))
         .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "qv", "_qn", F.col("centroid_id").alias("qc"))
+        .select("query_id", "qv", "_qn", F.col("centroid_id").alias("qc"), "_pr")
     )
     # the corpus side is aliased: probes derives from the same
     # `assigned` frame, so bare column refs to its attributes would be
     # ambiguous under self-join lineage
     corp = assigned.alias("_corp")
-    cands = (
+    return (
         probes.join(corp, F.col("qc") == F.col("_corp.centroid_id"))
         .filter(F.col("_corp.vec_id") != F.col("query_id"))
         .select(
@@ -611,12 +653,9 @@ def _ivf_topk_body(
             cosine_pre(
                 F.col("qv"), F.col("_corp.v"), F.col("_qn"), F.col("_corp.nv")
             ).alias("cos_sim"),
+            "_pr",
         )
     )
-    out = _topk_per_query(cands, k).orderBy("query_id", "rank")
-    # |Q| x k rows — eager materialization is cheap and lets the caller
-    # (ivf_topk) release the corpus-sized assignment cache on return
-    return out.localCheckpoint(eager=True)
 
 
 def embedding_near_dup_pairs(
@@ -644,18 +683,11 @@ def embedding_near_dup_pairs(
     """
     if num_planes is None:
         num_planes = derive_num_planes(emb.count())
-    planes = hyperplane_signs(num_planes)
-    bucketed = spread(emb).select(
-        F.col("vec_id"),
-        _as_double(F.col("embedding")).alias("v"),
-        l2_norm(_as_double(F.col("embedding"))).alias("_vn"),
-        lsh_bucket(_as_double(F.col("embedding")), planes).alias("bucket"),
-    )
     # persisted so the salt-split's oversized-bucket sizing agg and the
     # pair join share one evaluation of the H-plane projection (the
     # sizing branch would otherwise re-run lsh_bucket over the corpus;
     # r7 bisect, PERF.md)
-    bucketed = bucketed.persist()
+    bucketed = _srp_bucketed(emb, num_planes).persist()
     tasks = salted_pair_tasks(bucketed, bucket_cap).persist()
     try:
         return _near_dup_pairs_body(tasks, threshold)
@@ -898,12 +930,12 @@ def quantized_topk(
 # Codebook discipline mirrors the IVF pair e5/e9: `pq_seed_codebook`
 # is the training-free deterministic quantizer (subvectors of the
 # first PQ_CODES vectors by id) that the e12 oracle reproduces in SQL;
-# real corpora should train per-subspace k-means instead (same
-# sampled-Lloyd machinery as `kmeans_centroids`, one run per
-# subspace). Float discipline: every distance is a sequential
-# left-fold over ascending dims (matches list_sum), and the PQ_M
-# partial distances are added in explicit subspace order — bit-
-# identical to the oracle's CASE-pivoted d0+d1+d2+d3.
+# real corpora should train per-subspace k-means instead
+# (`pq_codebook_kmeans`: `_sampled_lloyd`, one run per subspace).
+# Float discipline: every distance is a sequential left-fold over
+# ascending dims (matches list_sum), and the PQ_M partial distances
+# are added in explicit subspace order — bit-identical to the
+# oracle's CASE-pivoted d0+d1+d2+d3.
 
 PQ_M = 4
 PQ_CODES = 16
@@ -954,16 +986,16 @@ def _packed_codebook(codebook: DataFrame):
     ), m, k
 
 
-def pq_encode(emb: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(vec_id, codes): per subspace, the id of the nearest codebook
-    centroid by squared L2 (strictly-smaller wins, so ties keep the
-    LOWEST code — same semantics as ranking dist ASC, code ASC).
-    Pure codegen fold over the broadcast packed codebook; the corpus
-    never shuffles."""
-    packed, m, k = _packed_codebook(codebook)
+def _nearest_codes(m: int) -> Column:
+    """The one PQ nearest-code fold: per subspace s in 0..m-1,
+    struct(d, c) — the squared L2 from subvector s of ``v`` to its
+    nearest centroid in the packed codebook ``cb`` (`_packed_codebook`)
+    and that centroid's code. Strictly-smaller wins, so ties keep the
+    LOWEST code (ranking dist ASC, code ASC). Encoding reads ``c``,
+    distortion sums ``d``."""
     sub_dim = DIM // m
 
-    def best_code(sub: Column) -> Column:
+    def nearest(sub: Column) -> Column:
         sv = F.slice(F.col("v"), sub * sub_dim + 1, sub_dim)
         codes_arr = F.element_at(F.col("cb"), (sub + 1).cast("int"))
         init = F.struct(
@@ -972,22 +1004,72 @@ def pq_encode(emb: DataFrame, codebook: DataFrame) -> DataFrame:
 
         def step(acc, pair):
             d = sq_dist(sv, pair["cv"])
-            take = d < acc["d"]
             return F.when(
-                take, F.struct(d.alias("d"), (pair["i"] - 1).cast("long").alias("c"))
+                d < acc["d"], F.struct(d.alias("d"), pair["c"].alias("c"))
             ).otherwise(acc)
 
         with_idx = F.transform(
-            codes_arr, lambda cv, i: F.struct((i + 1).alias("i"), cv.alias("cv"))
+            codes_arr, lambda cv, i: F.struct(i.cast("long").alias("c"), cv.alias("cv"))
         )
-        return F.aggregate(with_idx, init, step)["c"]
+        return F.aggregate(with_idx, init, step)
 
-    base = spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    codes = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)), lambda s: best_code(s.cast("long"))
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)), lambda s: nearest(s.cast("long"))
     )
-    return base.crossJoin(F.broadcast(packed)).select(
-        "vec_id", codes.alias("codes")
+
+
+def _pq_encode(vectors: DataFrame, packed: DataFrame, m: int, *keep) -> DataFrame:
+    """(*keep, codes) for a (.., v) frame against an already-packed
+    codebook: a pure codegen fold over the broadcast codebook row, so
+    the corpus never shuffles."""
+    return vectors.crossJoin(F.broadcast(packed)).select(
+        *keep, F.transform(_nearest_codes(m), lambda b: b["c"]).alias("codes")
+    )
+
+
+def pq_encode(emb: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(vec_id, codes): per subspace, the id of the nearest codebook
+    centroid by squared L2, ties to the lowest code (`_nearest_codes`)."""
+    packed, m, _k = _packed_codebook(codebook)
+    base = spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v"))
+    return _pq_encode(base, packed, m, "vec_id")
+
+
+def _adc_topk(
+    cands: DataFrame, q_col: str, packed: DataFrame, m: int, k: int
+) -> DataFrame:
+    """The one Asymmetric Distance Computation stage, behind `pq_topk`
+    and `ivfpq_topk`: a candidate row (query_id, neighbor_id, codes,
+    q_col) scores sq_dist(query subvector, the code's centroid) per
+    subspace, summed in explicit left-to-right subspace order
+    (((d0+d1)+d2)+d3 — the oracle's CASE-pivoted sum), self excluded.
+    Ranking: approx_dist ASC, neighbor_id ASC, via the partial top-k
+    fold on the negated distance — never a global window. Returns
+    (query_id, neighbor_id, approx_dist, rank)."""
+    sub_dim = DIM // m
+    approx = reduce(
+        operator.add,
+        [
+            sq_dist(
+                F.slice(F.col(q_col), s * sub_dim + 1, sub_dim),
+                F.element_at(
+                    F.element_at(F.col("cb"), s + 1),
+                    (F.element_at(F.col("codes"), s + 1) + 1).cast("int"),
+                ),
+            )
+            for s in range(m)
+        ],
+    )
+    sims = (
+        cands.crossJoin(F.broadcast(packed))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", (F.lit(0.0) - approx).alias("cos_sim"))
+    )
+    return _topk_per_query(sims, k).select(
+        "query_id",
+        "neighbor_id",
+        (F.lit(0.0) - F.col("cos_sim")).alias("approx_dist"),
+        "rank",
     )
 
 
@@ -998,60 +1080,24 @@ def pq_topk(
     query_ids: list[int] | None = None,
     k: int = 5,
 ) -> DataFrame:
-    """PQ-ANN top-k via Asymmetric Distance Computation: full-precision
-    broadcast queries against PQ codes. approx_dist sums the per-
-    subspace (query, code) distances in explicit subspace order —
-    deterministic and oracle-matchable. Ranking: approx_dist ASC,
-    neighbor_id ASC (self excluded), via the partial top-k fold
-    (`_topk_per_query` on the negated distance) — never a global
-    window."""
+    """PQ-ANN top-k via Asymmetric Distance Computation (`_adc_topk`):
+    full-precision broadcast queries against PQ codes, the codebook
+    packed once for both encoding and scoring. Output (query_id,
+    neighbor_id, approx_dist, rank); self excluded."""
     if codebook is None:
         codebook = pq_seed_codebook(emb)
     if query_pred is None:
         query_pred = F.col("vec_id").isin(query_ids or [])
-    packed, m, _k_codes = _packed_codebook(codebook)
-    sub_dim = DIM // m
-
+    packed, m, _k = _packed_codebook(codebook)
     queries = F.broadcast(
         emb.filter(query_pred).select(
             F.col("vec_id").alias("query_id"),
             _as_double(F.col("embedding")).alias("qv"),
         )
     )
-    codes = pq_encode(emb, codebook).select(
-        F.col("vec_id").alias("neighbor_id"), "codes"
-    )
-
-    def sub_d(s: int) -> Column:
-        qs = F.slice(F.col("qv"), s * sub_dim + 1, sub_dim)
-        cv = F.element_at(
-            F.element_at(F.col("cb"), s + 1),
-            (F.element_at(F.col("codes"), s + 1) + 1).cast("int"),
-        )
-        return sq_dist(qs, cv)
-
-    approx = sub_d(0)
-    for s in range(1, m):
-        approx = approx + sub_d(s)  # explicit subspace order, left-to-right
-
-    sims = (
-        queries.crossJoin(codes)
-        .crossJoin(F.broadcast(packed))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            approx.alias("approx_dist"),
-        )
-        .withColumn("neg_dist", F.lit(0.0) - F.col("approx_dist"))
-    )
-    out = _topk_per_query(sims.select("query_id", "neighbor_id", F.col("neg_dist").alias("cos_sim")), k)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        (F.lit(0.0) - F.col("cos_sim")).alias("approx_dist"),
-        "rank",
-    )
+    base = spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v"))
+    codes = _pq_encode(base, packed, m, F.col("vec_id").alias("neighbor_id"))
+    return _adc_topk(queries.crossJoin(codes), "qv", packed, m, k)
 
 
 def pq_codebook_kmeans(
@@ -1061,42 +1107,14 @@ def pq_codebook_kmeans(
     iters: int = KMEANS_ITERS,
     sample: int = KMEANS_SAMPLE,
 ) -> DataFrame:
-    """Trained PQ codebook: per-subspace sampled Lloyd iterations with
-    integer-snapped means (the `kmeans_centroids` discipline), seeded
-    from the md5-ordered sample. One small training job per subspace —
-    the codebook is a model, so the loop's cost is bounded by
-    m * sample, not the corpus."""
-    sub_dim = DIM // m
-    base = spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    samp = base.orderBy(_sample_key(), "vec_id").limit(sample).persist()
-    spark = emb.sparkSession
-    try:
-        all_rows = []
-        for s in range(m):
-            sub = samp.select(
-                "vec_id", F.slice(F.col("v"), s * sub_dim + 1, sub_dim).alias("v")
-            )
-            seed = (
-                sub.orderBy(_sample_key(), "vec_id")
-                .limit(k_codes)
-                .select(
-                    (
-                        F.row_number().over(Window.orderBy(_sample_key(), "vec_id"))
-                        - 1
-                    ).cast("long").alias("centroid_id"),
-                    F.col("v").alias("cv"),
-                )
-            )
-            cents = seed
-            for _ in range(iters):
-                cents = _int_mean_centroids(_assign_nearest(sub, cents))
-            for r in cents.collect():
-                all_rows.append((s, r["centroid_id"], list(r["cv"])))
-        return spark.createDataFrame(
-            all_rows, "sub: long, code: long, cv: array<double>"
-        )
-    finally:
-        samp.unpersist()
+    """Trained PQ codebook (sub, code, cv): `_sampled_lloyd` run once
+    per subspace on the same md5-ordered sample, with the
+    integer-snapped means of `kmeans_centroids`. The codebook is a
+    model, so the training cost is bounded by m * sample, not the
+    corpus."""
+    return _sampled_lloyd(emb, k_codes, iters, sample, m).withColumnRenamed(
+        "centroid_id", "code"
+    )
 
 
 # --- IVF-PQ composite (coarse quantizer + residual PQ + ADC) ---------------
@@ -1181,46 +1199,14 @@ def ivfpq_topk(
         "vec_id", "centroid_id", sub_vec(F.col("v"), F.col("_cv")).alias("v")
     )
 
-    # residual codebook: residuals of the first PQ_CODES vectors
-    seed_res = residuals.filter(F.col("vec_id") < PQ_CODES).select(
-        F.col("vec_id").alias("code"), "v"
-    )
-    sub_dim = PQ_SUB_DIM
-    subs = emb.sparkSession.range(PQ_M).select(F.col("id").cast("long").alias("sub"))
-    codebook = seed_res.crossJoin(F.broadcast(subs)).select(
-        "sub",
-        "code",
-        F.slice(F.col("v"), F.col("sub") * sub_dim + 1, sub_dim).alias("cv"),
+    # residual codebook: residuals of the first PQ_CODES vectors, cut
+    # into subspaces exactly as pq_seed_codebook cuts raw vectors
+    codebook = pq_seed_codebook(
+        residuals.select("vec_id", F.col("v").alias("embedding"))
     )
     packed_cb, m, _k = _packed_codebook(codebook)
-
-    # encode every residual (same argmin fold as pq_encode, on residuals)
-    def best_code(sub: Column) -> Column:
-        sv = F.slice(F.col("v"), sub * sub_dim + 1, sub_dim)
-        codes_arr = F.element_at(F.col("cb"), (sub + 1).cast("int"))
-        init = F.struct(
-            F.lit(float("inf")).alias("d"), F.lit(-1).cast("long").alias("c")
-        )
-
-        def step(acc, pair):
-            d = sq_dist(sv, pair["cv"])
-            return F.when(
-                d < acc["d"],
-                F.struct(d.alias("d"), (pair["i"] - 1).cast("long").alias("c")),
-            ).otherwise(acc)
-
-        with_idx = F.transform(
-            codes_arr, lambda cv, i: F.struct((i + 1).alias("i"), cv.alias("cv"))
-        )
-        return F.aggregate(with_idx, init, step)["c"]
-
-    codes_expr = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)), lambda s: best_code(s.cast("long"))
-    )
-    codes = residuals.crossJoin(F.broadcast(packed_cb)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("centroid_id"),
-        codes_expr.alias("codes"),
+    codes = _pq_encode(
+        residuals, packed_cb, m, F.col("vec_id").alias("neighbor_id"), "centroid_id"
     )
 
     # probe selection: |Q| x C scored rows (tiny — C is the coarse
@@ -1242,35 +1228,7 @@ def ivfpq_topk(
         .select("query_id", "centroid_id", "qres")
     )
 
-    def sub_d(s: int) -> Column:
-        qs = F.slice(F.col("qres"), s * sub_dim + 1, sub_dim)
-        cv = F.element_at(
-            F.element_at(F.col("cb"), s + 1),
-            (F.element_at(F.col("codes"), s + 1) + 1).cast("int"),
-        )
-        return sq_dist(qs, cv)
-
-    approx = sub_d(0)
-    for s in range(1, m):
-        approx = approx + sub_d(s)
-
-    sims = (
-        probes.join(codes, "centroid_id")
-        .crossJoin(F.broadcast(packed_cb))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.lit(0.0) - approx).alias("cos_sim"),
-        )
-    )
-    out = _topk_per_query(sims, k)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        (F.lit(0.0) - F.col("cos_sim")).alias("approx_dist"),
-        "rank",
-    )
+    return _adc_topk(probes.join(codes, "centroid_id"), "qres", packed_cb, m, k)
 
 
 def pool_chunk_embeddings(
@@ -1377,10 +1335,7 @@ def two_stage_topk(
         "query_id",
         "neighbor_id",
         "coarse_rank",
-        (
-            dot(F.col("qv"), F.col("nv"))
-            / (l2_norm(F.col("qv")) * l2_norm(F.col("nv")))
-        ).alias("cos_sim"),
+        cosine(F.col("qv"), F.col("nv")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
@@ -1523,28 +1478,11 @@ def pq_distortion(emb: DataFrame, codebook: DataFrame) -> DataFrame:
     fold per row and never shuffles. Returns (vec_id, sq_err).
     """
     packed, m, _k = _packed_codebook(codebook)
-    sub_dim = DIM // m
-
-    def best_d(sub: Column) -> Column:
-        sv = F.slice(F.col("v"), sub * sub_dim + 1, sub_dim)
-        codes_arr = F.element_at(F.col("cb"), (sub + 1).cast("int"))
-
-        def step(acc, cv):
-            d = sq_dist(sv, cv)
-            return F.when(d < acc, d).otherwise(acc)
-
-        return F.aggregate(codes_arr, F.lit(float("inf")), step)
-
     base = spread(emb).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
     total = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: best_d(s.cast("long")),
-        ),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
+        _nearest_codes(m), F.lit(0.0), lambda acc, b: acc + b["d"]
     )
     return base.crossJoin(F.broadcast(packed)).select(
         "vec_id", total.alias("sq_err")
@@ -1571,84 +1509,19 @@ def ivf_recall_curve(
     (n_probe, query_id, n_hits, recall) for every (setting, query)
     pair, zero-hit queries included.
     """
-    p_max = max(probes)
     centroids = _centroids(emb, n_centroids)
     assigned = ivf_assign(emb, centroids=centroids).persist()
     cands = None
     try:
-        queries = assigned.filter(query_pred).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("p_sim").desc(), F.col("centroid_id")
-        )
-        probe_lists = F.broadcast(
-            queries.crossJoin(centroids)
-            .select(
-                "query_id",
-                "qv",
-                "centroid_id",
-                (
-                    dot(F.col("qv"), F.col("cv"))
-                    / (l2_norm(F.col("qv")) * l2_norm(F.col("cv")))
-                ).alias("p_sim"),
-            )
-            .withColumn("_pr", F.row_number().over(wq))
-            .filter(F.col("_pr") <= p_max)
-            .select(
-                "query_id", "qv", F.col("centroid_id").alias("qc"), "_pr"
-            )
-        )
-        cands = (
-            probe_lists.join(assigned, F.col("qc") == assigned["centroid_id"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                (
-                    dot(F.col("qv"), F.col("v"))
-                    / (l2_norm(F.col("qv")) * l2_norm(F.col("v")))
-                ).alias("cos_sim"),
-                "_pr",
-            )
-            .persist()
-        )
-        truth = brute_force_topk(emb, query_pred=query_pred, k=k).select(
-            "query_id", "neighbor_id"
-        )
-        appx = None
-        for p in probes:
-            wr = Window.partitionBy("query_id").orderBy(
-                F.col("cos_sim").desc(), F.col("neighbor_id")
-            )
-            ap = (
-                cands.filter(F.col("_pr") <= p)
-                .withColumn("_rk", F.row_number().over(wr))
-                .filter(F.col("_rk") <= k)
-                .select(
-                    F.lit(p).cast("long").alias("n_probe"),
-                    "query_id",
-                    "neighbor_id",
-                )
-            )
-            appx = ap if appx is None else appx.unionByName(ap)
-        hits = (
-            appx.join(truth, ["query_id", "neighbor_id"])
-            .groupBy("n_probe", "query_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        )
-        settings = appx.select("n_probe").distinct()
-        base = truth.select("query_id").distinct().crossJoin(
-            F.broadcast(settings)
-        )
-        out = base.join(hits, ["n_probe", "query_id"], "left").select(
+        cands = _ivf_candidates(
+            assigned, query_pred, centroids, max(probes)
+        ).persist()
+        out = _recall_curve(
+            emb,
+            query_pred,
+            k,
             "n_probe",
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                / F.lit(float(k))
-            ).alias("recall"),
+            [(p, cands.filter(F.col("_pr") <= p), "cos_sim") for p in probes],
         )
         # settings x |Q| rows — eager, so both corpus caches release
         return out.localCheckpoint(eager=True)
@@ -1687,13 +1560,7 @@ def prefix_recall_curve(
         _as_double(F.col("embedding")).alias("nv"),
     )
     sims_cols = [
-        (
-            dot(F.slice("qv", 1, d), F.slice("nv", 1, d))
-            / (
-                l2_norm(F.slice("qv", 1, d))
-                * l2_norm(F.slice("nv", 1, d))
-            )
-        ).alias(f"cos_{d}")
+        cosine(F.slice("qv", 1, d), F.slice("nv", 1, d)).alias(f"cos_{d}")
         for d in dims
     ]
     pairs = (
@@ -1703,42 +1570,58 @@ def prefix_recall_curve(
         .persist()
     )
     try:
-        truth = brute_force_topk(emb, query_pred=query_pred, k=k).select(
-            "query_id", "neighbor_id"
-        )
-        appx = None
-        for d in dims:
-            wr = Window.partitionBy("query_id").orderBy(
-                F.col(f"cos_{d}").desc(), F.col("neighbor_id")
-            )
-            ap = (
-                pairs.withColumn("_rk", F.row_number().over(wr))
-                .filter(F.col("_rk") <= k)
-                .select(
-                    F.lit(d).cast("long").alias("dim"),
-                    "query_id",
-                    "neighbor_id",
-                )
-            )
-            appx = ap if appx is None else appx.unionByName(ap)
-        hits = (
-            appx.join(truth, ["query_id", "neighbor_id"])
-            .groupBy("dim", "query_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        )
-        settings = appx.select("dim").distinct()
-        base = truth.select("query_id").distinct().crossJoin(
-            F.broadcast(settings)
-        )
-        out = base.join(hits, ["dim", "query_id"], "left").select(
-            "dim",
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                / F.lit(float(k))
-            ).alias("recall"),
+        out = _recall_curve(
+            emb, query_pred, k, "dim", [(d, pairs, f"cos_{d}") for d in dims]
         )
         return out.localCheckpoint(eager=True)
     finally:
         pairs.unpersist()
+
+
+def _recall_curve(
+    emb: DataFrame,
+    query_pred: Column,
+    k: int,
+    setting_col: str,
+    ranked: list[tuple[int, DataFrame, str]],
+) -> DataFrame:
+    """The one recall@k tail, behind `ivf_recall_curve` and
+    `prefix_recall_curve`. ``ranked`` holds (setting, candidate frame,
+    sim column) per point on the curve; each setting keeps its top-k
+    per query by (sim DESC, neighbor_id), and its hits against the
+    brute-force truth are counted. Every (setting, query) pair gets a
+    row, zero-hit queries included. Exact float: recall = integer hit
+    count / literal k. Returns (setting_col, query_id, n_hits, recall),
+    lazy."""
+    truth = brute_force_topk(emb, query_pred=query_pred, k=k).select(
+        "query_id", "neighbor_id"
+    )
+    appx = None
+    for value, cands, sim_col in ranked:
+        wr = Window.partitionBy("query_id").orderBy(
+            F.col(sim_col).desc(), F.col("neighbor_id")
+        )
+        ap = (
+            cands.withColumn("_rk", F.row_number().over(wr))
+            .filter(F.col("_rk") <= k)
+            .select(
+                F.lit(value).cast("long").alias(setting_col),
+                "query_id",
+                "neighbor_id",
+            )
+        )
+        appx = ap if appx is None else appx.unionByName(ap)
+    hits = (
+        appx.join(truth, ["query_id", "neighbor_id"])
+        .groupBy(setting_col, "query_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
+    )
+    settings = appx.select(setting_col).distinct()
+    base = truth.select("query_id").distinct().crossJoin(F.broadcast(settings))
+    n_hits = F.coalesce(F.col("n_hits"), F.lit(0))
+    return base.join(hits, [setting_col, "query_id"], "left").select(
+        setting_col,
+        "query_id",
+        n_hits.cast("long").alias("n_hits"),
+        (n_hits.cast("double") / F.lit(float(k))).alias("recall"),
+    )

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from group_2_shopware_enterprise_data_engineering_project_spark.operators import validate
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.dedup import keep_latest
@@ -45,16 +45,6 @@ def rules(now: str | None = None) -> list[validate.Rule]:
         + validate.non_negative_or_null(["restock_threshold"])
         + [validate.not_future("last_updated_datetime", "24 hours", now)]
     )
-
-
-def transform(df: DataFrame) -> DataFrame:
-    """Casts + derived time columns + keep-latest dedup (reference
-    inventory_transform.py:390-416,483-484)."""
-    df = enforce_schema(df, INVENTORY_SCHEMA)
-    df = normalize_epoch(
-        df, "last_updated", ts_col="last_updated_datetime", date_col="last_updated_date"
-    )
-    return keep_latest(df, ("inventory_id",), "last_updated", "product_id")
 
 
 @dataclass

@@ -96,6 +96,35 @@ def test_media_near_dup_finds_exact_payload_pairs_only(spark):
     assert h[0] >= 0 and h[1] < (1 << 60)
 
 
+def test_media_near_dup_materializes_and_releases_caches(spark, tmp_path):
+    """The banded-Hamming join persists its signature input (so the
+    md5-over-payload projection runs once, not again for the salt's
+    band sizing) and returns its pairs eagerly checkpointed: the
+    returned plan scans no input, and the only storage that outlives
+    the call is that checkpoint — the signature cache is released."""
+    from group_2_shopware_enterprise_data_engineering_project_spark.operators import (
+        multimodal as mm,
+    )
+
+    path = str(tmp_path / "media.parquet")
+    spark.createDataFrame(
+        [(i, b"same bytes" if i < 3 else b"other %d" % i) for i in range(8)],
+        "media_id long, payload binary",
+    ).write.parquet(path)
+    media = spark.read.parquet(path)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    out = mm.media_near_dup(media, max_hamming=0)
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "parquet" not in plan and "Join" not in plan, plan
+    leaked = after - before
+    assert len(leaked) <= 1, (
+        f"media_near_dup left {len(leaked)} persisted RDDs; only the "
+        "eager pair checkpoint may survive the call"
+    )
+    assert sorted((r.id_a, r.id_b) for r in out.collect()) == [(0, 1), (0, 2), (1, 2)]
+
+
 def test_scene_segments_hand_solved(spark):
     """Literal fingerprint stream: runs AAA BB A C -> four scenes with
     the exact spans; a single-frame video is one scene; two videos

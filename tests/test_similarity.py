@@ -544,6 +544,87 @@ def test_pq_trained_codebook_beats_poisoned_seed(clustered_emb):
     assert same_cluster_frac(tr_rows) >= same_cluster_frac(seed_rows)
 
 
+def _lloyd_reference(vecs: dict[int, list[float]], k: int, iters: int) -> dict:
+    """Pure-Python mirror of the sampled Lloyd trainer on one view:
+    md5-of-decimal-id sample order, seeds = the first k rows of that
+    order, nearest centroid by a left-fold cosine (strictly greater
+    wins so ties keep the lowest id; a NaN similarity ranks largest,
+    the first NaN wins and is never displaced), integer-snapped means
+    sum(floor(x*1e6 + 0.5)) / (n*1e6), empty clusters dropped."""
+    import hashlib
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def div(a, b):
+        if b == 0.0:
+            return math.nan if a == 0.0 or math.isnan(a) else math.copysign(math.inf, a)
+        return a / b
+
+    order = sorted(vecs, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+    cents = {c: vecs[i] for c, i in enumerate(order[:k])}
+    for _ in range(iters):
+        members: dict[int, list[list[float]]] = {}
+        for i in order:
+            v = vecs[i]
+            nv = math.sqrt(dot(v, v))
+            best_sim, best_id = -2.0, -1
+            for c in sorted(cents):
+                cv = cents[c]
+                s = div(dot(v, cv), nv * math.sqrt(dot(cv, cv)))
+                if not math.isnan(best_sim) and (math.isnan(s) or s > best_sim):
+                    best_sim, best_id = s, c
+            members.setdefault(best_id, []).append(v)
+        cents = {
+            c: [
+                float(sum(math.floor(x * 1_000_000 + 0.5) for x in col))
+                / (len(vs) * 1e6)
+                for col in zip(*vs)
+            ]
+            for c, vs in members.items()
+        }
+    return cents
+
+
+def test_pq_codebook_kmeans_matches_python_lloyd(spark, clustered_emb):
+    """Value coverage for the shared Lloyd trainer: every (sub, code)
+    centroid of pq_codebook_kmeans equals, exactly, a pure-Python
+    per-subspace Lloyd run. The corpus is clustered_emb plus a copy of
+    the md5-first vector under the md5-second id, so two seed
+    centroids tie in every subspace (the lowest id must win, leaving
+    the other cluster empty and dropped)."""
+    import hashlib
+
+    df, _ = clustered_emb
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
+    first, second = sorted(
+        vecs, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:2]
+    vecs[second] = list(vecs[first])
+    tied = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<float>"
+    )
+    m, sub_dim = similarity.PQ_M, similarity.PQ_SUB_DIM
+    want = {}
+    for s in range(m):
+        view = {i: v[s * sub_dim : (s + 1) * sub_dim] for i, v in vecs.items()}
+        for c, cv in _lloyd_reference(
+            view, similarity.PQ_CODES, similarity.KMEANS_ITERS
+        ).items():
+            want[(s, c)] = cv
+    got = {
+        (r.sub, r.code): list(r.cv)
+        for r in similarity.pq_codebook_kmeans(tied).collect()
+    }
+    assert got == want
+    # the tie really happened: seed 1 duplicates seed 0, so code 1
+    # never wins an assignment and drops out of every subspace
+    assert all((s, 1) not in got for s in range(m))
+
+
 def test_pq_codebook_kmeans_deterministic(clustered_emb):
     df, _ = clustered_emb
     c1 = {(r.sub, r.code): r.cv for r in similarity.pq_codebook_kmeans(df).collect()}

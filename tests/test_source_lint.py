@@ -202,6 +202,7 @@ UNCONSUMED_ALLOWLIST: dict[tuple[str, str], str] = {
     ("operators/merge.py", "delta_upsert_additive"): "Delta MERGE path, gated on delta-spark (tests/test_delta_interop.py)",
     ("operators/merge.py", "delta_upsert_replace"): "Delta MERGE path, gated on delta-spark (tests/test_delta_interop.py)",
     ("operators/similarity.py", "pq_codebook_kmeans"): "trained PQ codebook, exercised only by tests/test_similarity.py",
+    ("operators/similarity.py", "pq_encode"): "standalone PQ encoder; pq_topk and ivfpq_topk share its fold (_pq_encode) so each packs the codebook once; exercised only by tests/test_similarity.py",
     ("operators/stats.py", "hll_merge"): "shard-wise HLL register merge, exercised only by tests/test_search_stats.py",
     ("operators/text.py", "fingerprint"): "whole-document md5 key, exercised only by tests/test_dedup.py and tests/test_multimodal.py",
     ("operators/transform.py", "extract_date_from_filename"): "reference filename-date parsing, exercised only by tests/test_transform.py",
@@ -219,11 +220,29 @@ UNCONSUMED_ALLOWLIST: dict[tuple[str, str], str] = {
 }
 
 
+def _external_aliases(tree: ast.Module) -> set[str]:
+    """Names a module binds by importing from outside the package
+    (``F``, ``T``, ``np``, ``pd``, ``Window``, ...)."""
+    pkg = os.path.basename(PKG)
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] != pkg:
+                    out.add(a.asname or a.name.split(".")[0])
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            if (node.module or "").split(".")[0] != pkg:
+                out.update(a.asname or a.name for a in node.names)
+    return out
+
+
 def _unconsumed_public_names() -> set[tuple[str, str]]:
     """Top-level public def/class of every non-``queries/`` package
     module that no AST Name/Attribute references, outside its own
     body, in package code or in the repo's entry points. Matching is
-    by name only, so a same-named symbol elsewhere counts as a use."""
+    by name, so a same-named symbol elsewhere counts as a use — except
+    an attribute of a name imported from outside the package
+    (``F.transform`` does not consume a package ``transform``)."""
     pkg = list(_package_trees())
     entry = [
         (path, ast.parse(open(path).read(), filename=path))
@@ -236,10 +255,13 @@ def _unconsumed_public_names() -> set[tuple[str, str]]:
         entry += list(_package_trees(os.path.join(REPO, sub)))
     refs: dict[str, list[tuple[str, int]]] = {}
     for path, tree in pkg + entry:
+        external = _external_aliases(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 refs.setdefault(node.id, []).append((path, node.lineno))
-            elif isinstance(node, ast.Attribute):
+            elif isinstance(node, ast.Attribute) and not (
+                isinstance(node.value, ast.Name) and node.value.id in external
+            ):
                 refs.setdefault(node.attr, []).append((path, node.lineno))
     found = set()
     for path, tree in pkg:
