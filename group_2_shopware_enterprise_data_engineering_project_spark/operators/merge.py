@@ -24,8 +24,10 @@ import re
 import shutil
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 try:  # pragma: no cover - delta not present in this environment
     from delta.tables import DeltaTable  # type: ignore
@@ -256,6 +258,7 @@ def merge_additive(
 
 _MANIFEST = "_MANIFEST.json"
 _COMMIT_STAMP = "_COMMITTED_AT.json"
+_SCHEMA = "_SCHEMA.json"
 _SNAPSHOT_RE = re.compile(r"^v(\d{6})$")
 
 
@@ -525,9 +528,22 @@ class ParquetUpsertTable:
         act = self._active()
         version = (act[0] + 1) if act else 1
         dir_name = f"v{version:06d}"
-        self._write(df, "overwrite", os.path.join(self.path, dir_name))
+        self._stage(df, os.path.join(self.path, dir_name))
         self._commit(version, dir_name, txn=txn)
         self._prune()
+
+    def _stage(self, df: DataFrame, dest: str) -> None:
+        """Write df as a new snapshot dir, not yet committed. The dir
+        also keeps df's schema in read order (partition columns last):
+        an empty frame written partitioned leaves no data file to infer
+        it from (see `read`)."""
+        self._write(df, "overwrite", dest)
+        schema = T.StructType(
+            [f for f in df.schema if f.name not in self.partition_by]
+            + [f for f in df.schema if f.name in self.partition_by]
+        )
+        with open(os.path.join(dest, _SCHEMA), "w") as f:
+            f.write(schema.json())
 
     def exists(self) -> bool:
         # A missing root is checked at the OS level FIRST: inside a
@@ -538,8 +554,6 @@ class ParquetUpsertTable:
         # file of an EXISTING table) and let a merge silently bootstrap
         # over it. The manifest layout is local-filesystem by design
         # (os.replace commits), so os.path is authoritative here.
-        from pyspark.errors import AnalysisException
-
         if self._active() is not None:
             return True
         if not os.path.exists(self.path):
@@ -551,24 +565,72 @@ class ParquetUpsertTable:
             return False
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self._data_dir())
+        """The committed snapshot. One committed from an empty frame
+        with partition columns has no data files (Spark writes none), so
+        Spark cannot infer its schema; it reads as an empty frame of the
+        schema `_stage` kept, and later merges and appends build on it
+        like on any other snapshot."""
+        data_dir = self._data_dir()
+        try:
+            return self.spark.read.parquet(data_dir)
+        except AnalysisException:
+            schema_file = os.path.join(data_dir, _SCHEMA)
+            if self._data_files() or not os.path.exists(schema_file):
+                raise
+            with open(schema_file) as f:
+                schema = T.StructType.fromJson(json.load(f))
+            return self.spark.createDataFrame([], schema)
+
+    def _data_files(self) -> list[tuple[str, int]]:
+        """(path, size) of every data file a `read()` scans, listed the
+        way Spark's file index does: names starting with ``_`` (unless
+        they hold ``=``) or ``.`` are hidden — ``_temporary`` staging,
+        ``_SUCCESS``, ``.crc`` — and only partition directories
+        (``col=value``) are descended, so an uncommitted ``vNNNNNN``
+        snapshot dir under a bare-path table is not data either.
+        Local-filesystem walk by design (this table's commit protocol
+        is os.replace); an object-store port would read the same
+        listing its reader does."""
+        files: list[tuple[str, int]] = []
+
+        def walk(d: str) -> None:
+            with os.scandir(d) as entries:
+                for e in entries:
+                    n = e.name
+                    if (n.startswith("_") and "=" not in n) or n.startswith("."):
+                        continue
+                    if e.is_dir():
+                        if "=" in n:
+                            walk(e.path)
+                    else:
+                        files.append((e.path, e.stat().st_size))
+
+        root = self._data_dir()
+        if os.path.isdir(root):
+            walk(root)
+        return files
 
     def data_bytes(self) -> int:
         """On-disk bytes of the committed snapshot's data files — a
         metadata-only size probe (no Spark job, no scan), the same
         signal Iceberg/Delta keep in their manifests to size-gate
-        broadcast decisions. Local-filesystem walk by design (this
-        table's commit protocol is os.replace); an object-store port
-        would read the sizes from the FS listing it already does."""
-        total = 0
-        for root, _dirs, files in os.walk(self._data_dir()):
-            for name in files:
-                if name.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(root, name))
-                    except OSError:
-                        pass
-        return total
+        broadcast decisions."""
+        return sum(size for _path, size in self._data_files())
+
+    def row_count(self) -> int:
+        """Rows of the committed snapshot, summed from the parquet
+        footers of its data files on the driver — the same number as
+        ``read().count()`` without its schema-inference and count jobs
+        (Iceberg/Delta keep per-file row counts in their manifests for
+        the same reason). Zero-byte files hold no rows (Spark's reader
+        skips them too)."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(path).num_rows
+            for path, size in self._data_files()
+            if size > 0
+        )
 
     # -- time travel + CDC over retained snapshots -----------------------
 
@@ -786,7 +848,7 @@ class ParquetUpsertTable:
         version = (act[0] + 1) if act else 1
         dir_name = f"v{version:06d}"
         dest = os.path.join(self.path, dir_name)
-        self._write(df, "overwrite", dest)
+        self._stage(df, dest)
         report = audit_fn(self.spark.read.parquet(dest))
         failures = [r.constraint_name for r in report.filter(~F.col("passed")).collect()]
         if failures:

@@ -18,9 +18,10 @@ Two rejection granularities, both present in the reference:
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -93,14 +94,83 @@ def with_flags(df: DataFrame, rules: list[Rule]) -> DataFrame:
     return df.withColumn("is_valid", F.size("violations") == 0)
 
 
-def split(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
+def _row_counts() -> list[Column]:
+    """What a valid row is, for every report that counts them: total,
+    valid and invalid rows over a `with_flags` frame. The K8 `summary`
+    and the `RowCounts` observation both aggregate exactly this list."""
+    return [
+        F.count(F.lit(1)).alias("total_rows"),
+        F.sum(F.col("is_valid").cast("long")).alias("valid_rows"),
+        F.sum((~F.col("is_valid")).cast("long")).alias("invalid_rows"),
+    ]
+
+
+# How long `RowCounts.get` waits for Spark to deliver the observed
+# metrics of an action that already returned (they arrive through the
+# listener bus, normally within milliseconds) before it counts instead.
+_OBSERVED_WAIT_S = 30.0
+
+
+class RowCounts:
+    """Valid/invalid row counts of one `split`, taken by the action that
+    first runs either side of it instead of by extra count jobs.
+
+    ``split(df, rules, counts)`` observes the flagged frame below both
+    filters, so whichever write first scans the batch fills the counts
+    with every row it read (`DataFrame.observe`). One case loses them:
+    when a stage holding the observed node produces no rows (a batch
+    with no valid rows ahead of a shuffle), AQE's empty-relation pruning
+    drops that stage from the final plan and Spark completes the
+    observation with an empty row. `get` then counts the flagged batch
+    with one aggregate — the only path that costs a job."""
+
+    def __init__(self) -> None:
+        self._observation = Observation()
+        self._flagged: DataFrame | None = None
+
+    def observe(self, flagged: DataFrame) -> DataFrame:
+        self._flagged = flagged
+        return flagged.observe(self._observation, *_row_counts())
+
+    def _observed(self) -> dict | None:
+        """The observed metrics, or None when Spark delivered an empty
+        row or none within `_OBSERVED_WAIT_S` (the observed frame never
+        ran). `Observation.get` would raise on the first and block
+        forever on the second, so the JVM object is polled instead."""
+        jo = self._observation._jo
+        done = jo.future()
+        deadline = time.monotonic() + _OBSERVED_WAIT_S
+        while not done.isCompleted():
+            if time.monotonic() > deadline:
+                return None
+            time.sleep(0.001)
+        if jo.getRow().length() == 0:
+            return None
+        return self._observation.get
+
+    def get(self) -> tuple[int, int]:
+        """(valid_rows, invalid_rows) of the split batch. Call after an
+        action ran on either side of the split."""
+        m = self._observed()
+        if m is None:
+            m = self._flagged.agg(*_row_counts()).first().asDict()
+        # sum() over no rows is NULL
+        return int(m["valid_rows"] or 0), int(m["invalid_rows"] or 0)
+
+
+def split(
+    df: DataFrame, rules: list[Rule], counts: RowCounts | None = None
+) -> tuple[DataFrame, DataFrame]:
     """Record-level split -> (valid, invalid_with_reasons).
 
     Both sides derive from one flagged plan; routing the invalid side
     to a quarantine path (K6) or DLQ table (K7) is just a write on the
-    second DataFrame.
+    second DataFrame. With ``counts``, the flagged plan is observed so
+    the first action on either side also counts both (`RowCounts`).
     """
     flagged = with_flags(df, rules)
+    if counts is not None:
+        flagged = counts.observe(flagged)
     valid = flagged.filter(F.col("is_valid")).drop("is_valid", "violations")
     invalid = flagged.filter(~F.col("is_valid")).drop("is_valid")
     return valid, invalid
@@ -111,11 +181,7 @@ def summary(df: DataFrame, rules: list[Rule]) -> DataFrame:
     counts, and per-rule violation counts (reference
     validate.py:107-132 summary JSON). One map-side pass."""
     flagged = with_flags(df, rules)
-    aggs = [
-        F.count(F.lit(1)).alias("total_rows"),
-        F.sum(F.col("is_valid").cast("long")).alias("valid_rows"),
-        F.sum((~F.col("is_valid")).cast("long")).alias("invalid_rows"),
-    ] + [
+    aggs = _row_counts() + [
         F.sum(
             F.array_contains(F.col("violations"), r.name).cast("long")
         ).alias(f"viol_{r.name}")

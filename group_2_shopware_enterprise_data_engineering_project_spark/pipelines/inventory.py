@@ -49,14 +49,13 @@ def rules(now: str | None = None) -> list[validate.Rule]:
 
 @dataclass
 class RunResult:
-    """Per-run row accounting. Fields are None when the run was
-    invoked with ``collect_stats=False`` (the counts were never
-    computed) — an explicit "not collected" signal instead of a
-    plausible-looking sentinel number."""
+    """Per-run row accounting: rows that passed and failed validation
+    (observed by the upsert's own scan, `validate.RowCounts`) and rows
+    in the table after the upsert (its parquet footers)."""
 
-    valid_rows: int | None
-    rejected_rows: int | None
-    upserted_rows: int | None
+    valid_rows: int
+    rejected_rows: int
+    upserted_rows: int
 
 
 def run(
@@ -65,10 +64,7 @@ def run(
     table_path: str,
     rejected_path: str | None = None,
     now: str | None = None,
-    collect_stats: bool = True,
 ) -> RunResult:
-    """`collect_stats=False` skips the three count actions — each is an
-    extra scan of the JSONL input / the table (the pos.run precedent)."""
     raw = read_jsonl(spark, input_path, INVENTORY_SCHEMA)
     typed = normalize_epoch(
         enforce_schema(raw, INVENTORY_SCHEMA),
@@ -76,7 +72,8 @@ def run(
         ts_col="last_updated_datetime",
         date_col="last_updated_date",
     )
-    ok, bad = validate.split(typed, rules(now))
+    counts = validate.RowCounts()
+    ok, bad = validate.split(typed, rules(now), counts)
     if rejected_path:
         import pyspark.sql.functions as F
 
@@ -87,10 +84,5 @@ def run(
     deduped = keep_latest(ok, ("inventory_id",), "last_updated", "product_id")
     table = ParquetUpsertTable(spark, table_path, partition_by=("last_updated_date",))
     table.upsert_replace(deduped, ("inventory_id",), "last_updated")
-    if not collect_stats:
-        return RunResult(None, None, None)
-    return RunResult(
-        valid_rows=ok.count(),
-        rejected_rows=bad.count(),
-        upserted_rows=table.read().count(),
-    )
+    valid_rows, rejected_rows = counts.get()
+    return RunResult(valid_rows, rejected_rows, table.row_count())

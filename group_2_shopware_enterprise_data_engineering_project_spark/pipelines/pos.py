@@ -52,15 +52,15 @@ def daily_sales_kpi(facts: DataFrame) -> DataFrame:
 
 @dataclass
 class RunResult:
-    """Per-run row accounting. Fields are None when the run was
-    invoked with ``collect_stats=False`` (the counts were never
-    computed) — an explicit "not collected" signal instead of a
-    plausible-looking sentinel number."""
+    """Per-run row accounting: rows that passed and failed validation
+    (observed by the fact write's own scan, `validate.RowCounts`) and
+    rows in the fact and KPI tables after the run (their parquet
+    footers)."""
 
-    valid_rows: int | None
-    rejected_rows: int | None
-    fact_rows: int | None
-    kpi_rows: int | None
+    valid_rows: int
+    rejected_rows: int
+    fact_rows: int
+    kpi_rows: int
 
 
 def run(
@@ -70,15 +70,14 @@ def run(
     kpi_path: str,
     rejected_path: str | None = None,
     partition_by: tuple[str, ...] = ("date",),
-    collect_stats: bool = True,
 ) -> RunResult:
     """`partition_by` defaults to the reference's per-date layout
     (transfom_pos.py:157,166) — right when each batch touches few
     dates. For backfills spanning thousands of dates, pass () to avoid
-    a tiny-file-per-date explosion. `collect_stats=False` skips the
-    count actions (each is an extra scan)."""
+    a tiny-file-per-date explosion."""
     raw = read_csv(spark, csv_path, POS_SCHEMA)
-    ok, bad = validate.split(raw, rules())
+    counts = validate.RowCounts()
+    ok, bad = validate.split(raw, rules(), counts)
     if rejected_path:
         bad.withColumn("violations", F.to_json("violations")).write.mode(
             "overwrite"
@@ -114,11 +113,7 @@ def run(
     if appending:
         facts.unpersist()
 
-    if not collect_stats:
-        return RunResult(None, None, None, None)
+    valid_rows, rejected_rows = counts.get()
     return RunResult(
-        valid_rows=ok.count(),
-        rejected_rows=bad.count(),
-        fact_rows=fact_table.read().count(),
-        kpi_rows=kpi_table.read().count(),
+        valid_rows, rejected_rows, fact_table.row_count(), kpi_table.row_count()
     )

@@ -289,7 +289,7 @@ def pipe_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the reference's per-date layout would mean 2400 tiny partitions.
     pos.run(
         spark, f"{base}/in", f"{base}/fact", f"{base}/kpi",
-        partition_by=(), collect_stats=False,
+        partition_by=(),
     )
     return ParquetUpsertTable(spark, f"{base}/kpi").read()
 
@@ -344,9 +344,7 @@ def pipe_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("last_updated"),
     )
     src.write.mode("overwrite").json(f"{base}/in")
-    # collect_stats=False: the declared result is the read-back table;
-    # the RunResult count actions are extra scans (pipe_pos precedent)
-    inventory.run(spark, f"{base}/in", f"{base}/table", collect_stats=False)
+    inventory.run(spark, f"{base}/in", f"{base}/table")
     return ParquetUpsertTable(spark, f"{base}/table").read()
 
 

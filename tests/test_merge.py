@@ -914,3 +914,98 @@ def test_cluster_for_partitioned_write_regimes(spark):
         big, ("p",)
     )._jdf.queryExecution().analyzed().toString()
     assert "rebalance" in big_plan.lower(), big_plan
+
+
+def _assert_footers_match_read(t: ParquetUpsertTable) -> None:
+    """The footer listing is exactly the file set Spark's reader scans,
+    and the footer row count and byte size agree with it."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    df = t.read()
+    scanned = {unquote(urlparse(u).path) for u in df.inputFiles()}
+    assert {path for path, _size in t._data_files()} == scanned
+    assert t.data_bytes() == sum(os.path.getsize(f) for f in scanned)
+    assert t.row_count() == df.count()
+
+
+def _plant_strays(data_dir: str, orphan_dir: str) -> None:
+    """Copies of a real data file where a naive walk would count them:
+    committer staging, a hidden file, a checksum, a marker, and an
+    uncommitted snapshot dir."""
+    import glob
+    import os
+    import shutil
+
+    src = sorted(glob.glob(f"{data_dir}/**/part-*.parquet", recursive=True))[0]
+    staged = os.path.join(data_dir, "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(staged)
+    shutil.copy(src, os.path.join(staged, "part-99999-staged.snappy.parquet"))
+    shutil.copy(src, os.path.join(data_dir, ".part-99999-hidden.snappy.parquet"))
+    with open(os.path.join(data_dir, ".part-99999.snappy.parquet.crc"), "wb") as f:
+        f.write(b"\0" * 12)
+    open(os.path.join(data_dir, "_SUCCESS"), "w").close()
+    os.makedirs(orphan_dir)
+    shutil.copy(src, os.path.join(orphan_dir, "part-00000-orphan.snappy.parquet"))
+
+
+def test_row_count_reads_footers_of_the_files_spark_scans(spark, tmp_path):
+    import os
+
+    rows = [(i, f"2025-01-0{1 + i % 3}", float(i)) for i in range(12)]
+    schema = "pid long, date string, total double"
+
+    flat = ParquetUpsertTable(spark, str(tmp_path / "flat"))
+    flat.upsert_replace(spark.createDataFrame(rows, schema), ("pid",), "total")
+    _assert_footers_match_read(flat)
+
+    part = ParquetUpsertTable(spark, str(tmp_path / "part"), partition_by=("date",))
+    part.create_or_overwrite(spark.createDataFrame(rows, schema))
+    _assert_footers_match_read(part)
+    # appended into the active snapshot: new files beside the old ones
+    part.append(spark.createDataFrame(rows[:5], schema))
+    _assert_footers_match_read(part)
+    assert part.row_count() == 17
+
+    kpi = ParquetUpsertTable(spark, str(tmp_path / "kpi"), partition_by=("date",))
+    kpi.upsert_additive(spark.createDataFrame(rows, schema), ("pid", "date"), ("total",))
+    scoped_dir = kpi._data_dir()
+    kpi.upsert_additive(
+        spark.createDataFrame([(0, "2025-01-01", 1.0), (50, "2025-01-01", 2.0)], schema),
+        ("pid", "date"),
+        ("total",),
+    )
+    assert kpi._data_dir() == scoped_dir  # rewritten in place (scoped path)
+    _assert_footers_match_read(kpi)
+    assert kpi.row_count() == 13
+
+    legacy_path = str(tmp_path / "legacy")
+    spark.createDataFrame(rows, schema).write.parquet(legacy_path)
+    legacy = ParquetUpsertTable(spark, legacy_path)
+    assert legacy._read_manifest() is None
+    _assert_footers_match_read(legacy)
+
+    for t in (flat, part, kpi, legacy):
+        before = t.row_count()
+        _plant_strays(t._data_dir(), os.path.join(t.path, "v000099"))
+        _assert_footers_match_read(t)
+        assert t.row_count() == before
+
+    assert ParquetUpsertTable(spark, str(tmp_path / "absent")).row_count() == 0
+
+
+def test_empty_partitioned_snapshot_reads_back_and_merges(spark, tmp_path):
+    """Spark writes no data file for an empty partitioned frame; the
+    committed snapshot still reads (as an empty frame of the written
+    schema) and later merges build on it."""
+    t = ParquetUpsertTable(spark, str(tmp_path / "kpi"), partition_by=("date",))
+    schema = "pid long, date date, total double"
+    t.upsert_additive(spark.createDataFrame([], schema), ("pid", "date"), ("total",))
+    assert t.exists() and t._data_files() == []
+    empty = t.read()
+    assert empty.columns == ["pid", "total", "date"] and empty.count() == 0
+    assert t.row_count() == 0
+    b = spark.createDataFrame([(1, "2025-01-01", 2.0)], "pid long, date string, total double")
+    t.upsert_additive(b.select("pid", F.col("date").cast("date"), "total"), ("pid", "date"), ("total",))
+    assert [(r.pid, str(r.date), r.total) for r in t.read().collect()] == [(1, "2025-01-01", 2.0)]
+    _assert_footers_match_read(t)

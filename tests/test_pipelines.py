@@ -6,6 +6,7 @@ from __future__ import annotations
 import csv
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
@@ -72,18 +73,21 @@ def test_inventory_pipeline(spark, tmp_path):
     assert state == {1: 8, 2: 99, 4: 7} and res2.upserted_rows == 3
 
 
-def test_pos_pipeline_accumulating_kpi(spark, tmp_path):
-    def write_csv(path, rows):
-        path.parent.mkdir(parents=True, exist_ok=True)
-        cols = ["transaction_id", "store_id", "product_id", "quantity",
-                "revenue", "discount_applied", "timestamp"]
-        with open(path, "w", newline="") as f:
-            w = csv.writer(f)
-            w.writerow(cols)
-            w.writerows(rows)
+POS_COLS = ["transaction_id", "store_id", "product_id", "quantity",
+            "revenue", "discount_applied", "timestamp"]
 
+
+def _csv(path, rows):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(POS_COLS)
+        w.writerows(rows)
+
+
+def test_pos_pipeline_accumulating_kpi(spark, tmp_path):
     day = 1.7e9  # 2023-11-14
-    write_csv(tmp_path / "d1" / "pos_20231114_000000.csv", [
+    _csv(tmp_path / "d1" / "pos_20231114_000000.csv", [
         ("t1", 1, 100, 2, 10.0, 0.0, day),
         ("t1", 1, 100, 2, 10.0, 0.0, day),       # exact dup -> dropped
         ("t2", 1, 100, 1, 5.555, 0.0, day + 60),
@@ -103,16 +107,81 @@ def test_pos_pipeline_accumulating_kpi(spark, tmp_path):
     assert kpi[100] == 15.56 and kpi[200] == 7.0  # round(sum, 2) per batch
 
     # day-2 batch for the same (product, date) accumulates additively
-    write_csv(tmp_path / "d2" / "pos_20231114_120000.csv", [
+    _csv(tmp_path / "d2" / "pos_20231114_120000.csv", [
         ("t9", 1, 100, 1, 4.0, 0.0, day + 3600),
     ])
     pos.run(spark, str(tmp_path / "d2"), str(tmp_path / "fact"), str(tmp_path / "kpi"))
     kpi = {r.product_id: r.total_sales for r in ParquetUpsertTable(spark, str(tmp_path / "kpi")).read().collect()}
     # 15.56 + 4.0 (K5 accumulate, reference transfom_pos.py:140-152);
     # approx: the accumulator is a float sum like the reference's Delta col
-    import pytest
-
     assert kpi[100] == pytest.approx(19.56)
+
+
+def _inv_rows(stock_level):
+    return [{"inventory_id": k, "product_id": k, "warehouse_id": 1,
+             "stock_level": stock_level, "restock_threshold": None,
+             "last_updated": 1.7e9 + k} for k in range(5)]
+
+
+def _pos_rows(transaction_id):
+    # an empty transaction id reads as NULL -> rejected
+    return [(transaction_id and f"{transaction_id}{k}", 1, k, 1, 2.5, 0.0, 1.7e9 + k)
+            for k in range(5)]
+
+
+# Degenerate batches: every row invalid, or an empty input file. With
+# no valid rows the POS fact write's dedup shuffle is empty, AQE prunes
+# the stage that observed the split, and the observation completes with
+# an empty row; the counts must still be the ones count() gave, and the
+# run must complete on the bootstrap path (which first commits an empty
+# partitioned snapshot) and on the append path. Each table's count()
+# is taken with read().count() after the run.
+
+
+@pytest.mark.parametrize("path", ["bootstrap", "append"])
+@pytest.mark.parametrize("batch", ["all_invalid", "empty_file"])
+def test_inventory_degenerate_batch(spark, tmp_path, batch, path):
+    table = str(tmp_path / "table")
+    now = "2023-11-15 00:00:00"
+    if path == "append":
+        _jsonl(tmp_path / "seed" / "b.jsonl", _inv_rows(5))
+        inventory.run(spark, str(tmp_path / "seed"), table, now=now)
+    _jsonl(tmp_path / "in" / "b.jsonl", _inv_rows(-1) if batch == "all_invalid" else [])
+    res = inventory.run(spark, str(tmp_path / "in"), table, now=now)
+    stored = 5 if path == "append" else 0
+    rejected = 5 if batch == "all_invalid" else 0
+    assert (res.valid_rows, res.rejected_rows, res.upserted_rows) == (0, rejected, stored)
+    assert ParquetUpsertTable(spark, table).read().count() == stored
+    # the table stays usable: a valid batch merges into it
+    _jsonl(tmp_path / "next" / "b.jsonl", _inv_rows(7))
+    res = inventory.run(spark, str(tmp_path / "next"), table, now=now)
+    assert (res.valid_rows, res.rejected_rows, res.upserted_rows) == (5, 0, 5)
+
+
+@pytest.mark.parametrize("path", ["bootstrap", "append"])
+@pytest.mark.parametrize("batch", ["all_invalid", "empty_file"])
+def test_pos_degenerate_batch(spark, tmp_path, batch, path):
+    fact, kpi = str(tmp_path / "fact"), str(tmp_path / "kpi")
+    if path == "append":
+        _csv(tmp_path / "seed" / "b.csv", _pos_rows("s"))
+        pos.run(spark, str(tmp_path / "seed"), fact, kpi)
+    src = tmp_path / "in" / "b.csv"
+    if batch == "all_invalid":
+        _csv(src, _pos_rows(""))
+    else:
+        src.parent.mkdir(parents=True)
+        src.write_text("")
+    res = pos.run(spark, str(src.parent), fact, kpi)
+    stored = 5 if path == "append" else 0
+    rejected = 5 if batch == "all_invalid" else 0
+    assert (res.valid_rows, res.rejected_rows, res.fact_rows, res.kpi_rows) == (
+        0, rejected, stored, stored)
+    assert ParquetUpsertTable(spark, fact).read().count() == stored
+    assert ParquetUpsertTable(spark, kpi).read().count() == stored
+    _csv(tmp_path / "next" / "b.csv", _pos_rows("n"))
+    res = pos.run(spark, str(tmp_path / "next"), fact, kpi)
+    assert (res.valid_rows, res.rejected_rows, res.fact_rows, res.kpi_rows) == (
+        5, 0, stored + 5, 5)
 
 
 def test_web_stream_pipeline(spark, tmp_path):

@@ -36,6 +36,23 @@ def test_split_counts_and_reasons(spark):
     assert "violations" not in valid.columns
 
 
+def test_row_counts_observed_by_the_first_action(spark, monkeypatch):
+    """The first action on either side of an observed split counts both
+    sides; a split that never ran is counted by the fallback aggregate
+    once the bounded wait for its observation ends."""
+    counts = V.RowCounts()
+    _valid, invalid = V.split(_df(spark), _rules(), counts)
+    assert invalid.count() == 3
+    assert counts.get() == (2, 3)
+    assert counts._observed() is not None
+
+    monkeypatch.setattr(V, "_OBSERVED_WAIT_S", 0.05)
+    never_ran = V.RowCounts()
+    V.split(_df(spark), _rules(), never_ran)
+    assert never_ran._observed() is None
+    assert never_ran.get() == (2, 3)
+
+
 def test_summary_single_row(spark):
     row = V.summary(_df(spark), _rules()).collect()[0]
     assert row.total_rows == 5
