@@ -2,10 +2,10 @@
 
 The reference uses Delta Lake MERGE (reference
 inventory_transform.py:265-275 replace; transfom_pos.py:140-152
-additive). delta-spark isn't in this environment, so the primary
-implementation is the pure-Spark equivalent SURVEY §4 specifies:
-union + window keep-priority (K4) / union + re-aggregate (K5). If
-delta-spark IS importable, `DeltaUpsertTable` uses the real MERGE.
+additive). This module is the pure-Spark equivalent SURVEY §4
+specifies: union + window keep-priority (K4) / union + re-aggregate
+(K5), stored in `ParquetUpsertTable`, whose manifest swap stands in
+for the Delta log's atomic commit.
 
 Scale notes: both pure-Spark forms are one shuffle on the merge key —
 the same cost profile as Delta's join-based MERGE. The physical
@@ -28,14 +28,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - delta not present in this environment
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except ImportError:
-    DeltaTable = None
-    HAVE_DELTA = False
 
 
 def _align_to(df: DataFrame, ref: DataFrame) -> DataFrame:
@@ -318,20 +310,23 @@ class ParquetUpsertTable:
     inventory_transform.py:265-275).
 
     Layout: ``path/_MANIFEST.json`` names the active snapshot subdir
-    (``v000001``, ``v000002``, ...). Full-table merges write the merged
-    result to a NEW snapshot directory while the old one is still being
-    read (no read-overwrite hazard, no defensive materialization), then
-    commit by atomically replacing the manifest (``os.replace``). A
-    crash at any point before the manifest swap leaves the previous
-    snapshot fully intact; orphaned half-written snapshot dirs are
-    overwritten by the next merge and pruned after commit. Single-writer
-    by design — same as the reference's per-pipeline Delta tables.
+    (``v000001``, ``v000002``, ...); a table exists exactly when its
+    manifest does. Full-table merges write the merged result to a NEW
+    snapshot directory while the old one is still being read (no
+    read-overwrite hazard, no defensive materialization), then commit
+    by atomically replacing the manifest (``os.replace``, `_commit` —
+    the only manifest writer). A crash at any point before the manifest
+    swap leaves the previous snapshot fully intact; orphaned
+    half-written snapshot dirs are overwritten by the next merge and
+    pruned after commit. Single-writer by design — same as the
+    reference's per-pipeline Delta tables.
 
     Partition-scoped merges (`_scoped_merge`) still rewrite touched
     partitions in place inside the active snapshot: that path's rewrite
     surface is the batch's partitions only, and Spark's committer stages
     files in ``_temporary`` until job commit, so old files are replaced
-    only at the final rename step.
+    only at the final rename step. A txn-guarded merge never takes it:
+    its batch id must commit in the same manifest swap as its data.
     """
 
     def __init__(
@@ -347,15 +342,29 @@ class ParquetUpsertTable:
         # injectable commit clock (epoch seconds) so timestamp time
         # travel is testable with a pinned clock
         self._clock = clock or time.time
-        # the manifest's stored spec (written by every commit since
-        # partition evolution landed) is authoritative for an EXISTING
-        # table: a re-opened handle keeps writing the committed layout
-        # even if constructed without partition_by. Changing the spec
-        # goes through `evolve_partitioning`, never the constructor —
-        # a CONFLICTING explicit argument is an error, not a silent
-        # override in either direction.
+        # the manifest's stored spec (written by every commit) is
+        # authoritative for an EXISTING table: a re-opened handle keeps
+        # writing the committed layout even if constructed without
+        # partition_by. Changing the spec goes through
+        # `evolve_partitioning`, never the constructor — a CONFLICTING
+        # explicit argument is an error, not a silent override in
+        # either direction.
         stored = self._read_manifest()
-        if stored is not None and "partition_by" in stored:
+        if stored is None:
+            # Only this class creates tables, so a directory holding
+            # data but no manifest is not one of them; the first commit
+            # would hide it behind v000001. Hidden names and snapshot
+            # dirs (an orphan left by a crash before the first swap)
+            # are not data and stay writable.
+            if os.path.isdir(path) and any(
+                not (n.startswith(("_", ".")) or _SNAPSHOT_RE.match(n))
+                for n in os.listdir(path)
+            ):
+                raise ValueError(
+                    f"{path} holds files but no {_MANIFEST}; it is not a "
+                    "table this class committed"
+                )
+        elif "partition_by" in stored:
             stored_spec = tuple(stored["partition_by"])
             if partition_by and tuple(partition_by) != stored_spec:
                 raise ValueError(
@@ -365,15 +374,18 @@ class ParquetUpsertTable:
                 )
             self.partition_by = stored_spec
 
-    def _refresh_spec(self) -> None:
-        """Re-adopt the manifest's stored partition spec before a
-        write: another handle may have evolved the layout since this
-        one was constructed, and writing with a stale in-memory spec
-        would either silently revert the evolution (snapshot path) or
-        mix layouts inside the active snapshot (scoped path)."""
+    def _begin_write(self, txn: tuple[str, int] | None = None) -> bool:
+        """Prologue of every write. Re-adopts the manifest's stored
+        partition spec: another handle may have evolved the layout since
+        this one was constructed, and writing with a stale in-memory
+        spec would either silently revert the evolution (snapshot path)
+        or mix layouts inside the active snapshot (scoped path). Returns
+        False when ``txn`` is a replay — its batch id is already
+        committed — and the write must be a no-op."""
         m = self._read_manifest()
         if m is not None and "partition_by" in m:
             self.partition_by = tuple(m["partition_by"])
+        return txn is None or txn[1] > self.last_txn(txn[0])
 
     # -- snapshot bookkeeping (driver-side O(1) metadata ops) ------------
 
@@ -382,18 +394,17 @@ class ParquetUpsertTable:
 
     def _active(self) -> tuple[int, str] | None:
         """(version, snapshot dir) of the committed snapshot, or None."""
+        m = self._read_manifest()
         try:
-            with open(self._manifest_file()) as f:
-                m = json.load(f)
             return int(m["version"]), os.path.join(self.path, m["dir"])
-        except (OSError, ValueError, KeyError):
+        except (TypeError, ValueError, KeyError):
             return None
 
-    def _data_dir(self) -> str:
-        """Directory the current table data lives in: the committed
-        snapshot, else the bare path (pre-manifest legacy layout)."""
+    def _data_dir(self) -> str | None:
+        """Directory of the committed snapshot, or None before the
+        first commit."""
         act = self._active()
-        return act[1] if act else self.path
+        return act[1] if act else None
 
     def _read_manifest(self) -> dict | None:
         try:
@@ -420,7 +431,9 @@ class ParquetUpsertTable:
         data swap and batch-id record are one atomic os.replace, so a
         crash can never commit data without its batch id — the
         exactly-once property `accumulating_kpi_sink` relies on.
-        Existing txn stamps from other app_ids are carried forward."""
+        Existing txn stamps from other app_ids are carried forward —
+        a read-modify-write, so two CONCURRENT writers could each drop
+        the other's stamp (the class is single-writer)."""
         stamp = os.path.join(self.path, dir_name, _COMMIT_STAMP)
         with open(stamp, "w") as f:
             json.dump({"committed_at": float(self._clock())}, f)
@@ -455,50 +468,6 @@ class ParquetUpsertTable:
         except (TypeError, ValueError):
             return -1
 
-    def _check_txn_stampable(self, txn: tuple[str, int] | None) -> None:
-        """Fail BEFORE any data moves if a txn was requested on a table
-        where it cannot be durably recorded: a legacy manifest-less
-        layout (data at the bare path) would otherwise complete the
-        merge and then fail the stamp — committed data with no batch id
-        is exactly the replay hazard txn= exists to prevent."""
-        if txn is None:
-            return
-        if self.exists() and self._read_manifest() is None:
-            raise ValueError(
-                "txn guard requires a manifest-committed table; this is a "
-                f"legacy bare-path layout at {self.path} — rewrite it once "
-                "via create_or_overwrite()/compact() to adopt the manifest"
-            )
-
-    def _stamp_txn(self, app_id: str, batch_id: int) -> None:
-        """Record a txn on the ACTIVE manifest without a snapshot bump
-        (the partition-scoped merge path, which rewrites touched
-        partitions in place). Atomic against readers, but NOT atomic
-        with the data job itself — see upsert_* docstrings for the
-        narrowed replay window this leaves.
-
-        Single-writer only (the class's documented design): this is a
-        read-modify-write of the whole manifest, so two CONCURRENT
-        writers with different app_ids can each read the same manifest
-        and clobber the other's txn stamp on replace — silently
-        re-enabling batch replay for the loser. The same carry-forward
-        hazard exists in ``_commit``. Multi-writer deployments need an
-        external advisory lock around merge+stamp (or a real
-        transactional store, e.g. the Delta path)."""
-        m = self._read_manifest()
-        if m is None:
-            raise ValueError(
-                "txn stamping requires a manifest-committed table "
-                f"(none at {self._manifest_file()})"
-            )
-        txns = dict(m.get("txns", {}))
-        txns[app_id] = int(batch_id)
-        m["txns"] = txns
-        tmp = self._manifest_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_file())
-
     def _committed_at(self, version: int) -> float:
         """Commit time of a retained snapshot; falls back to the dir
         mtime for snapshots written before commit stamps existed."""
@@ -521,16 +490,24 @@ class ParquetUpsertTable:
             if m and int(m.group(1)) <= act[0] - keep:
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
-    def _snapshot_write(self, df: DataFrame, txn: tuple[str, int] | None = None) -> None:
+    def _snapshot_write(
+        self, df: DataFrame, txn: tuple[str, int] | None = None, audit=None
+    ):
         """Write df as the next snapshot, then commit + prune. The write
         streams from the old snapshot (lazy) — safe because it targets a
-        different directory."""
+        different directory. ``audit`` (optional) gets the staged
+        snapshot as read back from disk before the commit; raising
+        there leaves the active snapshot untouched. Returns its
+        result."""
         act = self._active()
         version = (act[0] + 1) if act else 1
         dir_name = f"v{version:06d}"
-        self._stage(df, os.path.join(self.path, dir_name))
+        dest = os.path.join(self.path, dir_name)
+        self._stage(df, dest)
+        result = audit(self.spark.read.parquet(dest)) if audit else None
         self._commit(version, dir_name, txn=txn)
         self._prune()
+        return result
 
     def _stage(self, df: DataFrame, dest: str) -> None:
         """Write df as a new snapshot dir, not yet committed. The dir
@@ -546,23 +523,8 @@ class ParquetUpsertTable:
             f.write(schema.json())
 
     def exists(self) -> bool:
-        # A missing root is checked at the OS level FIRST: inside a
-        # foreachBatch the streaming sink-metadata probe surfaces a raw
-        # java FileNotFoundException (not AnalysisException) for a
-        # nonexistent path, and substring-matching exception text would
-        # also swallow unrelated failures (a transiently-missing data
-        # file of an EXISTING table) and let a merge silently bootstrap
-        # over it. The manifest layout is local-filesystem by design
-        # (os.replace commits), so os.path is authoritative here.
-        if self._active() is not None:
-            return True
-        if not os.path.exists(self.path):
-            return False
-        try:
-            self.spark.read.parquet(self.path).limit(0).collect()
-            return True
-        except AnalysisException:
-            return False
+        """True once a snapshot is committed — a manifest read, no job."""
+        return self._active() is not None
 
     def read(self) -> DataFrame:
         """The committed snapshot. One committed from an empty frame
@@ -571,6 +533,8 @@ class ParquetUpsertTable:
         schema `_stage` kept, and later merges and appends build on it
         like on any other snapshot."""
         data_dir = self._data_dir()
+        if data_dir is None:
+            raise ValueError(f"no committed table at {self.path}")
         try:
             return self.spark.read.parquet(data_dir)
         except AnalysisException:
@@ -586,11 +550,9 @@ class ParquetUpsertTable:
         way Spark's file index does: names starting with ``_`` (unless
         they hold ``=``) or ``.`` are hidden — ``_temporary`` staging,
         ``_SUCCESS``, ``.crc`` — and only partition directories
-        (``col=value``) are descended, so an uncommitted ``vNNNNNN``
-        snapshot dir under a bare-path table is not data either.
-        Local-filesystem walk by design (this table's commit protocol
-        is os.replace); an object-store port would read the same
-        listing its reader does."""
+        (``col=value``) are descended. Local-filesystem walk by design
+        (this table's commit protocol is os.replace); an object-store
+        port would read the same listing its reader does."""
         files: list[tuple[str, int]] = []
 
         def walk(d: str) -> None:
@@ -606,7 +568,7 @@ class ParquetUpsertTable:
                         files.append((e.path, e.stat().st_size))
 
         root = self._data_dir()
-        if os.path.isdir(root):
+        if root is not None and os.path.isdir(root):
             walk(root)
         return files
 
@@ -713,7 +675,7 @@ class ParquetUpsertTable:
         self,
         df: DataFrame,
         mode: str,
-        dest: str | None = None,
+        dest: str,
         options: dict[str, str] | None = None,
     ) -> None:
         if self.partition_by:
@@ -738,22 +700,19 @@ class ParquetUpsertTable:
             w = w.option(k, v)
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
-        w.parquet(dest if dest is not None else self._data_dir())
+        w.parquet(dest)
 
-    def _scoped_merge(
-        self, source: DataFrame, merge_fn, txn: tuple[str, int] | None = None
-    ) -> bool:
+    def _scoped_merge(self, source: DataFrame, merge_fn) -> None:
         """Partition-scoped MERGE: read, merge, and dynamically
         overwrite ONLY the partitions the source touches — the rewrite
         surface is per-batch data volume, not table volume (at 100 TB
         the difference between the two is the whole ballgame).
 
         Only valid when every partition column is part of the merge
-        key: then a key can never move between partitions, so rows in
-        untouched partitions are provably unaffected. Returns False
-        when that doesn't hold (caller falls back to the full merge,
-        which is also what Delta's join-based MERGE does absent file
-        pruning)."""
+        key (`_partition_scoped_ok`): then a key can never move between
+        partitions, so rows in untouched partitions are provably
+        unaffected. Otherwise callers take the full merge, which is
+        also what Delta's join-based MERGE does absent file pruning."""
         touched = source.select(*self.partition_by).distinct()
         merged = merge_fn(
             self.read().join(F.broadcast(touched), list(self.partition_by), "semi")
@@ -766,36 +725,43 @@ class ParquetUpsertTable:
         # thread's overwrite landing inside the window would wipe
         # untouched partitions (or this one would, if the restore ran
         # first). No session state is mutated now.
-        self._write(merged, "overwrite", options={"partitionOverwriteMode": "dynamic"})
-        if txn is not None:
-            # The scoped path rewrites partitions in place, so the txn
-            # stamp cannot share the data job's commit; it lands in the
-            # manifest immediately after. The replay window is the gap
-            # between the job's final file renames and this os.replace
-            # — narrowed from "any time before a separate guard file",
-            # not zero. Snapshot-path merges stamp atomically.
-            self._stamp_txn(*txn)
-        return True
+        self._write(
+            merged,
+            "overwrite",
+            self._data_dir(),
+            options={"partitionOverwriteMode": "dynamic"},
+        )
 
-    def _partition_scoped_ok(self, key_cols: tuple[str, ...]) -> bool:
-        return bool(self.partition_by) and set(self.partition_by) <= set(key_cols)
+    def _partition_scoped_ok(
+        self, key_cols: tuple[str, ...], txn: tuple[str, int] | None
+    ) -> bool:
+        """Scoped merges rewrite partitions in place, outside any
+        manifest swap, so a txn-guarded merge never takes them."""
+        return (
+            txn is None
+            and bool(self.partition_by)
+            and set(self.partition_by) <= set(key_cols)
+        )
 
-    def create_or_overwrite(self, df: DataFrame) -> None:
+    def create_or_overwrite(
+        self, df: DataFrame, txn: tuple[str, int] | None = None
+    ) -> None:
         """K3 — first-write bootstrap (reference transfom_pos.py:156-159).
-        Snapshot-committed, so overwriting an existing table is atomic."""
-        self._refresh_spec()
-        self._snapshot_write(df)
+        Snapshot-committed, so overwriting an existing table is atomic;
+        ``txn=`` rides the same manifest swap (a replay is a no-op)."""
+        if self._begin_write(txn):
+            self._snapshot_write(df, txn=txn)
 
     def append(self, df: DataFrame) -> None:
         """K2 — partitioned append (reference transfom_pos.py:165-168).
         Appends add files to the active snapshot; existing files are
         never rewritten, so a crash leaves at worst staged _temporary
         files, not data loss."""
-        self._refresh_spec()
+        self._begin_write()
         if not self.exists():
             self._snapshot_write(df)
             return
-        self._write(df, "append")
+        self._write(df, "append", self._data_dir())
 
     def compact(self, target_partitions: int | None = None) -> None:
         """Small-files compaction: rewrite the table as a NEW snapshot
@@ -811,18 +777,15 @@ class ParquetUpsertTable:
         file count for the unpartitioned case (default:
         spark.sql.shuffle.partitions).
         """
-        self._refresh_spec()
+        self._begin_write()
         df = self.read()
-        if self.partition_by:
-            # _write itself REBALANCEs partitioned tables by the
-            # partition columns; an extra repartition here would just
-            # add a second shuffle of the whole table.
-            pass
-        elif target_partitions:
-            df = df.repartition(target_partitions)
-        else:
-            df = df.coalesce(
-                int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        if not self.partition_by:
+            df = (
+                df.repartition(target_partitions)
+                if target_partitions
+                else df.coalesce(
+                    int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
+                )
             )
         self._snapshot_write(df)
 
@@ -843,21 +806,21 @@ class ParquetUpsertTable:
         readers would see, so writer-side surprises (schema coercion,
         shortest-repr roundtrips) are inside the checked surface.
         Returns the audit report of a successful publish."""
-        self._refresh_spec()
-        act = self._active()
-        version = (act[0] + 1) if act else 1
-        dir_name = f"v{version:06d}"
-        dest = os.path.join(self.path, dir_name)
-        self._stage(df, dest)
-        report = audit_fn(self.spark.read.parquet(dest))
-        failures = [r.constraint_name for r in report.filter(~F.col("passed")).collect()]
-        if failures:
-            raise ValueError(
-                f"audit failed, snapshot NOT published: {failures}"
-            )
-        self._commit(version, dir_name)
-        self._prune()
-        return report
+
+        def audit(staged: DataFrame) -> DataFrame:
+            report = audit_fn(staged)
+            failures = [
+                r.constraint_name
+                for r in report.filter(~F.col("passed")).collect()
+            ]
+            if failures:
+                raise ValueError(
+                    f"audit failed, snapshot NOT published: {failures}"
+                )
+            return report
+
+        self._begin_write()
+        return self._snapshot_write(df, audit=audit)
 
     def delete_where(self, condition) -> None:
         """DELETE: commit a new snapshot without the matching rows —
@@ -875,7 +838,7 @@ class ParquetUpsertTable:
         where the condition is TRUE are removed — a bare ``~cond``
         would silently drop the NULLs too).
         """
-        self._refresh_spec()
+        self._begin_write()
         self._snapshot_write(
             self.read().filter(~F.coalesce(condition, F.lit(False)))
         )
@@ -891,17 +854,15 @@ class ParquetUpsertTable:
         erasure requests), not as a predicate literal, so collecting
         them into an IN-list would bottleneck on the driver at scale.
         One anti-join rewrite of the active snapshot, committed as the
-        next snapshot; ``txn=`` rides the same atomic manifest swap
-        (snapshot path), making a replayed purge batch a no-op — and a
-        replay would also be harmless (deleting already-deleted keys),
-        so this path is doubly idempotent. NULL keys never match an
-        anti-join (SQL semantics), mirroring `delete_where`'s
-        NULL-predicate rule. `vacuum(keep_last=1)` still applies for
-        the compliance-grade history purge (see k24)."""
-        self._refresh_spec()
-        if txn is not None and txn[1] <= self.last_txn(txn[0]):
+        next snapshot; ``txn=`` rides the same atomic manifest swap,
+        making a replayed purge batch a no-op — and a replay would also
+        be harmless (deleting already-deleted keys), so this path is
+        doubly idempotent. NULL keys never match an anti-join (SQL
+        semantics), mirroring `delete_where`'s NULL-predicate rule.
+        `vacuum(keep_last=1)` still applies for the compliance-grade
+        history purge (see k24)."""
+        if not self._begin_write(txn):
             return
-        self._check_txn_stampable(txn)
         self._snapshot_write(
             self.read().join(keys.select(*key_cols), list(key_cols), "left_anti"),
             txn=txn,
@@ -923,10 +884,8 @@ class ParquetUpsertTable:
         delete-then-upsert snapshots would expose a mid-batch state
         (deletes visible, updates not) plus a second replay window —
         exactly what a streaming CDC consumer must not do."""
-        self._refresh_spec()
-        if txn is not None and txn[1] <= self.last_txn(txn[0]):
+        if not self._begin_write(txn):
             return
-        self._check_txn_stampable(txn)
         self._snapshot_write(
             merge_cdc(self.read(), changes, key_cols, seq_col, op_col),
             txn=txn,
@@ -952,7 +911,7 @@ class ParquetUpsertTable:
         table and union over both — this method is for when the table
         identity must be preserved.
         """
-        self._refresh_spec()
+        self._begin_write()
         new_spec = tuple(new_partition_by)
         df = self.read()
         missing = [c for c in new_spec if c not in df.columns]
@@ -988,35 +947,28 @@ class ParquetUpsertTable:
         reads on every consumer forever.
 
         ``txn=(app_id, batch_id)``: idempotent-replay guard — the merge
-        is a NO-OP if ``batch_id <= last_txn(app_id)``, and the batch id
-        commits atomically with the data on the snapshot path (stamped
-        immediately after on the scoped path; replace-merge is
-        content-idempotent so a replay through that window is safe)."""
-        self._refresh_spec()
-        if txn is not None and txn[1] <= self.last_txn(txn[0]):
+        is a NO-OP if ``batch_id <= last_txn(app_id)``, and otherwise
+        takes the snapshot path, whose manifest swap commits the batch
+        id together with the data."""
+        if not self._begin_write(txn):
             return
-        self._check_txn_stampable(txn)
         if not self.exists():
             self._snapshot_write(source, txn=txn)
             return
         target = self.read()
         if evolve_schema and set(target.columns) != set(source.columns):
             target, source = evolve_schemas(target, source)
-            self._snapshot_write(
-                merge_replace(target, source, key_cols, order_col), txn=txn
-            )
-            return
-        if self._partition_scoped_ok(key_cols):
+        elif self._partition_scoped_ok(key_cols, txn):
             self._scoped_merge(
-                source,
-                lambda tgt: merge_replace(tgt, source, key_cols, order_col),
-                txn=txn,
+                source, lambda tgt: merge_replace(tgt, source, key_cols, order_col)
             )
             return
         # New snapshot dir: streams lazily from the old snapshot and
         # commits via manifest swap — no read-overwrite hazard, no
         # defensive materialization.
-        self._snapshot_write(merge_replace(target, source, key_cols, order_col), txn=txn)
+        self._snapshot_write(
+            merge_replace(target, source, key_cols, order_col), txn=txn
+        )
 
     def upsert_additive(
         self,
@@ -1024,30 +976,21 @@ class ParquetUpsertTable:
         key_cols: tuple[str, ...],
         sum_cols: tuple[str, ...],
         txn: tuple[str, int] | None = None,
-        force_snapshot: bool = False,
     ) -> None:
         """K5 against stored state. The KPI shape (partition col in the
-        key, e.g. (product_id, date) partitioned by date) normally takes
-        the partition-scoped path: a daily batch rewrites one date, not
-        the table's history.
+        key, e.g. (product_id, date) partitioned by date) takes the
+        partition-scoped path: a daily batch rewrites one date, not the
+        table's history.
 
         ``txn=(app_id, batch_id)``: exactly-once guard for this
         NON-idempotent merge — no-op if ``batch_id <= last_txn(app_id)``.
-        On the snapshot path the batch id is part of the same atomic
-        manifest swap as the data (Delta txn pattern), so a crash can
-        never commit the add without its id. The scoped path stamps the
-        manifest right after the partition job commits — a crash inside
-        that gap replays as a double-add. ``force_snapshot=True`` opts a
-        partition-scoped-eligible table out of that window: the merge
-        takes the snapshot path, whose data+txn commit is one
-        os.replace, at the cost of rewriting the full table per batch —
-        the right trade for modest accumulator tables (KPI rollups);
-        wrong for fact-sized ones, where the honest fix is a
-        transactional log (the Delta path)."""
-        self._refresh_spec()
-        if txn is not None and txn[1] <= self.last_txn(txn[0]):
+        A guarded merge always takes the snapshot path, so the batch id
+        is part of the same atomic manifest swap as the data (Delta txn
+        pattern) and a crash can never commit the add without its id.
+        The price on a partitioned KPI table is a full-table rewrite per
+        batch instead of the touched partitions."""
+        if not self._begin_write(txn):
             return
-        self._check_txn_stampable(txn)
         if not self.exists():
             # bootstrap through the SAME normalization as every later
             # merge (key+sum columns, one row per key): writing raw
@@ -1061,63 +1004,14 @@ class ParquetUpsertTable:
                 txn=txn,
             )
             return
-        if not force_snapshot and self._partition_scoped_ok(key_cols):
+        if self._partition_scoped_ok(key_cols, txn):
             self._scoped_merge(
-                source,
-                lambda tgt: merge_additive(tgt, source, key_cols, sum_cols),
-                txn=txn,
+                source, lambda tgt: merge_additive(tgt, source, key_cols, sum_cols)
             )
             return
         self._snapshot_write(
             merge_additive(self.read(), source, key_cols, sum_cols), txn=txn
         )
-
-
-def delta_upsert_replace(spark, path: str, source: DataFrame, key_cols: tuple[str, ...]):
-    """K4 via real Delta MERGE when delta-spark is importable (the
-    reference's own API, inventory_transform.py:265-275). Semantics
-    parity with ``ParquetUpsertTable.upsert_replace`` (no order_col:
-    source strictly wins) is asserted by the importorskip-gated
-    ``tests/test_delta_interop.py``; install with
-    ``pip install delta-spark`` to activate those tests."""
-    if not HAVE_DELTA:  # pragma: no cover
-        raise ImportError("delta-spark not available; use ParquetUpsertTable")
-    tgt = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    (
-        tgt.alias("t")
-        .merge(source.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-
-
-def delta_upsert_additive(
-    spark,
-    path: str,
-    source: DataFrame,
-    key_cols: tuple[str, ...],
-    sum_cols: tuple[str, ...],
-):
-    """K5 via real Delta MERGE: on key match accumulate ``sum_cols``
-    (t.c + s.c), else insert — the accumulating-KPI merge
-    (reference transfom_pos.py:140-152) on Delta's transaction log.
-    Parity with ``ParquetUpsertTable.upsert_additive`` is asserted by
-    the gated ``tests/test_delta_interop.py``. The source must carry
-    at most one row per key (pre-aggregate first), same contract as
-    the reference's per-batch KPI frame."""
-    if not HAVE_DELTA:  # pragma: no cover
-        raise ImportError("delta-spark not available; use ParquetUpsertTable")
-    tgt = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    (
-        tgt.alias("t")
-        .merge(source.alias("s"), cond)
-        .whenMatchedUpdate(set={c: f"t.{c} + s.{c}" for c in sum_cols})
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
 
 
 def merge_cdc(
@@ -1231,14 +1125,15 @@ class MergeOnReadTable:
         (distinct, non-null) keys as tombstones. ``txn=`` rides the
         tombstone table's manifest commit, so a replayed erasure batch
         is a no-op there — and harmless anyway (idempotent merge)."""
+        if not self.tombstones._begin_write(txn):
+            return
         cleaned = keys.select(*self.key_cols).na.drop().distinct()
-        if txn is not None:
-            if txn[1] <= self.tombstones.last_txn(txn[0]):
-                return
-            merged = self.tombstones.read().unionByName(cleaned).distinct()
-            self.tombstones._snapshot_write(merged, txn=txn)
-        else:
+        if txn is None:
             self.tombstones.append(cleaned)
+        else:
+            self.tombstones.create_or_overwrite(
+                self.tombstones.read().unionByName(cleaned).distinct(), txn=txn
+            )
         if (
             self.auto_compact_bytes is not None
             and self.tombstones.data_bytes() > self.auto_compact_bytes

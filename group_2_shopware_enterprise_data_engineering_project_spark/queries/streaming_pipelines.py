@@ -2406,7 +2406,6 @@ def st28_stream_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("shard",),
             ("base_offset",),
             txn=(app_id, batch_id),
-            force_snapshot=True,
         )
 
     run_available_now(
@@ -2593,7 +2592,7 @@ def st30_stream_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             else untouched.unionByName(merged)
         )
         # data + batch id in one atomic manifest swap (exactly-once)
-        islands._snapshot_write(out, txn=(app_id, batch_id))
+        islands.create_or_overwrite(out, txn=(app_id, batch_id))
 
     run_available_now(
         stream_json_source(spark, src_dir, schema, max_files_per_trigger=1),
@@ -2719,7 +2718,6 @@ def st31_stream_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("source",),
             ("total_tokens",),
             txn=(app_id, batch_id),
-            force_snapshot=True,
         )
 
     run_available_now(

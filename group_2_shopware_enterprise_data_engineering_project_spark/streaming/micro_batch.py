@@ -20,7 +20,6 @@ idempotent, so the guard is correctness, not hygiene).
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
@@ -83,47 +82,6 @@ def stage_ordered_batches(
             t = os.path.getmtime(dest)
             os.utime(dest, (t + 10 * b, t + 10 * b))
         shutil.rmtree(stage, ignore_errors=True)
-
-
-def stream_kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    schema: T.StructType,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """ST1/S6 — network micro-batch source behind the SAME interface as
-    `stream_json_source`: returns a typed streaming DataFrame, so every
-    downstream sink (DLQ split, hour-partitioned, accumulating KPI)
-    works unchanged when the file stand-in is swapped for a real broker
-    (the reference's polling-API -> Kinesis path, api.py:141-187).
-
-    Requires the spark-sql-kafka connector package on the classpath
-    (`--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>`);
-    absent that, raises ImportError at plan time with the package name
-    rather than an opaque ClassNotFound at start().
-    """
-    from pyspark.sql import functions as F
-
-    try:
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", topic)
-            .option("startingOffsets", starting_offsets)
-            .load()
-        )
-    except Exception as e:  # noqa: BLE001 — connector-missing gate
-        if "kafka" in str(e).lower():
-            raise ImportError(
-                "kafka source requires the spark-sql-kafka-0-10 connector "
-                "package on the classpath; the file-based "
-                "stream_json_source is the in-environment stand-in"
-            ) from e
-        raise
-    return raw.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("_rec")
-    ).select("_rec.*")
 
 
 def source_bytes(path: str) -> int:
@@ -317,34 +275,6 @@ def _stream_app_id(checkpoint: str) -> str:
     return app_id
 
 
-class BatchGuard:
-    """At-least-once replay NARROWER for per-batch side effects that
-    have no transactional store of their own (external API calls,
-    non-table files): records the last applied batch id durably next
-    to the sink. NOT exactly-once — the mark lands after the effect, so
-    a crash between the two replays the batch on restart. Table sinks
-    should NOT use this: `ParquetUpsertTable.upsert_*` accept a
-    ``txn=(app_id, batch_id)`` that commits the batch id atomically
-    with the data itself (the Delta txn appId/version pattern)."""
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def last_applied(self) -> int:
-        try:
-            with open(self.path) as f:
-                return json.load(f)["batch_id"]
-        except (OSError, ValueError, KeyError):
-            return -1
-
-    def mark(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self.path)
-
-
 def accumulating_kpi_sink(
     stream_df: DataFrame,
     table: ParquetUpsertTable,
@@ -352,39 +282,26 @@ def accumulating_kpi_sink(
     sum_cols: tuple[str, ...],
     agg_fn,
     checkpoint: str,
-    exactly_once: bool = False,
 ) -> StreamingQuery:
     """ST7 — the POS KPI pattern as a stream: per micro-batch, aggregate
     with `agg_fn(df) -> (key_cols + sum_cols) DataFrame`, then additive-
     MERGE into the KPI table (reference transfom_pos.py:140-152).
 
-    Exactly-once ON THE SNAPSHOT MERGE PATH: there the batch id rides
-    in the table's atomic manifest commit (``txn=``) — data and batch
-    id land in one os.replace, so a crash can never add a batch without
-    recording it, and a replayed batch is a manifest-checked no-op.
-    When the KPI key embeds the table's partition column (the common
-    shape, e.g. (product_id, date) partitioned by date),
-    ``upsert_additive`` takes the partition-SCOPED path instead, whose
-    txn stamp lands just after the partition rewrite commits — a crash
-    inside that narrow gap replays the batch as a double-add on
-    restart (see ``upsert_additive``'s docstring). Pass
-    ``exactly_once=True`` to force the snapshot path on such a table
-    (data+txn in one atomic manifest swap, zero-width window) — the
-    right trade for modest KPI rollups, paid for by a full-table
-    rewrite per batch; leave it False for fact-sized accumulators and
-    accept the documented at-least-once edge. The per-stream app id
-    comes from ``_stream_app_id`` (stored in the checkpoint dir),
-    matching Structured Streaming's batch-id scope: a new checkpoint
-    restarts ids at 0 AND yields a fresh app id."""
+    Exactly-once: the batch id rides in the table's atomic manifest
+    commit (``txn=``) — data and batch id land in one os.replace, so a
+    crash can never add a batch without recording it, and a replayed
+    batch is a manifest-checked no-op. A txn-guarded merge always takes
+    the snapshot path, so this holds on every table layout; on a KPI
+    table partitioned by a key column it costs a full-table rewrite per
+    batch. The per-stream app id comes from ``_stream_app_id`` (stored
+    in the checkpoint dir), matching Structured Streaming's batch-id
+    scope: a new checkpoint restarts ids at 0 AND yields a fresh app
+    id."""
     app_id = _stream_app_id(checkpoint)
 
     def _batch(df: DataFrame, batch_id: int) -> None:
         table.upsert_additive(
-            agg_fn(df),
-            key_cols,
-            sum_cols,
-            txn=(app_id, batch_id),
-            force_snapshot=exactly_once,
+            agg_fn(df), key_cols, sum_cols, txn=(app_id, batch_id)
         )
 
     return run_available_now(stream_df, checkpoint, _batch)
@@ -402,8 +319,8 @@ def replacing_dim_sink(
     micro-batch, keep the latest row per key WITHIN the batch (ordered
     by ``order_col``), then replace-MERGE into the dimension table.
     Replace-merge is idempotent per batch content; the manifest txn
-    (``txn=``, committed atomically with the data on the snapshot
-    path) additionally skips replayed batches so a restart does not
+    (``txn=``, committed atomically with the data) additionally skips
+    replayed batches so a restart does not
     even pay the merge cost. App id = hash of the full checkpoint path
     (see ``_stream_app_id``)."""
     from pyspark.sql import Window

@@ -11,6 +11,7 @@ from __future__ import annotations
 import contextlib
 import csv
 import json
+import os
 
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
     ParquetUpsertTable,
@@ -98,3 +99,29 @@ def test_pipelines_run_no_jobs_of_their_own(spark, tmp_path, monkeypatch):
             total[pipeline, path] = own[pipeline, path] + _jobs(sc, table_group) - table_before
     assert own == {k: 0 for k in BUDGET}
     assert total == BUDGET
+
+
+def test_metadata_probes_run_no_job(spark, tmp_path):
+    """Existence, txn, version, row and byte probes read only the
+    manifest and parquet footers, so they submit no Spark job, on a
+    committed table and on an absent path alike."""
+    sc = spark.sparkContext
+    committed = ParquetUpsertTable(spark, str(tmp_path / "kpi"), partition_by=("d",))
+    committed.upsert_additive(
+        spark.createDataFrame([(1, "a", 2.0), (2, "b", 3.0)], "k long, d string, n double"),
+        ("k", "d"),
+        ("n",),
+        txn=("s", 0),
+    )
+    absent = ParquetUpsertTable(spark, str(tmp_path / "absent"))
+    for t, exists, txn, versions, rows in (
+        (committed, True, 0, [1], 2),
+        (absent, False, -1, [], 0),
+    ):
+        group = f"metadata-probes-{os.path.basename(t.path)}"
+        with _job_group(sc, group):
+            got = (t.exists(), t.last_txn("s"), t.versions(), t.row_count())
+            size = t.data_bytes()
+        assert got == (exists, txn, versions, rows)
+        assert (size > 0) == exists
+        assert _jobs(sc, group) == 0

@@ -3,6 +3,7 @@ upsert table."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
@@ -429,8 +430,10 @@ def test_upsert_txn_replay_is_noop_and_atomic_with_manifest(spark, tmp_path):
 
 
 def test_upsert_txn_scoped_path_stamps_manifest(spark, tmp_path):
-    """Partition-scoped merges (in-place dynamic overwrite) stamp the
-    txn on the active manifest right after the job; replays skip."""
+    """A txn-guarded merge on a table whose merges are otherwise
+    partition-scoped takes the snapshot path: its batch id is stamped
+    in the manifest swap of a NEW version, and replays skip. Without a
+    txn the same merge is partition-scoped again (rewritten in place)."""
     path = str(tmp_path / "kpi_scoped_txn")
     t = ParquetUpsertTable(spark, path, partition_by=("date",))
     b0 = spark.createDataFrame(
@@ -440,13 +443,21 @@ def test_upsert_txn_scoped_path_stamps_manifest(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(1, "2025-01-01", 2.0)], "pid long, date string, total double"
     )
-    t.upsert_additive(b1, ("pid", "date"), ("total",), txn=("s", 1))  # scoped
-    assert t.last_txn("s") == 1
+    t.upsert_additive(b1, ("pid", "date"), ("total",), txn=("s", 1))
+    assert t.last_txn("s") == 1 and t.versions() == [1, 2]
     t.upsert_additive(b1, ("pid", "date"), ("total",), txn=("s", 1))  # replay
+    assert t.versions() == [1, 2]
     # partition-type inference reads the date partition back as DATE —
     # compare on its string form
     out = {(r.pid, str(r.date)): r.total for r in t.read().collect()}
     assert out == {(1, "2025-01-01"): 12.0}
+
+    data_dir = t._data_dir()
+    t.upsert_additive(b1, ("pid", "date"), ("total",))  # scoped, in place
+    assert t._data_dir() == data_dir and t.versions() == [1, 2]
+    assert t.last_txn("s") == 1
+    out = {(r.pid, str(r.date)): r.total for r in t.read().collect()}
+    assert out == {(1, "2025-01-01"): 14.0}
 
 
 def test_upsert_additive_bootstrap_normalizes_grain_and_schema(spark, tmp_path):
@@ -464,27 +475,6 @@ def test_upsert_additive_bootstrap_normalizes_grain_and_schema(spark, tmp_path):
     b1 = spark.createDataFrame([(1, 1.0)], "pid long, total double")
     t.upsert_additive(b1, ("pid",), ("total",))
     assert {r.pid: r.total for r in t.read().collect()} == {1: 13.0, 2: 1.0}
-
-
-def test_txn_on_legacy_layout_fails_before_any_write(spark, tmp_path):
-    """A txn-guarded merge on a manifest-less (legacy bare-path) table
-    must refuse UP FRONT - completing the merge and then failing the
-    stamp would leave committed data with no batch id, the exact
-    replay hazard txn= exists to prevent."""
-    import pytest
-
-    path = str(tmp_path / "legacy")
-    spark.createDataFrame([(1, 10.0)], "pid long, total double").write.parquet(path)
-    t = ParquetUpsertTable(spark, path)
-    assert t.exists() and t._read_manifest() is None
-    b = spark.createDataFrame([(1, 1.0)], "pid long, total double")
-    with pytest.raises(ValueError, match="manifest-committed"):
-        t.upsert_additive(b, ("pid",), ("total",), txn=("s", 0))
-    # data untouched
-    assert {r.pid: r.total for r in t.read().collect()} == {1: 10.0}
-    # untagged merges on legacy layouts still work (and adopt the manifest)
-    t.upsert_additive(b, ("pid",), ("total",))
-    assert {r.pid: r.total for r in t.read().collect()} == {1: 11.0}
 
 
 def test_partition_evolution_rewrites_layout_and_persists_spec(spark, tmp_path):
@@ -608,69 +598,128 @@ def test_write_audit_publish_gates_the_commit(spark, tmp_path):
     assert t.read().count() == 2
 
 
-def test_scoped_txn_crash_window_vs_force_snapshot(spark, tmp_path, monkeypatch):
-    """The scoped additive path's documented at-least-once edge, and the
-    force_snapshot escape hatch that closes it.
+_KPI = "pid long, date string, total double"
 
-    Scoped path: a crash between the partition rewrite and the txn
-    stamp leaves committed data with no batch id — restart replays the
-    batch as a DOUBLE-ADD (exactly what the docstring warns).
-    force_snapshot=True: data and txn ride one atomic manifest swap, so
-    the same crash point cannot exist — a crash before the swap leaves
-    the old snapshot AND old txn intact, and the replay applies once."""
-    import pytest
 
-    rows = "pid long, date string, total double"
-    b0 = spark.createDataFrame([(1, "2025-01-01", 10.0)], rows)
-    b1 = spark.createDataFrame([(1, "2025-01-01", 5.0)], rows)
-
-    # --- scoped path: the window is real (documented, not fixed) ---
-    t = ParquetUpsertTable(spark, str(tmp_path / "scoped"), partition_by=("date",))
-    t.upsert_additive(b0, ("pid", "date"), ("total",), txn=("s", 0))
-    orig_stamp = t._stamp_txn
-
-    def crash_stamp(app_id, batch_id):
-        raise RuntimeError("injected crash after partition job, before txn stamp")
-
-    monkeypatch.setattr(t, "_stamp_txn", crash_stamp)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        t.upsert_additive(b1, ("pid", "date"), ("total",), txn=("s", 1))
-    monkeypatch.setattr(t, "_stamp_txn", orig_stamp)
-    assert t.last_txn("s") == 0  # data landed, batch id didn't
-    # restart replays batch 1 -> double-add (10 + 5 + 5)
-    t.upsert_additive(b1, ("pid", "date"), ("total",), txn=("s", 1))
-    assert t.read().collect()[0].total == 20.0
-
-    # --- force_snapshot: zero-width window on the same table shape ---
-    t2 = ParquetUpsertTable(spark, str(tmp_path / "snap"), partition_by=("date",))
-    t2.upsert_additive(
-        b0, ("pid", "date"), ("total",), txn=("s", 0), force_snapshot=True
+def _kpi_rows(t: ParquetUpsertTable) -> list[tuple]:
+    return sorted(
+        (r.pid, str(r.date), r.total)
+        for r in t.read().select("pid", "date", "total").collect()
     )
-    orig_commit = t2._commit
 
-    def crash_commit(version, dir_name, txn=None):
+
+def _audit_passes(df):
+    from group_2_shopware_enterprise_data_engineering_project_spark.operators import validate
+
+    return validate.expectation_report(df, unique_cols=["pid"])
+
+
+# writer -> (write on a table holding _KPI rows (1, 01-01, 10.0) and
+# (2, 01-02, 20.0) committed under txn ("s", 0); rows after it applied
+# once; whether the write carries txn ("s", 1)). The table is
+# partitioned by date and every key holds date, so without a txn the
+# merges would be partition-scoped.
+_SNAPSHOT_WRITERS = {
+    "upsert_replace": (
+        lambda t, spark: t.upsert_replace(
+            spark.createDataFrame([(1, "2025-01-01", 5.0)], _KPI),
+            ("pid", "date"),
+            txn=("s", 1),
+        ),
+        [(1, "2025-01-01", 5.0), (2, "2025-01-02", 20.0)],
+        True,
+    ),
+    "upsert_additive": (
+        lambda t, spark: t.upsert_additive(
+            spark.createDataFrame([(1, "2025-01-01", 5.0)], _KPI),
+            ("pid", "date"),
+            ("total",),
+            txn=("s", 1),
+        ),
+        [(1, "2025-01-01", 15.0), (2, "2025-01-02", 20.0)],
+        True,
+    ),
+    "delete_keys": (
+        lambda t, spark: t.delete_keys(
+            spark.createDataFrame([(2,)], "pid long"), ("pid",), txn=("s", 1)
+        ),
+        [(1, "2025-01-01", 10.0)],
+        True,
+    ),
+    "apply_cdc": (
+        lambda t, spark: t.apply_cdc(
+            spark.createDataFrame(
+                [("D", 2, None, 0.0, 1), ("I", 3, "2025-01-03", 7.0, 1)],
+                "op string, pid long, date string, total double, seq long",
+            ).withColumn("date", F.col("date").cast("date")),
+            ("pid",),
+            "seq",
+            txn=("s", 1),
+        ),
+        [(1, "2025-01-01", 10.0), (3, "2025-01-03", 7.0)],
+        True,
+    ),
+    "create_or_overwrite": (
+        lambda t, spark: t.create_or_overwrite(
+            spark.createDataFrame([(4, "2025-01-04", 1.0)], _KPI), txn=("s", 1)
+        ),
+        [(4, "2025-01-04", 1.0)],
+        True,
+    ),
+    "write_audit_publish": (
+        lambda t, spark: t.write_audit_publish(
+            spark.createDataFrame([(4, "2025-01-04", 1.0)], _KPI), _audit_passes
+        ),
+        [(4, "2025-01-04", 1.0)],
+        False,
+    ),
+    "evolve_partitioning": (
+        lambda t, spark: t.evolve_partitioning(("pid",)),
+        [(1, "2025-01-01", 10.0), (2, "2025-01-02", 20.0)],
+        False,
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_SNAPSHOT_WRITERS))
+def test_commit_crash_keeps_state_and_replays_once(spark, tmp_path, monkeypatch, writer):
+    """Every snapshot writer commits through the one manifest swap: a
+    crash before it leaves the previous rows, versions and txn stamps
+    as they were; the replay applies once; a second replay changes
+    nothing (a txn-guarded one does not even commit)."""
+    write, want, guarded = _SNAPSHOT_WRITERS[writer]
+    path = str(tmp_path / "t")
+    t = ParquetUpsertTable(spark, path, partition_by=("date",))
+    t.upsert_additive(
+        spark.createDataFrame(
+            [(1, "2025-01-01", 10.0), (2, "2025-01-02", 20.0)], _KPI
+        ),
+        ("pid", "date"),
+        ("total",),
+        txn=("s", 0),
+    )
+    rows, versions = _kpi_rows(t), t.versions()
+
+    def crash(version, dir_name, txn=None):
         raise RuntimeError("injected crash before manifest swap")
 
-    monkeypatch.setattr(t2, "_commit", crash_commit)
+    monkeypatch.setattr(t, "_commit", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
-        t2.upsert_additive(
-            b1, ("pid", "date"), ("total",), txn=("s", 1), force_snapshot=True
-        )
-    monkeypatch.setattr(t2, "_commit", orig_commit)
-    # crash before the swap: old snapshot AND old txn both intact
-    assert t2.last_txn("s") == 0
-    assert t2.read().collect()[0].total == 10.0
-    # replay applies exactly once
-    t2.upsert_additive(
-        b1, ("pid", "date"), ("total",), txn=("s", 1), force_snapshot=True
-    )
-    assert t2.last_txn("s") == 1
-    assert t2.read().collect()[0].total == 15.0
-    # and a second replay is a manifest-checked no-op
-    t2.upsert_additive(
-        b1, ("pid", "date"), ("total",), txn=("s", 1), force_snapshot=True
-    )
-    assert t2.read().collect()[0].total == 15.0
+        write(t, spark)
+
+    fresh = ParquetUpsertTable(spark, path)
+    assert _kpi_rows(fresh) == rows
+    assert fresh.versions() == versions
+    assert fresh.last_txn("s") == 0
+
+    write(fresh, spark)
+    assert _kpi_rows(fresh) == want
+    assert fresh.last_txn("s") == (1 if guarded else 0)
+    versions = fresh.versions()
+    write(fresh, spark)
+    assert _kpi_rows(fresh) == want
+    if guarded:
+        assert fresh.versions() == versions
 
 
 def test_merge_cdc_latest_wins_and_ops(spark):
@@ -979,13 +1028,7 @@ def test_row_count_reads_footers_of_the_files_spark_scans(spark, tmp_path):
     _assert_footers_match_read(kpi)
     assert kpi.row_count() == 13
 
-    legacy_path = str(tmp_path / "legacy")
-    spark.createDataFrame(rows, schema).write.parquet(legacy_path)
-    legacy = ParquetUpsertTable(spark, legacy_path)
-    assert legacy._read_manifest() is None
-    _assert_footers_match_read(legacy)
-
-    for t in (flat, part, kpi, legacy):
+    for t in (flat, part, kpi):
         before = t.row_count()
         _plant_strays(t._data_dir(), os.path.join(t.path, "v000099"))
         _assert_footers_match_read(t)
@@ -1009,3 +1052,57 @@ def test_empty_partitioned_snapshot_reads_back_and_merges(spark, tmp_path):
     t.upsert_additive(b.select("pid", F.col("date").cast("date"), "total"), ("pid", "date"), ("total",))
     assert [(r.pid, str(r.date), r.total) for r in t.read().collect()] == [(1, "2025-01-01", 2.0)]
     _assert_footers_match_read(t)
+
+
+def _listing(root: str) -> dict[str, float]:
+    import os
+
+    return {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _dirs, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_constructor_refuses_a_parquet_dir_without_manifest(spark, tmp_path):
+    """A plain parquet dir is not a table this class committed: opening
+    it raises instead of hiding its files behind a first snapshot, and
+    leaves them as they were."""
+    path = str(tmp_path / "plain")
+    spark.createDataFrame([(1, 10.0)], "pid long, total double").write.parquet(path)
+    before = _listing(path)
+    with pytest.raises(ValueError, match="_MANIFEST.json"):
+        ParquetUpsertTable(spark, path)
+    assert _listing(path) == before
+
+
+def test_orphan_first_snapshot_is_overwritten_by_the_next_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A crash before the first manifest swap leaves a partitioned
+    v000001 and no manifest. The path still opens as an absent table,
+    and the next write commits over the orphan."""
+    import os
+
+    path = str(tmp_path / "t")
+    t = ParquetUpsertTable(spark, path, partition_by=("date",))
+
+    def crash(version, dir_name, txn=None):
+        raise RuntimeError("injected crash before manifest swap")
+
+    monkeypatch.setattr(t, "_commit", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        t.create_or_overwrite(spark.createDataFrame([(9, "2025-01-09", 9.0)], _KPI))
+    assert sorted(os.listdir(path)) == ["v000001"]
+
+    reopened = ParquetUpsertTable(spark, path, partition_by=("date",))
+    assert not reopened.exists() and reopened.versions() == []
+    assert reopened.row_count() == 0 and reopened.last_txn("s") == -1
+    reopened.upsert_additive(
+        spark.createDataFrame([(1, "2025-01-01", 10.0)], _KPI),
+        ("pid", "date"),
+        ("total",),
+        txn=("s", 0),
+    )
+    assert reopened.versions() == [1] and reopened.last_txn("s") == 0
+    assert _kpi_rows(reopened) == [(1, "2025-01-01", 10.0)]

@@ -199,8 +199,6 @@ REPO = os.path.dirname(PKG)
 UNCONSUMED_ALLOWLIST: dict[tuple[str, str], str] = {
     ("functions/layout.py", "linear_write"): "single-column layout baseline that tests/test_layout.py compares Z-order against",
     ("functions/partitioning.py", "salted_agg"): "two-phase skewed-key aggregation, exercised only by tests/test_partitioning.py",
-    ("operators/merge.py", "delta_upsert_additive"): "Delta MERGE path, gated on delta-spark (tests/test_delta_interop.py)",
-    ("operators/merge.py", "delta_upsert_replace"): "Delta MERGE path, gated on delta-spark (tests/test_delta_interop.py)",
     ("operators/similarity.py", "pq_codebook_kmeans"): "trained PQ codebook, exercised only by tests/test_similarity.py",
     ("operators/similarity.py", "pq_encode"): "standalone PQ encoder; pq_topk and ivfpq_topk share its fold (_pq_encode) so each packs the codebook once; exercised only by tests/test_similarity.py",
     ("operators/stats.py", "hll_merge"): "shard-wise HLL register merge, exercised only by tests/test_search_stats.py",
@@ -212,9 +210,7 @@ UNCONSUMED_ALLOWLIST: dict[tuple[str, str], str] = {
     ("sinks.py", "checked_write"): "expectation-gated write, exercised only by tests/test_validate.py",
     ("sources/tables.py", "load_tables"): "public loader of every testdata table; no caller",
     ("sources/tables.py", "register_views"): "temp-view SQL surface, exercised only by tests/test_sources.py",
-    ("streaming/micro_batch.py", "BatchGuard"): "at-least-once replay guard, exercised only by tests/test_streaming.py",
     ("streaming/micro_batch.py", "hour_partitioned_sink"): "no caller; sole user of the module's write_hour_partitioned import, which perfbench/layers.py patches",
-    ("streaming/micro_batch.py", "stream_kafka_source"): "Kafka source, gated on the Kafka connector (tests/test_streaming.py)",
     ("streaming/polling.py", "run_polling_loop"): "reference poll loop, exercised only by tests/test_streaming.py",
     ("streaming/stateful.py", "running_counts"): "stateful running count, exercised only by tests/test_streaming.py",
 }

@@ -18,7 +18,7 @@ from group_2_shopware_enterprise_data_engineering_project_spark.schemas import (
 )
 from group_2_shopware_enterprise_data_engineering_project_spark.streaming import alerts
 from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
-    BatchGuard,
+    _stream_app_id,
     accumulating_kpi_sink,
     stream_json_source,
     run_available_now,
@@ -135,11 +135,56 @@ def test_accumulating_kpi_batch_guard(spark, tmp_path):
     assert {r.customer_id: r.n for r in table.read().collect()} == {1: 5.0}
 
 
-def test_batch_guard_roundtrip(tmp_path):
-    g = BatchGuard(str(tmp_path / "meta" / "last.json"))
-    assert g.last_applied() == -1
-    g.mark(7)
-    assert g.last_applied() == 7
+def test_accumulating_kpi_replay_after_crash_adds_once(spark, tmp_path, monkeypatch):
+    """A crash before batch 1's manifest swap fails the stream; the
+    restart replays batch 1 from the checkpoint and it adds exactly
+    once. The KPI key holds the table's partition column, the shape
+    whose merges are otherwise partition-scoped."""
+    src_dir = tmp_path / "in"
+    _write_jsonl(src_dir / "f1.jsonl", _crm_rows(3, cid=1))
+    _write_jsonl(src_dir / "f2.jsonl", _crm_rows(2, cid=1, start_ts=1.8e9))
+    t1 = os.path.getmtime(src_dir / "f1.jsonl")
+    os.utime(src_dir / "f2.jsonl", (t1 + 10, t1 + 10))  # f1 is batch 0
+    path = str(tmp_path / "kpi")
+    table = ParquetUpsertTable(spark, path, partition_by=("channel",))
+
+    def agg(df):
+        return df.groupBy("customer_id", "channel").agg(
+            F.count(F.lit(1)).cast("double").alias("n")
+        )
+
+    def run(t):
+        stream = stream_json_source(spark, str(src_dir), CRM_INTERACTION_SCHEMA)
+        accumulating_kpi_sink(
+            stream, t, ("customer_id", "channel"), ("n",), agg, str(tmp_path / "ckpt")
+        )
+
+    def totals(t):
+        return {(r.customer_id, r.channel): r.n for r in t.read().collect()}
+
+    commit = table._commit
+
+    def crash_on_batch_1(version, dir_name, txn=None):
+        if txn is not None and txn[1] == 1:
+            raise RuntimeError("injected crash before manifest swap")
+        commit(version, dir_name, txn=txn)
+
+    monkeypatch.setattr(table, "_commit", crash_on_batch_1)
+    with pytest.raises(Exception, match="injected crash"):
+        run(table)
+    app_id = _stream_app_id(str(tmp_path / "ckpt"))
+    restarted = ParquetUpsertTable(spark, path)
+    assert totals(restarted) == {(1, "web"): 3.0}
+    assert restarted.last_txn(app_id) == 0
+    assert restarted.versions() == [1]
+
+    run(restarted)  # batch 1 replays from the checkpoint
+    assert totals(restarted) == {(1, "web"): 5.0}
+    assert restarted.last_txn(app_id) == 1
+    versions = restarted.versions()
+    run(restarted)  # nothing left to replay
+    assert totals(restarted) == {(1, "web"): 5.0}
+    assert restarted.versions() == versions
 
 
 def test_stream_app_id_survives_checkpoint_relocation(tmp_path):
@@ -281,21 +326,6 @@ def test_time_bound_trigger_processing_time(spark, tmp_path):
         assert spark.read.parquet(str(out)).count() == 11
     finally:
         q.stop()
-
-
-def test_kafka_source_gate_names_missing_connector(spark):
-    """The network source shares stream_json_source's interface; without
-    the kafka connector jar it must fail fast with the package name,
-    not an opaque ClassNotFound at start()."""
-    from pyspark.sql import types as T
-
-    from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
-        stream_kafka_source,
-    )
-
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    with pytest.raises(ImportError, match="spark-sql-kafka"):
-        stream_kafka_source(spark, "localhost:9092", "events", schema)
 
 
 def test_streaming_dedup_ttl_expires_and_readmits(spark, tmp_path):
@@ -491,46 +521,6 @@ def test_watermark_append_mode_drops_late_data(spark, tmp_path):
     # hour 10 emitted with the ON-TIME count only; the late event never
     # resurfaces it. hour 12 stays open (watermark hasn't passed it).
     assert got == {10: 12}
-
-
-def _kafka_connector_available(spark) -> bool:
-    """True iff the spark-sql-kafka connector is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def test_kafka_source_plan_when_connector_present(spark):
-    """Skip-gated integration half of the S6 Kafka path: when the
-    connector package IS on the classpath, stream_kafka_source must
-    build a typed streaming plan (schema applied via from_json) without
-    needing a live broker — load() is plan-time only. Keeps the network
-    source from silently rotting in environments that do ship the jar;
-    here it records an explicit skip reason instead of fake-passing."""
-    from pyspark.sql import types as T
-
-    from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
-        stream_kafka_source,
-    )
-
-    if not _kafka_connector_available(spark):
-        pytest.skip(
-            "spark-sql-kafka-0-10 connector not on classpath; the "
-            "fail-fast gate test covers this environment (re-probed "
-            "2026-08-16 r10-r12 and 2026-08-18 r13: pyspark/jars has "
-            "zero kafka jars and the package index host does not "
-            "resolve — see test_delta_interop.py)"
-        )
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    df = stream_kafka_source(spark, "localhost:9092", "events", schema)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == ["k", "v"]
 
 
 def test_stream_sessions_merge_across_batches(spark, tmp_path):
