@@ -25,7 +25,7 @@ def range_to_null(col: Column | str, lo, hi) -> Column:
     return F.when(c.between(F.lit(lo), F.lit(hi)), c).otherwise(F.lit(None))
 
 
-def anon_id(*seed_cols: Column | str, prefix: str = "anon") -> Column:
+def anon_id(*seed_cols: Column | str) -> Column:
     """Deterministic surrogate id: `anon` + first 8 hex of sha2 over the
     seed columns.
 
@@ -35,6 +35,6 @@ def anon_id(*seed_cols: Column | str, prefix: str = "anon") -> Column:
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in seed_cols]
     return F.concat(
-        F.lit(prefix),
+        F.lit("anon"),
         F.substring(F.sha2(F.concat_ws("\x1f", *[c.cast("string") for c in cols]), 256), 1, 8),
     )

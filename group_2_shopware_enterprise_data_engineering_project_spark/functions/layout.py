@@ -63,7 +63,6 @@ def zorder_write(
     col_a: str,
     col_b: str,
     n_files: int,
-    mode: str = "overwrite",
 ) -> None:
     """Write df as ~n_files parquet files clustered along the Morton
     curve of (col_a, col_b). Timestamp/date columns are handled via
@@ -93,20 +92,18 @@ def zorder_write(
         .repartitionByRange(n_files, "_zcode")
         .sortWithinPartitions("_zcode")
         .drop("_zcode", f"_z_{col_a}", f"_z_{col_b}")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def linear_write(
-    df: DataFrame, path: str, col_a: str, n_files: int, mode: str = "overwrite"
-) -> None:
+def linear_write(df: DataFrame, path: str, col_a: str, n_files: int) -> None:
     """Single-dimension sort layout (the baseline Z-order beats on
     multi-dimensional predicates)."""
     (
         df.repartitionByRange(n_files, col_a)
         .sortWithinPartitions(col_a)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -202,7 +199,7 @@ BLOOM_M_BITS = 1 << 16
 BLOOM_K = 5
 
 
-def _bloom_pos_cols(value_col, m_bits: int, k: int):
+def _bloom_pos_cols(value_col):
     """Kirsch-Mitzenmacher double hashing on md5 hex (mirrored exactly
     by `_bloom_positions_py` — md5 is the one hash both Spark and the
     Python prober share bit-for-bit)."""
@@ -216,29 +213,31 @@ def _bloom_pos_cols(value_col, m_bits: int, k: int):
                 16,
                 10,
             ).cast("long")
-            % m_bits
+            % BLOOM_M_BITS
         )
 
     h1, h2 = h("b1:"), h("b2:")
     return F.array(
-        *[F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits)) for j in range(1, k + 1)]
+        *[
+            F.pmod(h1 + F.lit(j) * h2, F.lit(BLOOM_M_BITS))
+            for j in range(1, BLOOM_K + 1)
+        ]
     )
 
 
-def _bloom_positions_py(value: str, m_bits: int, k: int) -> list[int]:
+def _bloom_positions_py(value: str) -> list[int]:
     import hashlib
 
-    h1 = int(hashlib.md5(f"b1:{value}".encode()).hexdigest()[:15], 16) % m_bits
-    h2 = int(hashlib.md5(f"b2:{value}".encode()).hexdigest()[:15], 16) % m_bits
-    return [(h1 + j * h2) % m_bits for j in range(1, k + 1)]
+    m = BLOOM_M_BITS
+    h1 = int(hashlib.md5(f"b1:{value}".encode()).hexdigest()[:15], 16) % m
+    h2 = int(hashlib.md5(f"b2:{value}".encode()).hexdigest()[:15], 16) % m
+    return [(h1 + j * h2) % m for j in range(1, BLOOM_K + 1)]
 
 
-def build_bloom_index(
-    spark, path: str, col: str, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
-):
+def build_bloom_index(spark, path: str, col: str):
     """{file -> set(bit positions)} for every distinct value per file.
     One distinct + explode over the scan; per-file state is bounded by
-    m_bits regardless of cardinality. At warehouse scale the position
+    BLOOM_M_BITS regardless of cardinality. At warehouse scale the position
     sets persist as a parquet bitmap index next to the data — the
     in-memory dict is the local-mode materialization of the same
     thing."""
@@ -252,16 +251,14 @@ def build_bloom_index(
         .distinct()
     )
     pos = df.select(
-        "f", F.explode(_bloom_pos_cols(F.col("v"), m_bits, k)).alias("p")
+        "f", F.explode(_bloom_pos_cols(F.col("v"))).alias("p")
     ).distinct()
     rows = pos.groupBy("f").agg(F.collect_set("p").alias("ps")).collect()
     return {r["f"]: frozenset(int(p) for p in r["ps"]) for r in rows}
 
 
-def prune_files_bloom(
-    index: dict, value, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
-) -> list[str]:
+def prune_files_bloom(index: dict, value) -> list[str]:
     """Files that MAY contain `value` (equality probe). Never excludes
     a file that does contain it."""
-    probe = _bloom_positions_py(str(value), m_bits, k)
+    probe = _bloom_positions_py(str(value))
     return [f for f, ps in sorted(index.items()) if all(p in ps for p in probe)]

@@ -18,8 +18,7 @@ sales KPI 3.3s -> 4.4s with a forced repartition).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -27,37 +26,3 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def salted_agg(
-    df: DataFrame,
-    key_cols: list[str],
-    aggs: dict[str, tuple[str, Column]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys: aggregate on
-    (key, salt) first — spreading one hot key over `salt_buckets`
-    reducers — then combine partials per key.
-
-    `aggs` maps output column -> (combine_fn_name, partial_expr), e.g.
-    ``{"n": ("sum", F.count(F.lit(1))), "mx": ("max", F.max("v"))}``
-    (the combiner must be decomposable: sum/min/max/count-as-sum).
-
-    AQE's skew handling only rewrites sort-merge JOINS; a skewed
-    groupBy still funnels each hot key through a single reducer, which
-    is where this helps. For algebraic aggregates Spark's partial
-    aggregation usually makes salting unnecessary — reach for this when
-    map-side combining is defeated (e.g. high-cardinality intermediate
-    state like collect_set, or exact distinct counts per hot key).
-    """
-    salt = (F.spark_partition_id() % salt_buckets).alias("_salt")
-    partial = df.groupBy(*key_cols, salt).agg(
-        *[expr.alias(f"_p_{out}") for out, (_, expr) in aggs.items()]
-    )
-    combiner = {"sum": F.sum, "min": F.min, "max": F.max}
-    return partial.groupBy(*key_cols).agg(
-        *[
-            combiner[fn](f"_p_{out}").alias(out)
-            for out, (fn, _) in aggs.items()
-        ]
-    )

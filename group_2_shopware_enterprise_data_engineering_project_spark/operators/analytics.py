@@ -115,7 +115,6 @@ def loyalty_metrics(
     orders: DataFrame,
     key_col: str = "o_custkey",
     flag_col: str = "o_orderstatus",
-    loyalty_value: str = "F",
     measure_col: str = "o_totalprice",
 ) -> DataFrame:
     """A4 — per-customer loyalty metrics.
@@ -125,7 +124,7 @@ def loyalty_metrics(
     AVG(rating). Realized on orders: 'loyalty interaction' := order with
     o_orderstatus = 'F'; rating := o_totalprice.
     """
-    is_loyal = F.when(F.col(flag_col) == loyalty_value, 1).otherwise(0)
+    is_loyal = F.when(F.col(flag_col) == "F", 1).otherwise(0)
     n = F.count(F.lit(1))
     loyal = F.sum(is_loyal)
     # avg over exact integer cents (order-independent), final scalar
@@ -153,7 +152,6 @@ def alert_count(
     ts_col: str = "ts",
     value_col: str = "value",
     negative_threshold: float = 100.0,
-    alert_min_count: int = 10,
 ) -> DataFrame:
     """A5 — conditional count over an hour-aligned window + alert flag.
 
@@ -172,7 +170,7 @@ def alert_count(
     )
     return filtered.agg(
         F.count(F.lit(1)).alias("negative_count"),
-        (F.count(F.lit(1)) >= F.lit(alert_min_count)).alias("alert"),
+        (F.count(F.lit(1)) >= F.lit(10)).alias("alert"),
     )
 
 
@@ -281,13 +279,15 @@ def date_range_summary(
     )
 
 
-def approx_engagement_stats(
-    events: DataFrame, rsd: float = 0.02, pct_err: int = 100
-) -> DataFrame:
+#: Rank-error denominator of the approximate percentiles (error 1/100).
+PCT_ERR = 100
+
+
+def approx_engagement_stats(events: DataFrame, rsd: float = 0.02) -> DataFrame:
     """Sketch-based per-event-type stats: HLL++ distinct users
     (`approx_count_distinct`, relative sd `rsd`) and KLL-style
     approximate value percentiles (`percentile_approx`, rank error
-    1/`pct_err`).
+    1/PCT_ERR).
 
     At 100 TB these replace their exact siblings (A-family
     countDistinct, m10 exact percentiles): exact distinct shuffles
@@ -302,22 +302,17 @@ def approx_engagement_stats(
     return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.approx_count_distinct("user_id", rsd).alias("approx_users"),
-        F.percentile_approx("value", F.lit(0.5), F.lit(pct_err)).alias("p50_approx"),
-        F.percentile_approx("value", F.lit(0.99), F.lit(pct_err)).alias("p99_approx"),
+        F.percentile_approx("value", F.lit(0.5), F.lit(PCT_ERR)).alias("p50_approx"),
+        F.percentile_approx("value", F.lit(0.99), F.lit(PCT_ERR)).alias("p99_approx"),
     )
 
 
-def sketch_accuracy_report(
-    events: DataFrame,
-    rsd: float = 0.02,
-    pct_err: int = 100,
-    users_tol: float = 0.10,
-) -> DataFrame:
+def sketch_accuracy_report(events: DataFrame) -> DataFrame:
     """Driver-checkable accuracy audit of `approx_engagement_stats`:
     recompute the exact stats and emit per-group BOOLEANS asserting the
     sketches landed inside their published error bounds — 5-sigma on
-    the HLL++ user count (`users_tol`), 2x the KLL rank-error `1/
-    pct_err` on each percentile. Booleans (not the approx values) are
+    the HLL++ user count (10% of the exact count), 2x the KLL
+    rank-error 1/PCT_ERR on each percentile. Booleans (not the approx values) are
     what the oracle hashes, so an approximation becomes exactly
     verifiable: the DuckDB side computes the same exact counts and
     literal TRUEs, and any out-of-bound sketch breaks the hash.
@@ -327,8 +322,8 @@ def sketch_accuracy_report(
     query only — production reads `approx_engagement_stats`, whose
     constant-memory merge is the point at 100 TB.
     """
-    approx = F.broadcast(approx_engagement_stats(events, rsd, pct_err))
-    eps = 2.0 / pct_err  # 2x slack over the sketch's nominal rank error
+    approx = F.broadcast(approx_engagement_stats(events))
+    eps = 2.0 / PCT_ERR  # 2x slack over the sketch's nominal rank error
     joined = events.join(approx, "event_type")
     agg = joined.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -353,7 +348,7 @@ def sketch_accuracy_report(
         "n_users_exact",
         (
             F.abs(F.col("au") - F.col("n_users_exact"))
-            <= F.lit(users_tol) * F.col("n_users_exact")
+            <= F.lit(0.10) * F.col("n_users_exact")
         ).alias("users_within_bound"),
         _rank_ok("lt50", "le50", 0.5).alias("p50_rank_ok"),
         _rank_ok("lt99", "le99", 0.99).alias("p99_rank_ok"),
@@ -367,30 +362,30 @@ FUNNEL_STEPS = ("view", "click", "purchase")
 
 def funnel(
     events: DataFrame,
-    steps: tuple[str, ...] = FUNNEL_STEPS,
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    tiebreak: str = "event_id",
 ) -> DataFrame:
-    """Strict-order funnel conversion: per user, step i counts only if
-    an event of steps[i] occurs AFTER the first completion of
-    steps[i-1] (first-touch semantics, (ts, tiebreak) total order).
+    """Strict-order funnel conversion over FUNNEL_STEPS: per user, step
+    i counts only if an event of steps[i] occurs AFTER the first
+    completion of steps[i-1] (first-touch semantics, (ts, event_id)
+    total order).
     Output: one row per step with the user count that reached it — the
     classic product-analytics conversion query.
 
     Scale shape: ONE shuffle. Events are filtered to funnel types,
-    grouped per user into a time-sorted (ts, tiebreak, type) array,
+    grouped per user into a time-sorted (ts, event_id, type) array,
     and a codegen fold walks it carrying one timestamp per step —
     per-user state is O(len(steps)), per-task memory is bounded by a
     user's own funnel events. The window/self-join formulation (which
     the DuckDB oracle deliberately uses as an INDEPENDENT mirror)
     would shuffle per-step candidate sets instead.
     """
+    steps = FUNNEL_STEPS
     ev = events.filter(F.col(type_col).isin(*steps)).select(
         F.col(user_col).alias("user_id"),
         F.col(ts_col).alias("ts"),
-        F.col(tiebreak).alias("tb"),
+        F.col("event_id").alias("tb"),
         F.col(type_col).alias("et"),
     )
     per_user = ev.groupBy("user_id").agg(
@@ -473,10 +468,9 @@ def item_cooccurrence(
     lineitem: DataFrame,
     order_col: str = "l_orderkey",
     item_col: str = "l_partkey",
-    top_n: int = 20,
     max_basket: int = 50,
 ) -> DataFrame:
-    """Market-basket pair mining: the ``top_n`` item pairs most often
+    """Market-basket pair mining: the 20 item pairs most often
     bought in the same order.
 
     Scale shape: distinct (order, item) first (shrinks multi-line
@@ -507,22 +501,18 @@ def item_cooccurrence(
     )
     cut = pairs.orderBy(
         F.col("n_orders").desc(), F.col("item_a").asc(), F.col("item_b").asc()
-    ).limit(top_n)
+    ).limit(20)
     w = Window.orderBy(
         F.col("n_orders").desc(), F.col("item_a").asc(), F.col("item_b").asc()
     )
     return cut.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def last_touch_attribution(
-    events: DataFrame,
-    touch_types: tuple[str, ...] = ("click", "view"),
-    conversion_type: str = "purchase",
-    lookback_days: int = 1,
-) -> DataFrame:
-    """Last-touch marketing attribution: each conversion is credited to
-    the user's most recent touch event at or before the conversion;
-    touches older than ``lookback_days`` — or absent entirely — fall
+def last_touch_attribution(events: DataFrame) -> DataFrame:
+    """Last-touch marketing attribution: each 'purchase' conversion is
+    credited to the user's most recent 'click' or 'view' touch at or
+    before the conversion; touches older than one day — or absent
+    entirely — fall
     to the 'direct' channel. Emits per-channel conversion counts and
     exact-cents attributed revenue.
 
@@ -538,7 +528,7 @@ def last_touch_attribution(
         asof_join,
     )
 
-    conv = events.filter(F.col("event_type") == conversion_type).select(
+    conv = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("buy_id"),
         "user_id",
         F.col("ts").alias("buy_ts"),
@@ -550,7 +540,7 @@ def last_touch_attribution(
     # (SQL join equality never matches NULL — this filter makes the
     # window formulation agree with that semantics by construction).
     touch = events.filter(
-        F.col("event_type").isin(*touch_types) & F.col("user_id").isNotNull()
+        F.col("event_type").isin("click", "view") & F.col("user_id").isNotNull()
     ).select("user_id", "ts", "event_type", "event_id")
     matched = asof_join(
         conv,
@@ -571,7 +561,7 @@ def last_touch_attribution(
         "value",
         F.when(
             F.col("touch_ts")
-            >= F.col("buy_ts") - F.expr(f"INTERVAL {int(lookback_days)} DAY"),
+            >= F.col("buy_ts") - F.expr("INTERVAL 1 DAY"),
             F.col("touch_channel"),
         )
         .otherwise(F.lit("direct"))

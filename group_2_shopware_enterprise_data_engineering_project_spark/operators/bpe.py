@@ -127,11 +127,10 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    min_count: int = 2,
 ) -> list[tuple[str, str, int]]:
     """Learn up to ``n_merges`` BPE merges; returns [(left, right,
-    pair_count)] in merge order. Stops early when no pair reaches
-    ``min_count``."""
+    pair_count)] in merge order. Stops early when no pair occurs at
+    least twice."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
     # Lazy persist: the first iteration's collect materializes the
@@ -167,7 +166,7 @@ def bpe_train(
             if prev is not None:
                 prev.unpersist()
                 prev = None
-            if not top or top[0]["n"] < min_count:
+            if not top or top[0]["n"] < 2:
                 break
             a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
             merges.append((a, b, n))

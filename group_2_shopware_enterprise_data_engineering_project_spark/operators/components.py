@@ -19,7 +19,7 @@ graphs, which propagation finishes in those 2-4 rounds.
 Scale notes: each round is one join (labels onto edge endpoints — the
 edge list shuffles on src, the labels on id) plus one min-groupBy with
 map-side combine. Labels are (id, label) longs only — never payloads.
-The loop's lineage is cut by localCheckpoint every ``checkpoint_every``
+The loop's lineage is cut by localCheckpoint every CC_CHECKPOINT_EVERY
 rounds (unbounded lineage would make round k replay rounds 1..k-1);
 the per-round convergence test is an isEmpty() action over the changed
 set, O(1) result on the driver (the standard distributed-CC stopping
@@ -41,6 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: Label-propagation rounds between lineage truncations.
+CC_CHECKPOINT_EVERY = 5
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -48,7 +52,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Label every node with the minimum node id reachable through
     ``edges`` (undirected). Returns (id, cluster_rep).
@@ -76,7 +79,7 @@ def connected_components(
             new_labels = (
                 labels.union(msgs).groupBy("id").agg(F.min("label").alias("label"))
             )
-            if (i + 1) % checkpoint_every == 0:
+            if (i + 1) % CC_CHECKPOINT_EVERY == 0:
                 new_labels = new_labels.localCheckpoint(eager=False)
             new_labels = new_labels.persist()
 
@@ -103,20 +106,18 @@ def dedup_verdicts(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    pair_a: str = "doc_a",
-    pair_b: str = "doc_b",
 ) -> DataFrame:
-    """Near-dup pairs -> per-document dedup verdict: cluster
+    """Near-dup (doc_a, doc_b) pairs -> per-document dedup verdict: cluster
     representative (min doc_id in the connected cluster) and a keep
     flag (representative survives, other members drop). Documents in
     no pair keep themselves.
     """
     cc = connected_components(
         docs.select(id_col),
-        pairs.select(pair_a, pair_b),
+        pairs.select("doc_a", "doc_b"),
         id_col=id_col,
-        src_col=pair_a,
-        dst_col=pair_b,
+        src_col="doc_a",
+        dst_col="doc_b",
     )
     return cc.select(
         F.col("id").alias(id_col),

@@ -13,8 +13,9 @@ corpus — so its distinct n-gram digests BROADCAST and the corpus-side
 probe is a map-side hash semi-join: the corpus never shuffles, never
 materializes its exploded n-grams past the probe, and the only thing
 that survives is (doc_id, hit) pairs for the per-doc rollup. For an
-eval set too big to broadcast, `broadcast_eval=False` falls back to a
-digest-keyed shuffle join (still digests, never text). n-grams join on
+eval set too big to broadcast, `contamination_report_bloom` pre-filters
+against a broadcast bloom bitmap and verifies with a digest-keyed
+shuffle join (still digests, never text). n-grams join on
 md5 digests, not raw strings, so row width is bounded regardless of
 k — and md5 keeps every stage expressible in the DuckDB oracle.
 """
@@ -57,7 +58,6 @@ def contamination_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-train-doc overlap with the eval n-gram set: docs with at
     least one verbatim k-gram hit, with hit counts and the contaminated
@@ -65,9 +65,7 @@ def contamination_report(
 
     Output: (doc_id, n_shingles, n_overlap, contamination_ratio).
     """
-    evals = eval_ngram_digests(eval_docs, text_col, k)
-    if broadcast_eval:
-        evals = F.broadcast(evals)
+    evals = F.broadcast(eval_ngram_digests(eval_docs, text_col, k))
     sh = spread(train_docs).select(
         F.col(id_col).alias("doc_id"),
         shingles(tokens(text_col), k).alias("shingles"),
@@ -116,15 +114,19 @@ def contamination_report(
 # tests. No Python anywhere.
 
 
-def _bloom_positions(ngram: F.Column, num_hashes: int, m_bits: int) -> F.Column:
+#: Bit positions set per n-gram in the eval bloom filter.
+BLOOM_HASHES = 5
+
+
+def _bloom_positions(ngram: F.Column, m_bits: int) -> F.Column:
     """Double-hashing position family pos_j = (h1 + j*h2) mod m,
-    j=1..k (Kirsch-Mitzenmacher: two hashes simulate k)."""
+    j=1..BLOOM_HASHES (Kirsch-Mitzenmacher: two hashes simulate k)."""
     # reduce mod m BEFORE combining: raw h1 + j*h2 overflows int64
     # under ANSI mode; (h1' + j*h2') stays < (k+1)*m, far from 2^63
     h1 = F.pmod(F.xxhash64(ngram), F.lit(m_bits))
     h2 = F.pmod(F.xxhash64(F.lit("bloom2"), ngram), F.lit(m_bits))
     return F.array(
-        *[F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits)) for j in range(1, num_hashes + 1)]
+        *[F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits)) for j in range(1, BLOOM_HASHES + 1)]
     )
 
 
@@ -133,11 +135,10 @@ def build_ngram_bloom(
     text_col: str = "text",
     k: int = 8,
     m_bits: int = 1 << 20,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """One-row DataFrame holding the dense bloom bitmap
     (array<bigint>, m_bits/64 words) over the eval set's k-gram
-    digests. Build cost: one explode (k positions/ngram), one
+    digests. Build cost: one explode (BLOOM_HASHES positions/ngram), one
     map-side-combining groupBy over at most m_bits/64 distinct word
     keys, one final array assembly. The bitmap row is what gets
     broadcast: m_bits=2^30 -> 128 MiB for ~10^8 items at p~1%."""
@@ -146,7 +147,7 @@ def build_ngram_bloom(
     pos = spread(eval_docs).select(
         F.explode(shingles(tokens(text_col), k)).alias("ngram")
     ).select(
-        F.explode(_bloom_positions(F.col("ngram"), num_hashes, m_bits)).alias("pos")
+        F.explode(_bloom_positions(F.col("ngram"), m_bits)).alias("pos")
     )
     words = pos.select(
         (F.col("pos") / 64).cast("long").alias("word_idx"),
@@ -179,7 +180,6 @@ def contamination_report_bloom(
     id_col: str = "doc_id",
     k: int = 8,
     m_bits: int = 1 << 20,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """`contamination_report` semantics via the bloom scale path:
     map-side bloom pre-filter on the corpus n-grams, then the exact
@@ -187,7 +187,7 @@ def contamination_report_bloom(
     path exists for) restricted to bloom survivors. Output is
     bit-identical to the exact path (no false negatives; false
     positives die in the verify join)."""
-    bloom = F.broadcast(build_ngram_bloom(eval_docs, text_col, k, m_bits, num_hashes))
+    bloom = F.broadcast(build_ngram_bloom(eval_docs, text_col, k, m_bits))
     sh = spread(train_docs).select(
         F.col(id_col).alias("doc_id"),
         shingles(tokens(text_col), k).alias("shingles"),
@@ -199,7 +199,7 @@ def contamination_report_bloom(
     )
     probed = exploded.crossJoin(bloom).filter(
         F.forall(
-            _bloom_positions(F.col("ngram"), num_hashes, m_bits),
+            _bloom_positions(F.col("ngram"), m_bits),
             lambda pos: F.bit_get(
                 F.get("bloom", (pos / 64).cast("int")), (pos % 64).cast("int")
             )

@@ -104,7 +104,6 @@ def qgram_pairs(
     q: int = 3,
     min_shared: int = 4,
     max_df: int | None = None,
-    max_df_frac: float = 0.25,
 ) -> DataFrame:
     """Fuzzy-match candidates by shared q-gram count (the PPJoin-family
     count-filtering idea): two strings sharing >= ``min_shared``
@@ -118,8 +117,8 @@ def qgram_pairs(
     generate quadratic candidate volume and carry no signal (the
     standard stop-gram cut, mirrored by the oracle).
 
-    The cut is a FRACTION of the corpus by default (df >
-    ``max_df_frac`` * n_records), computed in-plan via a one-row
+    The cut is a FRACTION of the corpus by default (df > a quarter of
+    n_records), computed in-plan via a one-row
     broadcast — an absolute cut does not width-scale: the r6 32x probe
     showed a fixed ``max_df`` pushing EVERY gram over the cut as the
     corpus widens, silently degenerating the operator to zero pairs at
@@ -150,7 +149,7 @@ def qgram_pairs(
         dfs = dfs.join(F.broadcast(total))
         # floor of 8 so tiny corpora (unit tests, samples) don't cut
         # grams at df 1-2, where the fraction is degenerate anyway
-        cut = F.greatest(F.ceil(F.col("_n") * F.lit(max_df_frac)), F.lit(8))
+        cut = F.greatest(F.ceil(F.col("_n") * F.lit(0.25)), F.lit(8))
     df_ok = dfs.filter(F.col("df") <= cut).select("g")
     indexed = grams.join(df_ok, "g", "left_semi")
     a = indexed.select("g", F.col("rid").alias("id_a"))

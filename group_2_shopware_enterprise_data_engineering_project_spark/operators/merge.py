@@ -143,11 +143,9 @@ def incremental_agg(
     changes: DataFrame,
     group_cols: tuple[str, ...],
     value_col: str = "value",
-    count_alias: str = "n_rows",
-    sum_alias: str = "value_cents",
 ) -> DataFrame:
     """Incremental view maintenance for a decomposable aggregate
-    (count + integer-cents sum per group): apply a
+    (count n_rows + integer-cents sum value_cents per group): apply a
     ``snapshot_diff_images`` change stream to a previously materialized
     aggregate WITHOUT rescanning the base table — the cost is
     O(changed rows), not O(table). insert/update_postimage contribute
@@ -187,15 +185,15 @@ def incremental_agg(
             for g in gcols
         ],
         (
-            F.coalesce(F.col(count_alias), F.lit(0))
+            F.coalesce(F.col("n_rows"), F.lit(0))
             + F.coalesce(F.col("_dn"), F.lit(0))
-        ).alias(count_alias),
+        ).alias("n_rows"),
         (
-            F.coalesce(F.col(sum_alias), F.lit(0))
+            F.coalesce(F.col("value_cents"), F.lit(0))
             + F.coalesce(F.col("_dc"), F.lit(0))
-        ).alias(sum_alias),
+        ).alias("value_cents"),
     )
-    return merged.filter(F.col(count_alias) > 0)
+    return merged.filter(F.col("n_rows") > 0)
 
 
 def merge_replace(

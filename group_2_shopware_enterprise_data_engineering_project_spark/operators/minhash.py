@@ -80,21 +80,17 @@ def minhash_signature(shingle_col: Column, num_perm: int = NUM_PERM) -> Column:
     )
 
 
-def _signed(ss: DataFrame, num_perm: int) -> DataFrame:
+def _signed(ss: DataFrame) -> DataFrame:
     """(doc_id, signature) of a `shingle_sets` frame."""
     return ss.select(
-        "doc_id", minhash_signature(F.col("shingles"), num_perm).alias("signature")
+        "doc_id", minhash_signature(F.col("shingles")).alias("signature")
     )
 
 
 def signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    return _signed(shingle_sets(docs, text_col, id_col, k), num_perm)
+    return _signed(shingle_sets(docs, text_col, id_col))
 
 
 def band_buckets(
@@ -263,11 +259,7 @@ def minhash_lsh_dedup(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
-    band_rows: int = BAND_ROWS,
     threshold: float = 0.4,
-    bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
     """Full near-dup pipeline -> (doc_a, doc_b, jaccard) pairs with
     verified jaccard >= threshold, ordered for determinism.
@@ -279,17 +271,17 @@ def minhash_lsh_dedup(
     and (id, band_hash) are tiny relative to the corpus (no document
     bodies), so this holds at cluster scale where recomputing the
     signature stage per branch would dominate the job."""
-    ss = shingle_sets(docs, text_col, id_col, k).persist()
+    ss = shingle_sets(docs, text_col, id_col).persist()
     buckets = None
     try:
-        buckets = band_buckets(_signed(ss, num_perm), num_perm, band_rows).persist()
+        buckets = band_buckets(_signed(ss)).persist()
         # Lazy candidates (materialize=False): `buckets` is persisted
         # right above and the pair set is consumed exactly once by the
         # verify join, so the eager checkpoint inside candidate_pairs
         # would only serialize candidate generation ahead of the verify
         # stage; one action lets Spark overlap their independent stages
         # (guide §2.6).
-        cands = candidate_pairs(buckets, bucket_cap, materialize=False)
+        cands = candidate_pairs(buckets, materialize=False)
         verified = exact_jaccard(ss, cands)
         # No terminal global sort: at scale the pair list is huge and
         # the driver compare / downstream joins are order-insensitive
@@ -308,7 +300,6 @@ def allpairs_jaccard_dedup(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.4,
 ) -> DataFrame:
     """n-gram Jaccard near-dup WITHOUT LSH: exact inverted-index
@@ -318,7 +309,7 @@ def allpairs_jaccard_dedup(
     Persisted for the same reason as minhash_lsh_dedup: the shingle
     subtree feeds 4 plan branches; released on return via eager
     materialization of the (small) surviving-pair result."""
-    ss = shingle_sets(docs, text_col, id_col, k).persist()
+    ss = shingle_sets(docs, text_col, id_col).persist()
     try:
         exploded = ss.select("doc_id", F.explode("shingles").alias("shingle"))
         inter = (
@@ -334,18 +325,13 @@ def allpairs_jaccard_dedup(
 
 
 def bucket_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
-    band_rows: int = BAND_ROWS,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, band_idx, band_hash) for a corpus — the STORED artifact
     of incremental ingestion dedup: built once per corpus, appended as
     shards land, and probed by each new shard without re-shingling the
     history. The index carries digests + ids only, never text."""
-    return band_buckets(signatures(docs, text_col, id_col, k, num_perm), num_perm, band_rows)
+    return band_buckets(signatures(docs, text_col, id_col))
 
 
 def incremental_dedup(
@@ -353,11 +339,7 @@ def incremental_dedup(
     existing_docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
-    band_rows: int = BAND_ROWS,
     threshold: float = 0.4,
-    bucket_cap: int = BUCKET_CAP,
     index: DataFrame | None = None,
     new_buckets: DataFrame | None = None,
 ) -> DataFrame:
@@ -378,7 +360,7 @@ def incremental_dedup(
     with it and appends it) to skip the signature stage — the
     compute-bound stage of the pipeline — a second time. The shard is
     still re-shingled here (shingles feed the verify join; they are
-    one md5-free projection, cheap next to `num_perm` signature
+    one md5-free projection, cheap next to the NUM_PERM signature
     hashes).
 
     Semantics equal `minhash_lsh_dedup` over the UNION minus the
@@ -400,29 +382,25 @@ def incremental_dedup(
         is identical to the plain bucket join;
       - new-vs-new candidates use the salt-split self-join as usual.
     """
-    new_ss = shingle_sets(new_docs, text_col, id_col, k).persist()
+    new_ss = shingle_sets(new_docs, text_col, id_col).persist()
     own_buckets = new_buckets is None
     own_index = index is None
     cross = None
     ex_ss = None
     try:
         if own_buckets:
-            new_buckets = band_buckets(
-                _signed(new_ss, num_perm), num_perm, band_rows
-            ).persist()
+            new_buckets = band_buckets(_signed(new_ss)).persist()
         if own_index:
             # Persisted for the same reason candidate_pairs persists its
             # bucket frame (r7 bisect, PERF.md): the bipartite salt
             # evaluates the index TWICE — the oversized-bucket sizing
             # agg and the task frame — and when the index is derived
-            # here its lineage is the full `num_perm`-permutation md5
+            # here its lineage is the full NUM_PERM-permutation md5
             # signature pipeline over the HISTORY (measured at sf0.1:
             # ~5 s of d7's 14 s wall was this second evaluation). A
             # caller-passed index is a stored artifact (parquet read),
             # which the two branches re-scan cheaply — not persisted.
-            index = bucket_index(
-                existing_docs, text_col, id_col, k, num_perm, band_rows
-            ).persist()
+            index = bucket_index(existing_docs, text_col, id_col).persist()
 
         # new x existing: bipartite bucket join, hot buckets salted.
         # Persisted because it feeds BOTH the verify join and the
@@ -431,7 +409,7 @@ def incremental_dedup(
             salted_bipartite_join(
                 new_buckets.withColumnRenamed("doc_id", "new_id"),
                 index.withColumnRenamed("doc_id", "ex_id"),
-                bucket_cap,
+                BUCKET_CAP,
                 ("band_idx", "band_hash"),
                 "new_id",
                 "ex_id",
@@ -452,7 +430,7 @@ def incremental_dedup(
         # + shingle projection up to 4x. Candidate-history shingles are
         # LSH-selected — a small fraction of the history by
         # construction — so the cache is shard-scale, not corpus-scale.
-        ex_ss = shingle_sets(ex_cand, text_col, id_col, k).persist()
+        ex_ss = shingle_sets(ex_cand, text_col, id_col).persist()
 
         cross_pairs = cross.select(
             F.least("new_id", "ex_id").alias("doc_a"),
@@ -469,9 +447,9 @@ def incremental_dedup(
         # extra shuffle and a second evaluation of the candidate plan
         # per call. Sound because ids are disjoint across the two
         # corpora, so (doc_a, doc_b) determines vs_existing uniquely.
-        within = candidate_pairs(
-            new_buckets, bucket_cap, materialize=False
-        ).withColumn("vs_existing", F.lit(0))
+        within = candidate_pairs(new_buckets, materialize=False).withColumn(
+            "vs_existing", F.lit(0)
+        )
         cands = cross_pairs.unionByName(within)
 
         out = (
@@ -494,17 +472,16 @@ def incremental_dedup(
             ex_ss.unpersist()
 
 
+#: Shared shingles listed per pair by `pair_evidence`.
+EVIDENCE_TOP_N = 3
+
+
 def pair_evidence(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.4,
-    top_n: int = 3,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Near-dup EXPLANATION: for every verified near-dup pair, the
     exact shared-shingle count and the lexicographically-first
-    ``top_n`` shared shingles — the human-auditable evidence a
+    EVIDENCE_TOP_N shared shingles — the human-auditable evidence a
     curation review wants next to each dedup verdict ("why did we drop
     doc B against doc A?"). Composes the full `minhash_lsh_dedup`
     pipeline with one more inverted-index join restricted to the
@@ -512,14 +489,12 @@ def pair_evidence(
 
     The evidence strings are capped BEFORE collection (rank window on
     the pair partition, t12's postings-cap pattern), so per-pair state
-    is O(top_n) even for boilerplate pairs sharing thousands of
-    shingles; the shared count still comes from the full uncapped
+    is O(EVIDENCE_TOP_N) even for boilerplate pairs sharing thousands
+    of shingles; the shared count still comes from the full uncapped
     aggregate on the same shuffle.
     """
-    pairs = minhash_lsh_dedup(
-        docs, text_col, id_col, k=k, threshold=threshold
-    )
-    ss = shingle_sets(docs, text_col, id_col, k)
+    pairs = minhash_lsh_dedup(docs, text_col, id_col)
+    ss = shingle_sets(docs, text_col, id_col)
     ex = ss.select("doc_id", F.explode("shingles").alias("s"))
     shared = (
         pairs.join(ex.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -538,7 +513,7 @@ def pair_evidence(
         F.count(F.lit(1)).cast("long").alias("n_shared"),
         F.array_join(
             F.array_sort(
-                F.collect_list(F.when(F.col("_rn") <= top_n, F.col("s")))
+                F.collect_list(F.when(F.col("_rn") <= EVIDENCE_TOP_N, F.col("s")))
             ),
             ",",
         ).alias("top_shared"),
@@ -546,19 +521,13 @@ def pair_evidence(
 
 
 def calibration(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
-    band_rows: int = BAND_ROWS,
-    bucket_cap: int = BUCKET_CAP,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """MinHash calibration report: per LSH candidate pair, the
-    signature agreement count (0..num_perm — num_perm * the unbiased
+    signature agreement count (0..NUM_PERM — NUM_PERM * the unbiased
     Jaccard estimator) NEXT TO the exact shared-shingle and union
     cardinalities. The sketch-quality audit a dedup pipeline publishes
-    when tuning num_perm / band geometry: if n_agree/num_perm tracks
+    when tuning NUM_PERM / band geometry: if n_agree/NUM_PERM tracks
     inter/union poorly, the permutation budget is wrong for the corpus.
 
     All-integer output (n_agree, inter_n, union_n) — estimator and
@@ -571,13 +540,11 @@ def calibration(
     pairs), and the exact leg restricts the shingle index to candidate
     docs before joining (exact_jaccard's shape).
     """
-    ss = shingle_sets(docs, text_col, id_col, k).persist()
+    ss = shingle_sets(docs, text_col, id_col).persist()
     try:
-        sigs = _signed(ss, num_perm).persist()
+        sigs = _signed(ss).persist()
         try:
-            pairs = candidate_pairs(
-                band_buckets(sigs, num_perm, band_rows), bucket_cap
-            )
+            pairs = candidate_pairs(band_buckets(sigs))
             agree = (
                 pairs.join(
                     sigs.select(

@@ -25,10 +25,10 @@ units, i.e. ~10^-12 relative), a price worth paying for
 reproducibility.
 
 Overflow bound: 85 · (max incoming) must stay under 2^63; incoming is
-at most total mass N·UNIT, so with UNIT=10^12 the default is safe to
-N ≈ 10^5 even in the adversarial all-mass-into-one-hub case (real
-graphs are orders of magnitude safer). For larger N pass a smaller
-``unit`` — precision scales down gracefully.
+at most total mass N·UNIT, so UNIT=10^12 is safe to N ≈ 10^5 even in
+the adversarial all-mass-into-one-hub case (real graphs are orders of
+magnitude safer). For larger N lower UNIT — precision scales down
+gracefully.
 """
 
 from __future__ import annotations
@@ -38,29 +38,28 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 UNIT = 10**12
+#: Iterations between lineage truncations of the rank table.
+PR_CHECKPOINT_EVERY = 2
 
 
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
-    unit: int = UNIT,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Run ``iterations`` exact-integer PageRank steps over a directed
     edge list (distinct edges expected; duplicates would double-count
     contributions).
 
     Returns (node_id, rank_units, rank) for every node, where rank =
-    rank_units / unit. Sink nodes (no out-edges) redistribute their
+    rank_units / UNIT. Sink nodes (no out-edges) redistribute their
     mass uniformly — the standard dangling-node treatment.
-    ``checkpoint_every=0`` disables lineage truncation (persist-only).
 
     Each iteration's rank table is persisted: it is consumed twice
     (contribution join + dangling scan) and the loop would otherwise
     stack k iterations of joins into one exponential lineage. Every
-    ``checkpoint_every`` iterations the rank table is additionally
+    PR_CHECKPOINT_EVERY iterations the rank table is additionally
     localCheckpoint'ed, TRUNCATING the logical plan — persist alone
     keeps the full unrolled lineage alive (the r4 plan lint measured
     2,798 exchanges in the 3-iteration linted plan), and at 100x the
@@ -69,7 +68,7 @@ def pagerank(
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    base = (15 * unit) // 100
+    base = (15 * UNIT) // 100
 
     # The edge list and the loop-invariant out-degree table are read
     # TWICE PER ITERATION (contribution join + outdeg/dangling); for a
@@ -93,7 +92,7 @@ def pagerank(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    ranks = nodes.withColumn("r", F.lit(unit).cast("long")).persist(
+    ranks = nodes.withColumn("r", F.lit(UNIT).cast("long")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     for it in range(iterations):
@@ -124,7 +123,7 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        if checkpoint_every > 0 and (it + 1) % checkpoint_every == 0:
+        if (it + 1) % PR_CHECKPOINT_EVERY == 0:
             # truncate lineage: the checkpointed blocks ARE the
             # materialization, no extra persist/count needed
             new_ranks = new_ranks.localCheckpoint(eager=True)
@@ -144,7 +143,7 @@ def pagerank(
     return ranks.select(
         F.col("node").alias("node_id"),
         F.col("r").alias("rank_units"),
-        (F.col("r").cast("double") / F.lit(float(unit))).alias("rank"),
+        (F.col("r").cast("double") / F.lit(float(UNIT))).alias("rank"),
     )
 
 

@@ -44,15 +44,17 @@ def split_thresholds(fracs: tuple[float, ...]) -> list[str]:
     return bounds
 
 
+SPLIT_NAMES = ("train", "val", "test")
+SPLIT_FRACS = (0.9, 0.05, 0.05)
+
+
 def split_assign(
     df: DataFrame,
     key_col: str,
-    names: tuple[str, ...] = ("train", "val", "test"),
-    fracs: tuple[float, ...] = (0.9, 0.05, 0.05),
-    salt: str = "split",
 ) -> DataFrame:
-    """Assign each row to a named split by hashing its key: bucket =
-    first 4 hex chars of md5(salt ':' key). Deterministic (same key ->
+    """Assign each row to a SPLIT_NAMES split (SPLIT_FRACS of the key
+    space) by hashing its key: bucket = first 4 hex chars of
+    md5('split:' key). Deterministic (same key ->
     same split across runs, clusters, and engines), independent of row
     order and partitioning, and stable under corpus growth — adding
     documents never reassigns existing ones, unlike fraction-based
@@ -61,14 +63,12 @@ def split_assign(
     Scale: a pure projection — no shuffle, no state; the split of 100
     TB costs one codegen'd map over the scan.
     """
-    if len(names) != len(fracs):
-        raise ValueError("names and fracs must align")
     bucket = F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))), 1, 4
+        F.md5(F.concat(F.lit("split:"), F.col(key_col).cast("string"))), 1, 4
     )
-    bounds = split_thresholds(fracs)
-    expr: Column = F.lit(names[-1])
-    for name, bound in reversed(list(zip(names[:-1], bounds))):
+    bounds = split_thresholds(SPLIT_FRACS)
+    expr: Column = F.lit(SPLIT_NAMES[-1])
+    for name, bound in reversed(list(zip(SPLIT_NAMES[:-1], bounds))):
         expr = F.when(bucket < bound, name).otherwise(expr)
     return df.withColumn("bucket", bucket).withColumn("split", expr)
 
@@ -81,9 +81,9 @@ def sessionize(
     gap_sec: int = 1800,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
 ) -> DataFrame:
-    """Derive sessions from raw events by inactivity gap: a session
+    """Derive sessions from raw events by inactivity gap (ties in
+    ``ts_col`` ordered by event_id): a session
     breaks when the time since the user's previous event exceeds
     ``gap_sec``. This is the scalable generalization of the reference's
     pre-assigned session_id analytics (ST6 — web_transform.py groups by
@@ -107,7 +107,7 @@ def sessionize(
     # NTZ->TIMESTAMP cast is value-exact, and it is a no-op otherwise.
     if dict(events.dtypes).get(ts_col) == "timestamp_ntz":
         events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy(user_col).orderBy(ts_col, "event_id")
     prev_ms = F.unix_millis(F.lag(ts_col).over(w))
     is_new = F.when(
         prev_ms.isNull() | (F.unix_millis(F.col(ts_col)) - prev_ms > gap_sec * 1000),
@@ -239,10 +239,9 @@ def stratified_sample(
     frac: Fraction = Fraction(1, 5),
     strata_col: str = "lang",
     id_col: str = "doc_id",
-    salt: str = "samp",
 ) -> DataFrame:
     """Deterministic per-stratum quota sample: within each stratum,
-    rank rows by md5(salt ':' id) and keep rank * frac.denominator <=
+    rank rows by md5('samp:' id) and keep rank * frac.denominator <=
     stratum_size * frac.numerator — exactly floor(frac * n) rows per
     stratum, chosen uniformly by the hash. The Fraction keeps the
     quota in integer arithmetic, so Spark and the SQL oracle agree
@@ -254,10 +253,9 @@ def stratified_sample(
 
     Scale: one shuffle on the stratum key; count-over-window and
     rank share the same partitioning. Per-stratum data must fit a
-    task sort — salt-split strata (functions/partitioning.py) if one
-    stratum dominates the corpus.
+    task sort — salt-split strata if one stratum dominates the corpus.
     """
-    h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit("samp:"), F.col(id_col).cast("string")))
     w_rank = Window.partitionBy(strata_col).orderBy(h, id_col)
     w_all = Window.partitionBy(strata_col)
     return (
@@ -498,7 +496,6 @@ def token_budget_select(
     budget_tokens: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    salt: str = "sel",
 ) -> DataFrame:
     """Select the best docs under a token budget — the final cut of a
     curation pipeline ("10B tokens of the highest-quality data"):
@@ -546,7 +543,7 @@ def token_budget_select(
         (F.col("band_cum_before") < F.lit(budget_tokens))
         & (F.col("band_cum_before") + F.col("band_tokens") > F.lit(budget_tokens))
     )
-    h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit("sel:"), F.col(id_col).cast("string")))
     ws = Window.partitionBy("quality_score").orderBy(h, id_col)
     partial = (
         strad.withColumn(
@@ -944,7 +941,6 @@ def negative_sample(
     item_col: str,
     pool_size: int = 100,
     k: int = 5,
-    salt: str = "neg",
 ) -> DataFrame:
     """Per-user hard-negative candidates for recommendation training:
     from the ``pool_size`` most-popular items, pick the ``k`` items
@@ -976,7 +972,7 @@ def negative_sample(
     unseen = cands.join(seen, ["user", "item"], "left_anti")
     rk = F.md5(
         F.concat(
-            F.lit(f"{salt}:"),
+            F.lit("neg:"),
             F.col("user").cast("string"),
             F.lit(":"),
             F.col("item").cast("string"),
@@ -1065,7 +1061,6 @@ def temperature_resample(
     sample_div: int = 4,
     group_col: str = "source",
     id_col: str = "doc_id",
-    salt: str = "mix",
 ) -> DataFrame:
     """APPLY the temperature-scaled source mixture that
     `mixture_weights` only prices: draw a deterministic sample of
@@ -1136,7 +1131,7 @@ def temperature_resample(
         .cast("long")
         .alias("quota"),
     )
-    h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit("mix:"), F.col(id_col).cast("string")))
     wr = Window.partitionBy(group_col).orderBy(h, id_col)
     return (
         docs.join(F.broadcast(quotas), group_col)

@@ -113,7 +113,6 @@ def bm25_topk(
 def inverted_index(
     docs: DataFrame,
     posting_cap: int = 20,
-    min_df: int = 1,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -156,7 +155,7 @@ def inverted_index(
             ).alias("postings")
         )
     )
-    return full.join(capped, "term").filter(F.col("df") >= min_df).select(
+    return full.join(capped, "term").select(
         "term", "df", "tf_total", "postings"
     )
 
@@ -171,8 +170,6 @@ def rrf_fuse(
     kw_ranks: DataFrame,
     vec_ranks: DataFrame,
     id_col: str = "doc_id",
-    rrf_k: int = RRF_K,
-    micro: int = RRF_MICRO,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of two ranked
     retrieval lists — the standard hybrid-search combiner (BM25 keyword
@@ -181,7 +178,7 @@ def rrf_fuse(
     contributes only the other term (the RRF convention).
 
     The fused score is computed in integer micro-units —
-    ``micro div (rrf_k + rank)`` per list, summed as BIGINT — so it is
+    ``RRF_MICRO div (RRF_K + rank)`` per list, summed as BIGINT — so it is
     exactly reproducible cross-engine (the float 1/(k+r) sum would be
     fine at 2 terms, but the integer form stays exact at any number of
     fused lists). Ties broken by id; fused_rank assigned over the
@@ -191,10 +188,10 @@ def rrf_fuse(
     fused = kw_ranks.join(vec_ranks, id_col, "full")
     contrib = (
         F.coalesce(
-            F.expr(f"{micro} div ({rrf_k} + rank_kw)"), F.lit(0).cast("long")
+            F.expr(f"{RRF_MICRO} div ({RRF_K} + rank_kw)"), F.lit(0).cast("long")
         )
         + F.coalesce(
-            F.expr(f"{micro} div ({rrf_k} + rank_vec)"), F.lit(0).cast("long")
+            F.expr(f"{RRF_MICRO} div ({RRF_K} + rank_vec)"), F.lit(0).cast("long")
         )
     ).cast("long")
     scored = fused.select(

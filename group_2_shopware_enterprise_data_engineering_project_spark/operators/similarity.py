@@ -18,9 +18,9 @@ implementation:
   over the probed lists), behind `ivf_topk` and `ivf_recall_curve`;
 - product quantization: `pq_seed_codebook` (also the residual codebook
   of `ivfpq_topk`), `_nearest_codes` (struct(d, c) per subspace: its
-  codes encode through `_pq_encode` for `pq_encode`, `pq_topk` and
-  `ivfpq_topk`, its distances sum to `pq_distortion`), and the ADC
-  scorer `_adc_topk`, behind `pq_topk` and `ivfpq_topk`;
+  codes encode through `_pq_encode` for `pq_topk` and `ivfpq_topk`,
+  its distances sum to `pq_distortion`), and the ADC scorer
+  `_adc_topk`, behind `pq_topk` and `ivfpq_topk`;
 - recall curves: `_recall_curve` scores `ivf_recall_curve` and
   `prefix_recall_curve` against brute-force truth.
 
@@ -51,34 +51,6 @@ from group_2_shopware_enterprise_data_engineering_project_spark.operators.saltjo
 
 NUM_PLANES = 8
 DIM = 64
-
-# Bucket-scaling policy: LSH bucket count must GROW with the corpus, or
-# every bucket goes quadratic at scale. num_planes=None on the public
-# entry points derives H from the corpus row count (one metadata-cheap
-# count()) so expected bucket occupancy stays ~TARGET_BUCKET_ROWS;
-# MIN/MAX bound the hash width (2^8=256 .. 2^24=16M buckets).
-MIN_PLANES = 8
-MAX_PLANES = 24
-TARGET_BUCKET_ROWS = 1024
-
-
-def derive_num_planes(
-    n_rows: int,
-    target_bucket: int = TARGET_BUCKET_ROWS,
-    min_planes: int = MIN_PLANES,
-    max_planes: int = MAX_PLANES,
-) -> int:
-    """H such that n / 2^H ~= target_bucket, clamped to [min, max].
-
-    10^9 vectors -> H=20 (1M buckets); <=2^8*target -> the floor H=8,
-    which keeps small-corpus oracle runs on the fixed 8-plane family.
-    """
-    import math
-
-    if n_rows <= target_bucket:
-        return min_planes
-    return max(min_planes, min(max_planes, math.ceil(math.log2(n_rows / target_bucket))))
-
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -164,6 +136,23 @@ def embedding_norms(emb: DataFrame) -> DataFrame:
     )
 
 
+def _query_corpus(emb: DataFrame, query_pred: Column) -> tuple[DataFrame, DataFrame]:
+    """The exact-scan frame pair behind `brute_force_topk` and
+    `prefix_recall_curve`: the broadcast query side (query_id, qv) and
+    the spread corpus side (neighbor_id, nv), both as double vectors."""
+    queries = F.broadcast(
+        emb.filter(query_pred).select(
+            F.col("vec_id").alias("query_id"),
+            _as_double(F.col("embedding")).alias("qv"),
+        )
+    )
+    corpus = spread(emb).select(
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("nv"),
+    )
+    return queries, corpus
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int] | None = None,
@@ -188,16 +177,7 @@ def brute_force_topk(
     """
     if query_pred is None:
         query_pred = F.col("vec_id").isin(query_ids or [])
-    queries = F.broadcast(
-        emb.filter(query_pred).select(
-            F.col("vec_id").alias("query_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        )
-    )
-    corpus = spread(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("nv"),
-    )
+    queries, corpus = _query_corpus(emb, query_pred)
     sims = (
         queries.crossJoin(corpus)
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -234,11 +214,11 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return F.concat(*bits)
 
 
-def _srp_bucketed(emb: DataFrame, num_planes: int) -> DataFrame:
+def _srp_bucketed(emb: DataFrame) -> DataFrame:
     """(vec_id, v, _vn, bucket): the corpus as double vectors with their
-    l2 norm and H-bit SRP bucket — the one bucketed frame that both
-    `_lsh_search` and `embedding_near_dup_pairs` join on."""
-    planes = hyperplane_signs(num_planes)
+    l2 norm and NUM_PLANES-bit SRP bucket — the one bucketed frame that
+    both `_lsh_search` and `embedding_near_dup_pairs` join on."""
+    planes = hyperplane_signs(NUM_PLANES)
     return spread(emb).select(
         F.col("vec_id"),
         _as_double(F.col("embedding")).alias("v"),
@@ -252,19 +232,16 @@ def _lsh_search(
     query_ids: list[int] | None,
     query_pred: Column | None,
     k: int,
-    num_planes: int | None,
     n_flip_bits: int,
 ) -> DataFrame:
     """Shared SRP-LSH search body: bucket the corpus once, broadcast
     the query side fanned out to its own bucket plus the first
     ``n_flip_bits`` Hamming-distance-1 probe buckets, exact-cosine the
     candidates, rank with the partial top-k. ``n_flip_bits=0`` is
-    plain single-bucket LSH; ``n_flip_bits=num_planes`` is full
+    plain single-bucket LSH; ``n_flip_bits=NUM_PLANES`` is full
     1-bit multi-probe. One body so the bucketing/cosine semantics
     cannot drift between the two public entry points."""
-    if num_planes is None:
-        num_planes = derive_num_planes(emb.count())
-    bucketed = _srp_bucketed(emb, num_planes)
+    bucketed = _srp_bucketed(emb)
     if query_pred is None:
         query_pred = F.col("vec_id").isin(query_ids or [])
     flip = lambda i: F.concat(  # noqa: E731 — flip sign bit i (1-based)
@@ -272,7 +249,7 @@ def _lsh_search(
         F.when(F.substring(F.col("qbucket"), i, 1) == "1", F.lit("0")).otherwise(
             F.lit("1")
         ),
-        F.substring(F.col("qbucket"), i + 1, num_planes - i),
+        F.substring(F.col("qbucket"), i + 1, NUM_PLANES - i),
     )
     queries = F.broadcast(
         bucketed.filter(query_pred)
@@ -312,19 +289,17 @@ def lsh_topk(
     query_ids: list[int] | None = None,
     query_pred: Column | None = None,
     k: int = 5,
-    num_planes: int | None = NUM_PLANES,
 ) -> DataFrame:
     """ANN top-k within same-bucket candidates. Approximate: neighbors
     in other buckets are missed by design (recall ~ (1 - theta/pi)^H
     per Charikar's collision bound); determinism is exact.
 
-    num_planes=None derives H from the corpus size (bucket-scaling
-    policy) so buckets don't grow with the corpus. Reducer skew is a
-    non-issue on this path: queries are BROADCAST, so the bucket match
-    is a map-side hash join — the corpus never shuffles on the bucket
-    key and an oversized bucket just streams past the query map.
+    Reducer skew is a non-issue on this path: queries are BROADCAST, so
+    the bucket match is a map-side hash join — the corpus never
+    shuffles on the bucket key and an oversized bucket just streams
+    past the query map.
     """
-    return _lsh_search(emb, query_ids, query_pred, k, num_planes, n_flip_bits=0)
+    return _lsh_search(emb, query_ids, query_pred, k, n_flip_bits=0)
 
 
 def lsh_topk_multiprobe(
@@ -332,7 +307,6 @@ def lsh_topk_multiprobe(
     query_ids: list[int] | None = None,
     query_pred: Column | None = None,
     k: int = 5,
-    num_planes: int | None = NUM_PLANES,
 ) -> DataFrame:
     """Multi-probe SRP-LSH (Lv et al. 2007): besides its own bucket,
     each query probes the H Hamming-distance-1 buckets (one sign bit
@@ -347,11 +321,7 @@ def lsh_topk_multiprobe(
     bucket, so a (query, neighbor) candidate arises at most once — no
     dedup stage. Candidates then rank via the partial top-k.
     """
-    if num_planes is None:
-        num_planes = derive_num_planes(emb.count())
-    return _lsh_search(
-        emb, query_ids, query_pred, k, num_planes, n_flip_bits=num_planes
-    )
+    return _lsh_search(emb, query_ids, query_pred, k, n_flip_bits=NUM_PLANES)
 
 
 N_CENTROIDS = 16
@@ -371,11 +341,7 @@ MIN_CENTROIDS = 4
 MAX_CENTROIDS = 65_536
 
 
-def derive_n_centroids(
-    n_rows: int,
-    min_centroids: int = MIN_CENTROIDS,
-    max_centroids: int = MAX_CENTROIDS,
-) -> int:
+def derive_n_centroids(n_rows: int) -> int:
     """C ~= ceil(sqrt(n)), clamped. The sqrt rule balances per-query
     probe cost (C centroid dot products) against list-scan cost
     (n_probe * n/C candidates) — the standard IVF sizing. 10^9 vectors
@@ -383,8 +349,8 @@ def derive_n_centroids(
     import math
 
     if n_rows <= 0:
-        return min_centroids
-    return max(min_centroids, min(max_centroids, math.ceil(math.sqrt(n_rows))))
+        return MIN_CENTROIDS
+    return max(MIN_CENTROIDS, min(MAX_CENTROIDS, math.ceil(math.sqrt(n_rows))))
 
 
 def _sample_key() -> Column:
@@ -462,15 +428,15 @@ def _int_mean_centroids(assigned: DataFrame, scale: int = KMEANS_SCALE) -> DataF
     )
 
 
-def _sampled_lloyd(
-    emb: DataFrame, n_centroids: int, iters: int, sample: int, m: int = 1
-) -> DataFrame:
+def _sampled_lloyd(emb: DataFrame, n_centroids: int, m: int = 1) -> DataFrame:
     """The one sampled-Lloyd trainer, behind `kmeans_centroids` (m=1,
     whole vectors) and `pq_codebook_kmeans` (one run per contiguous
     subspace of DIM // m dims). A deterministic md5-ordered sample
-    (distributed top-k take, never a full sort) is persisted; each run
+    of KMEANS_SAMPLE rows (distributed top-k take, never a full sort)
+    is persisted; each run
     seeds from the sample's first ``n_centroids`` rows in that order
-    and iterates `_int_mean_centroids(_assign_nearest(...))`. Training
+    and iterates `_int_mean_centroids(_assign_nearest(...))`
+    KMEANS_ITERS times. Training
     runs eagerly and the result is rebuilt as a local-rows DataFrame
     (sub, centroid_id, cv): centroids are a *model*, so driver
     materialization keeps downstream plans free of the training
@@ -479,7 +445,7 @@ def _sampled_lloyd(
     base = spread(emb).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
-    samp = base.orderBy(_sample_key(), "vec_id").limit(sample).persist()
+    samp = base.orderBy(_sample_key(), "vec_id").limit(KMEANS_SAMPLE).persist()
     try:
         rows = []
         for s in range(m):
@@ -497,7 +463,7 @@ def _sampled_lloyd(
                     F.col("v").alias("cv"),
                 )
             )
-            for _ in range(iters):
+            for _ in range(KMEANS_ITERS):
                 cents = _int_mean_centroids(_assign_nearest(view, cents))
             rows += [(s, *r) for r in cents.collect()]
         schema = T.StructType(
@@ -508,12 +474,7 @@ def _sampled_lloyd(
         samp.unpersist()
 
 
-def kmeans_centroids(
-    emb: DataFrame,
-    n_centroids: int | None = None,
-    iters: int = KMEANS_ITERS,
-    sample: int = KMEANS_SAMPLE,
-) -> DataFrame:
+def kmeans_centroids(emb: DataFrame, n_centroids: int | None = None) -> DataFrame:
     """Train IVF centroids: `_sampled_lloyd` over whole vectors, seeded
     by the md5-ordered sample's first `n_centroids` rows.
     n_centroids=None derives C from the corpus size (sqrt rule).
@@ -522,7 +483,7 @@ def kmeans_centroids(
     persisted RDD stays pinned for the session's lifetime."""
     if n_centroids is None:
         n_centroids = derive_n_centroids(emb.count())
-    return _sampled_lloyd(emb, n_centroids, iters, sample).drop("sub")
+    return _sampled_lloyd(emb, n_centroids).drop("sub")
 
 
 def _centroids(emb: DataFrame, n_centroids: int):
@@ -661,17 +622,14 @@ def _ivf_candidates(
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    num_planes: int | None = NUM_PLANES,
     bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the semantic-dedup stage
     of a training-data pipeline): SRP-LSH buckets -> same-bucket
     candidate pairs -> exact cosine >= threshold.
 
-    Scale shape: num_planes=None derives H from the corpus size so
-    expected bucket occupancy is constant, and any bucket that STILL
-    exceeds `bucket_cap` (skew: dense embedding clusters, exact-dup
-    floods) is salt-split — its rows are hashed into s = ceil(n/cap)
+    Scale shape: any bucket that exceeds `bucket_cap` (skew: dense
+    embedding clusters, exact-dup floods) is salt-split — its rows are hashed into s = ceil(n/cap)
     groups and the (i, j) group-pair sub-tasks are enumerated
     explicitly, so no reducer ever sees more than ~cap^2 candidate
     pairs. The split is LOSSLESS: every same-bucket pair lands in
@@ -681,13 +639,11 @@ def embedding_near_dup_pairs(
     with probability ~(1 - theta/pi)^H, so high-threshold pairs are
     rarely missed. Output ordered for determinism.
     """
-    if num_planes is None:
-        num_planes = derive_num_planes(emb.count())
     # persisted so the salt-split's oversized-bucket sizing agg and the
     # pair join share one evaluation of the H-plane projection (the
     # sizing branch would otherwise re-run lsh_bucket over the corpus;
     # r7 bisect, PERF.md)
-    bucketed = _srp_bucketed(emb, num_planes).persist()
+    bucketed = _srp_bucketed(emb).persist()
     tasks = salted_pair_tasks(bucketed, bucket_cap).persist()
     try:
         return _near_dup_pairs_body(tasks, threshold)
@@ -716,26 +672,21 @@ def _near_dup_pairs_body(tasks: DataFrame, threshold: float) -> DataFrame:
 SEMDEDUP_THRESHOLD = 0.4
 
 
-def derive_semdedup_centroids(
-    n_rows: int,
-    target_cluster: int = TARGET_LIST_ROWS,
-    min_centroids: int = MIN_CENTROIDS,
-    max_centroids: int = MAX_CENTROIDS,
-) -> int:
-    """C = ceil(n / target_cluster), clamped. Unlike IVF's sqrt rule
+def derive_semdedup_centroids(n_rows: int) -> int:
+    """C = ceil(n / TARGET_LIST_ROWS), clamped. Unlike IVF's sqrt rule
     (which balances probe cost vs list-scan cost), SemDedup's cluster
     count must grow LINEARLY with the corpus: the within-cluster
     self-join does O(size^2) work per cluster, so holding expected
-    cluster size constant (~target_cluster rows) keeps per-cluster
+    cluster size constant (~TARGET_LIST_ROWS rows) keeps per-cluster
     pair work bounded at any corpus scale — 10^9 vectors -> ~10^6
     clusters of ~1k (capped at MAX_CENTROIDS, where the residual
     oversize is absorbed by the salt-split cap instead)."""
     import math
 
     if n_rows <= 0:
-        return min_centroids
+        return MIN_CENTROIDS
     return max(
-        min_centroids, min(max_centroids, math.ceil(n_rows / target_cluster))
+        MIN_CENTROIDS, min(MAX_CENTROIDS, math.ceil(n_rows / TARGET_LIST_ROWS))
     )
 
 
@@ -743,8 +694,6 @@ def semdedup(
     emb: DataFrame,
     threshold: float = SEMDEDUP_THRESHOLD,
     n_centroids: int | None = None,
-    centroids: DataFrame | None = None,
-    bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
     """SemDedup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by k-means clustering + within-cluster cosine.
@@ -766,7 +715,7 @@ def semdedup(
       centroid_id, with cluster count derived linearly from corpus
       size (`derive_semdedup_centroids`) so expected per-cluster work
       is constant, and `saltjoin.salted_pair_tasks` hard-capping any skewed
-      cluster at ~bucket_cap^2 candidate pairs per task;
+      cluster at ~BUCKET_CAP^2 candidate pairs per task;
     - the shuffle carries (vec_id, v, cluster) — vectors, not
       payloads, and only cluster-mates ever meet.
 
@@ -775,24 +724,21 @@ def semdedup(
     cluster-mate exists (cluster representatives), and such rows
     always keep.
     """
-    if centroids is None:
-        if n_centroids is None:
-            n_centroids = derive_semdedup_centroids(emb.count())
-        centroids = kmeans_centroids(emb, n_centroids=n_centroids)
+    if n_centroids is None:
+        n_centroids = derive_semdedup_centroids(emb.count())
+    centroids = kmeans_centroids(emb, n_centroids=n_centroids)
     assigned = ivf_assign(emb, centroids=centroids).persist()
     try:
-        return _semdedup_body(assigned, threshold, bucket_cap)
+        return _semdedup_body(assigned, threshold)
     finally:
         assigned.unpersist()
 
 
-def _semdedup_body(
-    assigned: DataFrame, threshold: float, bucket_cap: int
-) -> DataFrame:
+def _semdedup_body(assigned: DataFrame, threshold: float) -> DataFrame:
     bucketed = assigned.select(
         "vec_id", "v", "nv", F.col("centroid_id").alias("bucket")
     )
-    tasks = salted_pair_tasks(bucketed, bucket_cap)
+    tasks = salted_pair_tasks(bucketed, BUCKET_CAP)
     # Same lossless sub-task enumeration as embedding_near_dup_pairs;
     # orientation matters here: the HIGHER id of each pair is the dup
     # candidate, so attribute the similarity to greatest(vec_id).
@@ -951,22 +897,20 @@ def sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-def pq_seed_codebook(
-    emb: DataFrame, m: int = PQ_M, k_codes: int = PQ_CODES
-) -> DataFrame:
+def pq_seed_codebook(emb: DataFrame) -> DataFrame:
     """Training-free PQ codebook: subspace s's codes are dims
-    [s*sub_dim, (s+1)*sub_dim) of the first ``k_codes`` vectors by id.
-    Returns (sub, code, cv) — a model-sized table (m * k_codes rows).
+    [s*PQ_SUB_DIM, (s+1)*PQ_SUB_DIM) of the first PQ_CODES vectors by
+    id. Returns (sub, code, cv) — a model-sized table (PQ_M * PQ_CODES
+    rows).
     """
-    sub_dim = DIM // m
-    base = emb.filter(F.col("vec_id") < k_codes).select(
+    base = emb.filter(F.col("vec_id") < PQ_CODES).select(
         F.col("vec_id").alias("code"), _as_double(F.col("embedding")).alias("v")
     )
-    subs = base.sparkSession.range(m).select(F.col("id").cast("long").alias("sub"))
+    subs = base.sparkSession.range(PQ_M).select(F.col("id").cast("long").alias("sub"))
     return base.crossJoin(F.broadcast(subs)).select(
         "sub",
         "code",
-        F.slice(F.col("v"), F.col("sub") * sub_dim + 1, sub_dim).alias("cv"),
+        F.slice(F.col("v"), F.col("sub") * PQ_SUB_DIM + 1, PQ_SUB_DIM).alias("cv"),
     )
 
 
@@ -1027,14 +971,6 @@ def _pq_encode(vectors: DataFrame, packed: DataFrame, m: int, *keep) -> DataFram
     )
 
 
-def pq_encode(emb: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(vec_id, codes): per subspace, the id of the nearest codebook
-    centroid by squared L2, ties to the lowest code (`_nearest_codes`)."""
-    packed, m, _k = _packed_codebook(codebook)
-    base = spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    return _pq_encode(base, packed, m, "vec_id")
-
-
 def _adc_topk(
     cands: DataFrame, q_col: str, packed: DataFrame, m: int, k: int
 ) -> DataFrame:
@@ -1075,9 +1011,8 @@ def _adc_topk(
 
 def pq_topk(
     emb: DataFrame,
+    query_pred: Column,
     codebook: DataFrame | None = None,
-    query_pred: Column | None = None,
-    query_ids: list[int] | None = None,
     k: int = 5,
 ) -> DataFrame:
     """PQ-ANN top-k via Asymmetric Distance Computation (`_adc_topk`):
@@ -1086,8 +1021,6 @@ def pq_topk(
     neighbor_id, approx_dist, rank); self excluded."""
     if codebook is None:
         codebook = pq_seed_codebook(emb)
-    if query_pred is None:
-        query_pred = F.col("vec_id").isin(query_ids or [])
     packed, m, _k = _packed_codebook(codebook)
     queries = F.broadcast(
         emb.filter(query_pred).select(
@@ -1100,19 +1033,13 @@ def pq_topk(
     return _adc_topk(queries.crossJoin(codes), "qv", packed, m, k)
 
 
-def pq_codebook_kmeans(
-    emb: DataFrame,
-    m: int = PQ_M,
-    k_codes: int = PQ_CODES,
-    iters: int = KMEANS_ITERS,
-    sample: int = KMEANS_SAMPLE,
-) -> DataFrame:
+def pq_codebook_kmeans(emb: DataFrame) -> DataFrame:
     """Trained PQ codebook (sub, code, cv): `_sampled_lloyd` run once
     per subspace on the same md5-ordered sample, with the
     integer-snapped means of `kmeans_centroids`. The codebook is a
-    model, so the training cost is bounded by m * sample, not the
-    corpus."""
-    return _sampled_lloyd(emb, k_codes, iters, sample, m).withColumnRenamed(
+    model, so the training cost is bounded by PQ_M * KMEANS_SAMPLE, not
+    the corpus."""
+    return _sampled_lloyd(emb, PQ_CODES, PQ_M).withColumnRenamed(
         "centroid_id", "code"
     )
 
@@ -1170,7 +1097,6 @@ def ivfpq_topk(
     query_ids: list[int] | None = None,
     k: int = 5,
     n_probe: int = 2,
-    n_coarse: int = N_CENTROIDS,
 ) -> DataFrame:
     """IVF-PQ search: probe the ``n_probe`` L2-nearest coarse lists per
     query and rank their residual-PQ codes by ADC. Output
@@ -1187,7 +1113,7 @@ def ivfpq_topk(
 
     base = spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v"))
     coarse = F.broadcast(
-        base.filter(F.col("vec_id") < n_coarse).select(
+        base.filter(F.col("vec_id") < N_CENTROIDS).select(
             F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
         )
     )
@@ -1357,7 +1283,6 @@ def diversity_coreset(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_planes: int = NUM_PLANES,
 ) -> DataFrame:
     """Bucket-stratified diversity coreset: ONE representative per
     occupied SRP sign-bucket — the geometry-aware counterpart of
@@ -1374,7 +1299,7 @@ def diversity_coreset(
     at most one candidate per (bucket, map task). No window over the
     corpus, no per-bucket sort.
     """
-    planes = hyperplane_signs(num_planes)
+    planes = hyperplane_signs(NUM_PLANES)
     b = emb.select(
         F.col(id_col),
         lsh_bucket(_as_double(F.col(vec_col)), planes).alias("bucket"),
@@ -1474,7 +1399,7 @@ def pq_distortion(emb: DataFrame, codebook: DataFrame) -> DataFrame:
     is per-vector.
 
     Scale shape: the codebook is a model (m x k rows) packed and
-    broadcast exactly as ``pq_encode``; the corpus pays one codegen
+    broadcast exactly as ``_pq_encode``'s; the corpus pays one codegen
     fold per row and never shuffles. Returns (vec_id, sq_err).
     """
     packed, m, _k = _packed_codebook(codebook)
@@ -1549,16 +1474,7 @@ def prefix_recall_curve(
     (same discipline as brute_force_topk); recall = integer hit count
     / literal k. Returns (dim, query_id, n_hits, recall).
     """
-    queries = F.broadcast(
-        emb.filter(query_pred).select(
-            F.col("vec_id").alias("query_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        )
-    )
-    corpus = spread(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("nv"),
-    )
+    queries, corpus = _query_corpus(emb, query_pred)
     sims_cols = [
         cosine(F.slice("qv", 1, d), F.slice("nv", 1, d)).alias(f"cos_{d}")
         for d in dims

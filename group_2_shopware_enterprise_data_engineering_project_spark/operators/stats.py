@@ -566,10 +566,9 @@ def histogram_quantiles(
     lo: int,
     hi: int,
     bins: int = 64,
-    qs: tuple[int, ...] = (50, 95),
 ) -> DataFrame:
-    """Quantile estimates from a `histogram_bins` table: for each q in
-    ``qs`` (integer percents), the UPPER boundary of the first bin
+    """Quantile estimates from a `histogram_bins` table: for q in 50 and
+    95 (integer percents), the UPPER boundary of the first bin
     where 100 * cumulative >= q * n — pure BIGINT comparisons, so the
     estimate is engine-exact and merge-invariant. Emits per group:
     n and one q{q}_upper_cents column per q. Window runs over the
@@ -585,9 +584,9 @@ def histogram_quantiles(
     )
     width = (hi - lo) // bins
     aggs = [F.max("n").cast("long").alias("n")]
-    for q in qs:
+    for q in (50, 95):
         hit = F.when(
-            F.col("cum") * 100 >= F.col("n") * int(q), F.col("b")
+            F.col("cum") * 100 >= F.col("n") * q, F.col("b")
         )
         aggs.append(
             (F.lit(lo) + (F.min(hit) + 1) * F.lit(width))

@@ -139,12 +139,10 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Whole-document fingerprint: md5 of the raw text. The exact-dedup
-    key (hash-groupBy dedup shuffles 32 hex chars per doc, not the
-    document bodies)."""
-    return docs.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("fingerprint")
-    )
+    """(fingerprint, id): md5 of the raw text per document. The
+    exact-dedup key (hash-groupBy dedup shuffles 32 hex chars per doc,
+    not the document bodies)."""
+    return docs.select(F.md5(F.col(text_col)).alias("fingerprint"), F.col(id_col))
 
 
 def winnow_fingerprints(
@@ -190,8 +188,7 @@ def exact_dedup(
     """Exact dedup groups: one row per distinct text, keeping the min id
     (hash-groupBy on the md5 fingerprint — the 100 TB-safe form: the
     shuffle carries (hash, id), never the text)."""
-    fp = docs.select(F.md5(F.col(text_col)).alias("fingerprint"), F.col(id_col))
-    return fp.groupBy("fingerprint").agg(
+    return fingerprint(docs, text_col, id_col).groupBy("fingerprint").agg(
         F.min(id_col).alias("keep_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
@@ -257,9 +254,9 @@ def repetition_signals(
 
 
 def corpus_dup_ngrams(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Corpus-wide duplicate n-gram profile (the Gopher-style quality
+    """Corpus-wide duplicate 3-gram profile (the Gopher-style quality
     signal): per document, how many of its distinct n-grams occur in
     at least one OTHER document. High dup_gram_frac marks boilerplate /
     templated text that within-doc repetition signals (t7) and
@@ -269,7 +266,7 @@ def corpus_dup_ngrams(
     Scale shape: the inverted-index pattern — shuffle carries
     (md5(gram), doc_id) pairs only, never text; one groupBy on the
     gram hash, one join back (AQE skew-join absorbs boilerplate
-    grams), one groupBy on doc_id. Short docs (< n tokens) have zero
+    grams), one groupBy on doc_id. Short docs (< 3 tokens) have zero
     grams and report frac 0.0 via the left join.
 
     ``spread`` because the shingle projection is the expensive stage
@@ -284,7 +281,7 @@ def corpus_dup_ngrams(
     grams = (
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(shingles(tokens(text_col), n)).alias("g"),
+            F.explode(shingles(tokens(text_col), 3)).alias("g"),
         )
         .select("doc_id", F.md5(F.col("g").cast("binary")).alias("h"))
     )
@@ -1100,7 +1097,6 @@ def boilerplate_lines(
     pages: DataFrame,
     source_col: str = "source",
     min_share_pct: int = 30,
-    min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -1111,7 +1107,7 @@ def boilerplate_lines(
     document of that source. Unlike a static blocklist this learns the
     boilerplate from the corpus itself, per source.
 
-    Sources with fewer than `min_docs` documents learn NOTHING: in a
+    Sources with fewer than 2 documents learn NOTHING: in a
     one-doc source every line has 100% share, so an unguarded learner
     deletes the entire document (caught by the toy-corpus test).
 
@@ -1133,7 +1129,7 @@ def boilerplate_lines(
     totals = (
         pages.groupBy(F.col(source_col).alias("source"))
         .agg(F.count(F.lit(1)).alias("_n_docs"))
-        .filter(F.col("_n_docs") >= min_docs)
+        .filter(F.col("_n_docs") >= 2)
     )
     freqs = (
         lines.select("source", "line_fp", "doc_id")
@@ -1170,7 +1166,6 @@ def boilerplate_lines(
 
 def rake_keywords(
     docs: DataFrame,
-    stopwords: tuple[str, ...] = STOPWORDS,
     k: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -1212,7 +1207,7 @@ def rake_keywords(
         F.posexplode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias(
             "pos", "w"
         ),
-    ).withColumn("is_stop", F.col("w").isin(list(stopwords)))
+    ).withColumn("is_stop", F.col("w").isin(list(STOPWORDS)))
     wseg = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

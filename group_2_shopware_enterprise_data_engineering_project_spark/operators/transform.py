@@ -1,4 +1,4 @@
-"""Row-transform operators (P8-P13) as native column expressions.
+"""Row-transform operators (P8-P12) as native column expressions.
 
 Reference equivalents are row-at-a-time Python in Glue/Lambda; here
 each is a single projection — map-side only, fully codegen'd.
@@ -46,35 +46,14 @@ def normalize_epoch(
     epoch_col: str,
     ts_col: str = "event_time",
     date_col: str | None = None,
-    truncate_to_second: bool = False,
 ) -> DataFrame:
     """P9 + P10 — epoch float (s or ms, autodetected at 1e11) ->
     timestamp, plus optional derived date column (reference
     transformation.py:37-49, inventory_transform.py:403-410)."""
-    df = df.withColumn(ts_col, epoch_to_timestamp(epoch_col, truncate_to_second))
+    df = df.withColumn(ts_col, epoch_to_timestamp(epoch_col))
     if date_col:
         df = df.withColumn(date_col, derive_date(ts_col))
     return df
-
-
-def extract_partition_keys(df: DataFrame, path_col: str) -> DataFrame:
-    """P13 — regex-extract hive partition keys from a path string
-    (reference s3toathena.py:44-60: year=(\\d{4})/month=(\\d{2})/...)."""
-    return (
-        df.withColumn("year", F.regexp_extract(F.col(path_col), r"year=(\d{4})", 1))
-        .withColumn("month", F.regexp_extract(F.col(path_col), r"month=(\d{2})", 1))
-        .withColumn("day", F.regexp_extract(F.col(path_col), r"day=(\d{2})", 1))
-        .withColumn("hour", F.regexp_extract(F.col(path_col), r"hour=(\d{2})", 1))
-    )
-
-
-def extract_date_from_filename(df: DataFrame, name_col: str) -> DataFrame:
-    """P13 — date from `pos_YYYYMMDD_HHMMSS.csv`-style filenames
-    (reference transfom_pos.py:80-87)."""
-    raw = F.regexp_extract(F.col(name_col), r"_(\d{8})_", 1)
-    return df.withColumn(
-        "file_date", F.to_date(raw, "yyyyMMdd")
-    )
 
 
 def stamp_ingestion_time(df: DataFrame, fixed: str | None = None) -> DataFrame:

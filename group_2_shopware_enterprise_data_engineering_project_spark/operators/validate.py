@@ -10,10 +10,9 @@ valid/invalid split is two filters off the same parent plan (Catalyst
 collapses the shared scan), and the summary is a single aggregate —
 no row-at-a-time Python anywhere, so it runs at any scale.
 
-Two rejection granularities, both present in the reference:
-- record-level (CRM rows -> DLQ): `split` returns (valid, invalid).
-- file/batch-level (inventory rejects the whole file if ANY row fails,
-  inventory_validate.py:244-247): `batch_is_valid` aggregates to a bool.
+Rejection is record-level (CRM rows -> DLQ): `split` returns (valid,
+invalid), and `write_rejected` lands the invalid side in the
+quarantine zone (batch pipelines) or the DLQ (streaming sink).
 """
 
 from __future__ import annotations
@@ -190,31 +189,15 @@ def summary(df: DataFrame, rules: list[Rule]) -> DataFrame:
     return flagged.agg(*aggs)
 
 
-def batch_is_valid(df: DataFrame, rules: list[Rule]) -> bool:
-    """File-level gate: True iff NO row violates any rule (reference
-    inventory_validate.py:244-247 rejects the whole file). Driver-side
-    boolean for pipeline control flow."""
-    flagged = with_flags(df, rules)
-    return flagged.filter(~F.col("is_valid")).isEmpty()
-
-
-def quarantine_split(
-    df: DataFrame,
-    rules: list[Rule],
-    valid_path: str | None = None,
-    rejected_path: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """K6 — split and optionally persist both sides (valid zone +
-    rejected zone), mirroring the reference's S3 prefix routing
-    (inventory_validate.py:278-299,304-334)."""
-    valid, invalid = split(df, rules)
-    if valid_path:
-        valid.write.mode("overwrite").parquet(valid_path)
-    if rejected_path:
-        invalid.withColumn(
-            "violations", F.to_json(F.col("violations"))
-        ).write.mode("overwrite").parquet(rejected_path)
-    return valid, invalid
+def write_rejected(invalid: DataFrame, path: str, mode: str) -> None:
+    """K6/K7 — land the invalid side of `split` with its violated-rule
+    list serialized as a JSON string, mirroring the reference's S3
+    quarantine prefixes (inventory_validate.py:304-334) and the CRM DLQ
+    (lambda_function.py:120-156). The batch pipelines overwrite their
+    quarantine zone; the streaming DLQ appends per micro-batch."""
+    invalid.withColumn("violations", F.to_json(F.col("violations"))).write.mode(
+        mode
+    ).parquet(path)
 
 
 # --- Deequ-style expectation suite (one scan, many constraints) ------------
@@ -226,7 +209,6 @@ def expectation_report(
     unique_cols: list[str] | None = None,
     bounds: dict[str, tuple[float, float]] | None = None,
     allowed: dict[str, list[str]] | None = None,
-    min_completeness: float = 1.0,
 ) -> DataFrame:
     """Declarative data-quality constraints evaluated in ONE aggregate
     scan (the Deequ pattern): every metric is an aggregate expression
@@ -267,7 +249,7 @@ def expectation_report(
     entries = []
     for c in completeness_cols:
         m = F.col(f"_nn_{c}").cast("double") / n
-        entries.append((f"completeness:{c}", m, m >= F.lit(min_completeness)))
+        entries.append((f"completeness:{c}", m, m >= F.lit(1.0)))
     for c in unique_cols:
         m = F.col(f"_d_{c}").cast("double") / n
         entries.append((f"uniqueness:{c}", m, F.col(f"_d_{c}") == F.col("_n")))

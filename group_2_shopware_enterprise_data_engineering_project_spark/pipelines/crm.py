@@ -16,7 +16,6 @@ Cleaning parity (reference lambda_function.py:88-117):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.cleanfn import (
     blank_to_null,

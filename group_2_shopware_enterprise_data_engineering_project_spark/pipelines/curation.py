@@ -111,7 +111,6 @@ def curate_and_pack(
     docs: DataFrame,
     cap: int = 1024,
     shards: int = 8,
-    jaccard_threshold: float = 0.4,
 ) -> DataFrame:
     """Curation v2: the full `curate_corpus` pass (exact dedup ->
     near-dup clusters -> quality + repetition gates -> split), then the
@@ -130,7 +129,7 @@ def curate_and_pack(
     # final column join); materialize once or the whole curation chain
     # (dedup, gates, split) re-executes per branch — at corpus scale
     # that doubles the dominant cost. Survivor-sized (ids + scalars).
-    curated = curate_corpus(docs, jaccard_threshold).localCheckpoint(eager=True)
+    curated = curate_corpus(docs).localCheckpoint(eager=True)
     surv_docs = docs.join(curated.select("doc_id"), "doc_id", "semi")
     packed = prep.sequence_pack(surv_docs, cap=cap, shards=shards)
     return curated.join(packed.drop("n_tokens"), "doc_id").select(

@@ -75,11 +75,7 @@ def run(
     counts = validate.RowCounts()
     ok, bad = validate.split(typed, rules(now), counts)
     if rejected_path:
-        import pyspark.sql.functions as F
-
-        bad.withColumn("violations", F.to_json("violations")).write.mode(
-            "overwrite"
-        ).parquet(rejected_path)
+        validate.write_rejected(bad, rejected_path, "overwrite")
 
     deduped = keep_latest(ok, ("inventory_id",), "last_updated", "product_id")
     table = ParquetUpsertTable(spark, table_path, partition_by=("last_updated_date",))

@@ -33,7 +33,6 @@ def archive_processed(
     src_dir: str,
     archive_dir: str,
     suffix: str = ".csv",
-    delete_source: bool = True,
 ) -> ArchiveResult:
     """Move processed input files to `archive_dir/date=YYYY-MM-DD/`,
     date taken from the filename; files without a parseable date are
@@ -51,8 +50,6 @@ def archive_processed(
         date = f"{m.group(1)}-{m.group(2)}-{m.group(3)}"
         dest_dir = os.path.join(archive_dir, f"date={date}")
         os.makedirs(dest_dir, exist_ok=True)
-        shutil.copy2(src, os.path.join(dest_dir, name))
-        if delete_source:
-            os.remove(src)
+        shutil.move(src, os.path.join(dest_dir, name))
         result.archived.append(name)
     return result

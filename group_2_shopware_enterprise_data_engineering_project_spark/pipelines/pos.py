@@ -79,9 +79,7 @@ def run(
     counts = validate.RowCounts()
     ok, bad = validate.split(raw, rules(), counts)
     if rejected_path:
-        bad.withColumn("violations", F.to_json("violations")).write.mode(
-            "overwrite"
-        ).parquet(rejected_path)
+        validate.write_rejected(bad, rejected_path, "overwrite")
 
     facts = normalize_epoch(
         distinct_rows(ok), "timestamp", ts_col="timestamp", date_col="date"

@@ -13,8 +13,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,7 +27,7 @@ from group_2_shopware_enterprise_data_engineering_project_spark.pipelines.lifecy
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.hints import (
     broadcast_if_small,
 )
-from group_2_shopware_enterprise_data_engineering_project_spark.registry import register
+from group_2_shopware_enterprise_data_engineering_project_spark.registry import register, scratch_dir
 from group_2_shopware_enterprise_data_engineering_project_spark.sinks import (
     register_partitions,
     write_hour_partitioned,
@@ -48,19 +46,6 @@ from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_
 from group_2_shopware_enterprise_data_engineering_project_spark.streaming.stateful import (
     streaming_exact_dedup,
 )
-
-
-def _tmp(prefix: str) -> str:
-    """Scratch dir for a query run, reaped at PROCESS exit (after all
-    results are materialized): a long harness session runs hundreds of
-    scratch-writing queries, and leaked dirs measurably degrade later
-    timings (11 GB / ~5k dirs observed in one r7 session)."""
-    import atexit
-    import shutil
-
-    d = tempfile.mkdtemp(prefix=f"shopware_spark_{prefix}_")
-    atexit.register(shutil.rmtree, d, True)
-    return d
 
 
 # --- P2: extra-column detection + split -----------------------------------
@@ -121,7 +106,7 @@ FROM events GROUP BY 1, 2, 3, 4
 def k9_partition_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    base = _tmp("k9")
+    base = scratch_dir("k9")
     events = table(spark, sf_dir, "events")
     write_hour_partitioned(events, "ts", f"{base}/tbl")
     # per-run table name + drop-after-checkpoint: a FIXED catalog name
@@ -179,7 +164,7 @@ FROM orders GROUP BY 1
     "the ARCHIVED layout back with its hive date partition",
 )
 def k10_archive_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp("k10")
+    base = scratch_dir("k10")
     landing, archive = f"{base}/landing", f"{base}/archive"
     os.makedirs(landing)
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -231,7 +216,7 @@ FROM events GROUP BY 1
     "admitted row deterministic",
 )
 def st2_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp("st2")
+    base = scratch_dir("st2")
     src, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
     os.makedirs(src)
     events = table(spark, sf_dir, "events").select(
@@ -321,7 +306,7 @@ def k12_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_hour_partitioned,
     )
 
-    base = _tmp("k12")
+    base = scratch_dir("k12")
     path = f"{base}/events_hourly"
     events = table(spark, sf_dir, "events")
     # first 3 days only: enough leaves (72) to exercise concurrent
@@ -390,7 +375,7 @@ def st16_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_stats,
     )
 
-    base = _tmp("st16")
+    base = scratch_dir("st16")
     src, ckpt = f"{base}/in", f"{base}/ckpt"
     os.makedirs(src)
     events = table(spark, sf_dir, "events").select(
@@ -454,7 +439,7 @@ def st17_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    base = _tmp("st17")
+    base = scratch_dir("st17")
     src, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
     os.makedirs(src)
     os.makedirs(out, exist_ok=True)

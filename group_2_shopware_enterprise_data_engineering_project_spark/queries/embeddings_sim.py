@@ -1186,9 +1186,10 @@ FROM occ GROUP BY 1
     _e18_oracle(),
     doc="ANN index-health report: SRP-LSH bucket-occupancy histogram "
     "(bucket-size -> bucket count + vector mass) — the monitoring "
-    "metric behind derive_num_planes' occupancy law and the early "
-    "alarm for embedding collapse (everything hashing into few "
-    "buckets); planes broadcast, two map-side-combined groupBys",
+    "metric that says when the fixed NUM_PLANES bucket width is "
+    "outgrown, and the early alarm for embedding collapse (everything "
+    "hashing into few buckets); planes broadcast, two map-side-combined "
+    "groupBys",
 )
 def e18_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.similarity import (

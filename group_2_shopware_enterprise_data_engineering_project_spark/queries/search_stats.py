@@ -736,14 +736,11 @@ def m56_hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # stage 1: the per-shard (per-day) register tables — the artifact a
     # daily pipeline would persist instead of raw ids
-    day_regs = stats.hll_registers(sharded, "gday", "user_id").withColumn(
-        "event_type", F.substring_index(F.col("g"), "|", 1)
-    )
-    # stage 2: cross-shard max-merge, then the shared estimate rollup
-    merged = (
-        day_regs.groupBy("event_type", "b")
-        .agg(F.max("r").alias("r"))
-        .withColumnRenamed("event_type", "g")
+    day_regs = stats.hll_registers(sharded, "gday", "user_id")
+    # stage 2: cross-shard max-merge into per-event_type registers, then
+    # the shared estimate rollup
+    merged = stats.hll_merge(
+        day_regs.select(F.substring_index(F.col("g"), "|", 1).alias("g"), "b", "r")
     )
     est = stats.hll_estimate(merged)
     exact = ev.groupBy("event_type").agg(

@@ -11,8 +11,6 @@ validation, dedup, and merge stages are all inside the checked surface.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -21,10 +19,7 @@ from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge 
     ParquetUpsertTable,
 )
 from group_2_shopware_enterprise_data_engineering_project_spark.pipelines import inventory, pos
-from group_2_shopware_enterprise_data_engineering_project_spark.registry import register
-from group_2_shopware_enterprise_data_engineering_project_spark.schemas import (
-    CRM_INTERACTION_SCHEMA,
-)
+from group_2_shopware_enterprise_data_engineering_project_spark.registry import register, scratch_dir
 from group_2_shopware_enterprise_data_engineering_project_spark.sinks import (
     read_hour_partitioned,
     write_hour_partitioned,
@@ -37,21 +32,9 @@ from group_2_shopware_enterprise_data_engineering_project_spark.sources.readers 
 from group_2_shopware_enterprise_data_engineering_project_spark.streaming import alerts
 from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
     accumulating_kpi_sink,
+    stage_ordered_batches,
     stream_json_source,
 )
-
-
-def _tmp(prefix: str) -> str:
-    """Scratch dir for a query run, reaped at PROCESS exit (after all
-    results are materialized): a long harness session runs hundreds of
-    scratch-writing queries, and leaked dirs measurably degrade later
-    timings (11 GB / ~5k dirs observed in one r7 session)."""
-    import atexit
-    import shutil
-
-    d = tempfile.mkdtemp(prefix=f"shopware_spark_{prefix}_")
-    atexit.register(shutil.rmtree, d, True)
-    return d
 
 
 # --- ST5/A5: hourly tumbling-window alert counts --------------------------
@@ -95,7 +78,7 @@ FROM events GROUP BY 1, 2, 3, 4
     "(reference transformation.py:131-168 layout); per-partition counts",
 )
 def k1_hour_partition_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("k1")
+    out = scratch_dir("k1")
     write_hour_partitioned(table(spark, sf_dir, "events"), "ts", out)
     back = read_hour_partitioned(spark, out)
     return back.groupBy("year", "month", "day", "hour").agg(
@@ -131,7 +114,7 @@ FROM orders GROUP BY 1
     "via Spark's shortest-repr float formatting",
 )
 def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("s2")
+    out = scratch_dir("s2")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -174,7 +157,7 @@ FROM customer GROUP BY 1
     "-> per-nation agg",
 )
 def s3_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("s3")
+    out = scratch_dir("s3")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
@@ -209,7 +192,7 @@ def st7_stream_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ParquetUpsertTable,
     )
 
-    base = _tmp("st7")
+    base = scratch_dir("st7")
     src_dir, kpi_path, ckpt = f"{base}/in", f"{base}/kpi", f"{base}/ckpt"
     events = table(spark, sf_dir, "events").select("event_id", "event_type")
     # 3 input files -> 3 micro-batches (deterministic split on event_id)
@@ -264,7 +247,7 @@ FROM valid GROUP BY 1, 2
     "dedup -> epoch/date derivation -> A1 KPI -> K5 bootstrap merge",
 )
 def pipe_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp("pipe_pos")
+    base = scratch_dir("pipe_pos")
     lineitem = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     src = (
@@ -329,7 +312,7 @@ FROM ranked WHERE rn = 1
     "rejected) -> keep-latest dedup -> K4 upsert bootstrap",
 )
 def pipe_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp("pipe_inv")
+    base = scratch_dir("pipe_inv")
     lineitem = table(spark, sf_dir, "lineitem")
     src = lineitem.select(
         F.col("l_partkey").alias("inventory_id"),
@@ -384,7 +367,7 @@ FROM valid GROUP BY 1, 2, 3, 4, 5
 def pipe_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.pipelines import web
 
-    base = _tmp("pipe_web")
+    base = scratch_dir("pipe_web")
     events = table(spark, sf_dir, "events")
     src = events.select(
         F.concat(F.lit("s"), F.col("user_id").cast("string")).alias("session_id"),
@@ -452,7 +435,7 @@ FROM cleaned GROUP BY 1, 2
 def pipe_crm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.pipelines import crm
 
-    base = _tmp("pipe_crm")
+    base = scratch_dir("pipe_crm")
     events = table(spark, sf_dir, "events")
     src = events.select(
         F.when(F.col("event_id") % 100 == 0, F.lit(-1))
@@ -521,9 +504,6 @@ WHERE session_end_gap <= (SELECT max(ts) FROM events)
     "the probed inclusive emission boundary (end <= max event time)",
 )
 def st9_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         run_available_now,
         source_bytes,
@@ -533,9 +513,8 @@ def st9_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_session_metrics,
     )
 
-    base = _tmp("st9")
+    base = scratch_dir("st9")
     src, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
-    os.makedirs(src)
     events = table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros(F.col("ts")).alias("ts_us")
     )
@@ -551,18 +530,7 @@ def st9_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("ts_us") < t2, 1)
         .otherwise(2)
     )
-    for b in range(3):
-        stage = f"{base}/stage_{b}"
-        events.filter(bucket == b).repartition(1).write.mode("overwrite").json(stage)
-        # an empty time bucket writes only _SUCCESS — skip it rather
-        # than StopIteration
-        part = next((n for n in os.listdir(stage) if n.endswith(".json")), None)
-        if part is None:
-            continue
-        dest = os.path.join(src, f"b{b}.json")
-        shutil.move(os.path.join(stage, part), dest)
-        t = os.path.getmtime(dest)
-        os.utime(dest, (t + 10 * b, t + 10 * b))
+    stage_ordered_batches(events, src, 3, bucket)
 
     schema = T.StructType(
         [T.StructField("user_id", T.LongType()), T.StructField("ts_us", T.LongType())]
@@ -604,7 +572,7 @@ FROM orders GROUP BY 1
     "(PushedFilters on the OrcScan)",
 )
 def s8_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("s8")
+    out = scratch_dir("s8")
     table(spark, sf_dir, "orders").write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")
@@ -654,7 +622,7 @@ def st10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_shuffle_partitions,
     )
 
-    base = _tmp("st10")
+    base = scratch_dir("st10")
     cdir, pdir, ckpt, out = (
         f"{base}/clicks",
         f"{base}/buys",
@@ -752,7 +720,7 @@ def st11_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_shuffle_partitions,
     )
 
-    base = _tmp("st11")
+    base = scratch_dir("st11")
     src, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
     events = table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), "event_type"
@@ -815,16 +783,12 @@ FROM ranked WHERE rn = 1
     "batch latest-row-per-key over the same events",
 )
 def st12_stream_dim_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         replacing_dim_sink,
     )
 
-    base = _tmp("st12")
+    base = scratch_dir("st12")
     src, ckpt = f"{base}/in", f"{base}/ckpt"
-    os.makedirs(src)
     events = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "value"
     )
@@ -840,18 +804,7 @@ def st12_stream_dim_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_id") < c2, 1)
         .otherwise(2)
     )
-    for b in range(3):
-        stage = f"{base}/stage_{b}"
-        events.filter(bucket == b).repartition(1).write.mode("overwrite").json(stage)
-        # an empty percentile bucket (degenerate event_id distribution)
-        # writes only _SUCCESS — skip it rather than StopIteration
-        part = next((n for n in os.listdir(stage) if n.endswith(".json")), None)
-        if part is None:
-            continue
-        dest = os.path.join(src, f"b{b}.json")
-        shutil.move(os.path.join(stage, part), dest)
-        t = os.path.getmtime(dest)
-        os.utime(dest, (t + 10 * b, t + 10 * b))
+    stage_ordered_batches(events, src, 3, bucket)
 
     schema = T.StructType(
         [
@@ -901,7 +854,7 @@ def st13_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats as _stats,
     )
 
-    base = _tmp("st13")
+    base = scratch_dir("st13")
     src_dir, cms_path, ckpt = f"{base}/in", f"{base}/cms", f"{base}/ckpt"
     events = table(spark, sf_dir, "events").select("event_id", "user_id")
     events.withColumn("bucket", (F.col("event_id") % 3).cast("int")).repartition(
@@ -979,10 +932,9 @@ FROM ({_minhash_oracle()}) t
 def st14_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         incremental_dedup_sink,
-        stage_ordered_batches,
     )
 
-    base = _tmp("st14")
+    base = scratch_dir("st14")
     src_dir, ckpt = f"{base}/in", f"{base}/ckpt"
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     # one file per residue class — hash-repartition on the bucket col
@@ -1055,7 +1007,7 @@ def st15_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_shuffle_partitions,
     )
 
-    base = _tmp("st15")
+    base = scratch_dir("st15")
     cdir, pdir, ckpt, out = (
         f"{base}/clicks",
         f"{base}/buys",
@@ -1158,7 +1110,7 @@ FROM orders GROUP BY 1
     "guess would make the plan data-dependent.",
 )
 def s9_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("s9")
+    out = scratch_dir("s9")
     cols = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -1220,11 +1172,10 @@ def st18_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         run_available_now,
         source_bytes,
-        stage_ordered_batches,
         state_shuffle_partitions,
     )
 
-    base = _tmp("st18")
+    base = scratch_dir("st18")
     src, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
     events = table(spark, sf_dir, "events").select(
         "event_type", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -1339,11 +1290,10 @@ def st19_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         run_available_now,
         source_bytes,
-        stage_ordered_batches,
         state_shuffle_partitions,
     )
 
-    base = _tmp("st19")
+    base = scratch_dir("st19")
     src, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
     events = table(spark, sf_dir, "events").select(
         "event_id", F.unix_micros(F.col("ts")).alias("ts_us")
@@ -1446,7 +1396,7 @@ def st20_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         replacing_dim_sink,
     )
 
-    base = _tmp("st20")
+    base = scratch_dir("st20")
     src, ckpt = f"{base}/in", f"{base}/ckpt"
     os.makedirs(src)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1548,7 +1498,7 @@ FROM documents ORDER BY doc_id
 def s10_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _tmp("s10")
+    base = scratch_dir("s10")
     blobs = f"{base}/blobs"
     os.makedirs(blobs)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1597,7 +1547,7 @@ FROM (
     "Parsing is a codegen'd projection — no shuffle before the agg",
 )
 def s11_logline_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp("s11")
+    base = scratch_dir("s11")
     logs = f"{base}/logs"
     events = table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.unix_micros(F.col("ts")).alias("us")
@@ -1657,7 +1607,7 @@ def st21_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ParquetUpsertTable,
     )
 
-    base = _tmp("st21")
+    base = scratch_dir("st21")
     src_dir, cnt_path, ckpt = f"{base}/in", f"{base}/counters", f"{base}/ckpt"
     ev = table(spark, sf_dir, "events").select(
         "event_id",
@@ -1733,7 +1683,7 @@ def st22_stream_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    base = _tmp("st22")
+    base = scratch_dir("st22")
     src_dir, tbl_path, ckpt = f"{base}/in", f"{base}/table", f"{base}/ckpt"
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1816,7 +1766,7 @@ def st23_stream_audit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    base = _tmp("st23")
+    base = scratch_dir("st23")
     src_dir, good_path, dlq_path, ckpt = (
         f"{base}/in",
         f"{base}/good",
@@ -1910,7 +1860,7 @@ def st24_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    base = _tmp("st24")
+    base = scratch_dir("st24")
     src_dir, tbl_path, ckpt = f"{base}/in", f"{base}/table", f"{base}/ckpt"
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1951,13 +1901,8 @@ def st24_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # stage as 3 time-ordered micro-batches (bucket = batch index)
-    from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
-        stage_ordered_batches,
-    )
-
-    # the staged JSON keeps the bucket field; the read schema below
-    # simply omits it
+    # stage as 3 time-ordered micro-batches (bucket = batch index); the
+    # staged JSON keeps the bucket field, the read schema below omits it
     stage_ordered_batches(feed, src_dir, 3, F.col("bucket"))
 
     schema = T.StructType(
@@ -2010,7 +1955,7 @@ def st25_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         ParquetUpsertTable,
     )
 
-    base = _tmp("st25")
+    base = scratch_dir("st25")
     src_dir, kpi_path, ckpt = f"{base}/in", f"{base}/kpi", f"{base}/ckpt"
     events = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -2030,9 +1975,6 @@ def st25_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"), F.sum(cents).alias("value_cents")
         )
 
-    from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
-        stage_ordered_batches,
-    )
 
     # wave 1: even event_ids as 2 ordered drops; run to completion
     wave1 = events.filter(F.col("event_id") % 2 == 0)
@@ -2088,7 +2030,7 @@ def st25_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "codec; the reader needs no special-casing either way",
 )
 def s13_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("s13")
+    out = scratch_dir("s13")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
@@ -2126,7 +2068,7 @@ FROM customer WHERE c_custkey % 10 <> 0
     "of K6's rule-level quarantine",
 )
 def s14_csv_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp("s14")
+    out = scratch_dir("s14")
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
@@ -2188,7 +2130,7 @@ def st26_stream_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count,
     )
 
-    base = _tmp("st26")
+    base = scratch_dir("st26")
     src_dir, cnt_path, ckpt = f"{base}/in", f"{base}/counters", f"{base}/ckpt"
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2279,7 +2221,7 @@ def st27_stream_mor_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    base = _tmp("st27")
+    base = scratch_dir("st27")
     src_dir, tbl_path, ckpt = f"{base}/in", f"{base}/table", f"{base}/ckpt"
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -2354,11 +2296,10 @@ def st28_stream_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         _stream_app_id,
         run_available_now,
-        stage_ordered_batches,
     )
 
     cap, shards = 1024, 8
-    base = _tmp("st28")
+    base = scratch_dir("st28")
     src_dir = f"{base}/in"
     man_path, off_path, ckpt = f"{base}/manifest", f"{base}/offsets", f"{base}/ckpt"
 
@@ -2456,7 +2397,7 @@ def st29_stream_ewma_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ewma_from_daily,
     )
 
-    base = _tmp("st29")
+    base = scratch_dir("st29")
     src_dir, cnt_path, ckpt = f"{base}/in", f"{base}/counters", f"{base}/ckpt"
     ev = table(spark, sf_dir, "events").select(
         "event_type",
@@ -2538,7 +2479,7 @@ def st30_stream_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    base = _tmp("st30")
+    base = scratch_dir("st30")
     src_dir, isl_path, ckpt = f"{base}/in", f"{base}/islands", f"{base}/ckpt"
     iv = table(spark, sf_dir, "events").select(
         "user_id",
@@ -2653,10 +2594,9 @@ def st31_stream_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from group_2_shopware_enterprise_data_engineering_project_spark.streaming.micro_batch import (
         _stream_app_id,
         run_available_now,
-        stage_ordered_batches,
     )
 
-    base = _tmp("st31")
+    base = scratch_dir("st31")
     src_dir = f"{base}/in"
     led_path, off_path, ckpt = f"{base}/ledger", f"{base}/offsets", f"{base}/ckpt"
 

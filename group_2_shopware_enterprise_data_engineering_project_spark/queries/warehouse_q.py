@@ -15,21 +15,8 @@ from group_2_shopware_enterprise_data_engineering_project_spark.operators import
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.hints import (
     broadcast_if_small,
 )
-from group_2_shopware_enterprise_data_engineering_project_spark.registry import register
+from group_2_shopware_enterprise_data_engineering_project_spark.registry import register, scratch_dir
 from group_2_shopware_enterprise_data_engineering_project_spark.sources import table
-
-
-def _scratch(prefix: str) -> str:
-    """Scratch dir reaped at process exit (see streaming_pipelines._tmp
-    — leaked scratch measurably degrades long-session timings)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=f"shopware_spark_{prefix}_")
-    atexit.register(shutil.rmtree, d, True)
-    return d
-
 
 
 # --- K16: SCD Type-2 dimension history ----------------------------------
@@ -221,14 +208,12 @@ ORDER BY o_orderkey
     "proves the pruned scan returns exactly the full-scan rows",
 )
 def k17_zone_map_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.functions.layout import (
         read_pruned,
         zorder_write,
     )
 
-    out = _scratch("k17")
+    out = scratch_dir("k17")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -338,14 +323,12 @@ ORDER BY o_orderkey
     "union returns exactly the full-scan rows (no false negatives)",
 )
 def k19_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.functions.layout import (
         build_bloom_index,
         prune_files_bloom,
     )
 
-    out = _scratch("k19")
+    out = scratch_dir("k19")
     (
         table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -406,8 +389,6 @@ ORDER BY shard
     "writer dropped and duplicated nothing",
 )
 def k20_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.prep import (
         shard_assign,
     )
@@ -415,7 +396,7 @@ def k20_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_training_shards,
     )
 
-    out = _scratch("k20")
+    out = scratch_dir("k20")
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     sharded = shard_assign(docs, "doc_id", n_shards=_K20_N).select(
         "doc_id", "text", "shard"
@@ -451,13 +432,11 @@ ORDER BY o_orderkey
     "forever — upsert_replace docstring).",
 )
 def k21_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
         ParquetUpsertTable,
     )
 
-    out = _scratch("k21")
+    out = scratch_dir("k21")
     orders = table(spark, sf_dir, "orders")
     v1 = orders.filter(F.col("o_orderkey") % 4 != 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -502,13 +481,11 @@ ORDER BY o_orderkey
     "non-key columns as null-safe structs.",
 )
 def k22_time_travel_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
         ParquetUpsertTable,
     )
 
-    out = _scratch("k22")
+    out = scratch_dir("k22")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -562,9 +539,7 @@ GROUP BY 1
     "scanning 12/96 months and scanning the table.",
 )
 def j6_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    out = _scratch("j6")
+    out = scratch_dir("j6")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -663,13 +638,12 @@ ORDER BY 1
 )
 def k23_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
         ParquetUpsertTable,
     )
 
-    out = _scratch("k23")
+    out = scratch_dir("k23")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -733,13 +707,11 @@ GROUP BY 1 ORDER BY 1
     "raises. The oracle proves the survivors are untouched",
 )
 def k24_gdpr_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
         ParquetUpsertTable,
     )
 
-    out = _scratch("k24")
+    out = scratch_dir("k24")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -795,13 +767,11 @@ FROM orders GROUP BY 1 ORDER BY 1
     "proves the published table equals the clean source",
 )
 def k25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from group_2_shopware_enterprise_data_engineering_project_spark.operators.merge import (
         ParquetUpsertTable,
     )
 
-    out = _scratch("k25")
+    out = scratch_dir("k25")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1146,9 +1116,7 @@ WHERE o_custkey = 42
     "proves content equality with the unpruned truth",
 )
 def k28_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    out = _scratch("k28")
+    out = scratch_dir("k28")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
@@ -1492,7 +1460,7 @@ def k32_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         MergeOnReadTable,
     )
 
-    base = _scratch("k32")
+    base = scratch_dir("k32")
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",

@@ -139,6 +139,8 @@ class CompactionStats:
     bytes_before: int
 
 
+COMPACT_MIN_FILES = 2
+COMPACT_CONCURRENCY = 16
 _COMPACT_TMP = ".compact.tmp"
 _COMPACT_OLD = ".compact.old"
 
@@ -191,12 +193,10 @@ def compact_parquet_dir(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
-    max_concurrency: int = 16,
 ) -> CompactionStats:
     """K12 (beyond-reference) — small-file compaction, the table
     maintenance that keeps a streamed-into / frequently-merged table
-    scannable: each partition leaf with >= ``min_files`` files is
+    scannable: each partition leaf with >= ``COMPACT_MIN_FILES`` files is
     rewritten into ceil(bytes / target_file_bytes) files.
 
     Why it matters at 100 TB: a micro-batch landing one file per
@@ -210,7 +210,7 @@ def compact_parquet_dir(
     read→repartition(n)→write of only that leaf, so per-leaf task
     memory is bounded by target_file_bytes regardless of table size.
     Leaves are independent, so rewrites are submitted as
-    ``max_concurrency`` CONCURRENT Spark jobs (the Spark scheduler
+    ``COMPACT_CONCURRENCY`` CONCURRENT Spark jobs (the Spark scheduler
     interleaves them across executors) — a sequential leaf loop would
     serialize thousands of sub-second jobs behind driver latency,
     which is the actual bottleneck of naive compactors.
@@ -238,7 +238,7 @@ def compact_parquet_dir(
         stats.files_before += len(files)
         stats.bytes_before += n_bytes
         n_out = max(1, math.ceil(n_bytes / target_file_bytes))
-        if len(files) < min_files or n_out >= len(files):
+        if len(files) < COMPACT_MIN_FILES or n_out >= len(files):
             stats.leaves_skipped += 1
             stats.files_after += len(files)
         else:
@@ -261,7 +261,7 @@ def compact_parquet_dir(
         return len(glob.glob(os.path.join(leaf, "*.parquet")))
 
     if plans:
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
+        with ThreadPoolExecutor(max_workers=COMPACT_CONCURRENCY) as pool:
             for n_files_after in pool.map(rewrite, plans):
                 stats.leaves_touched += 1
                 stats.files_after += n_files_after
@@ -274,7 +274,6 @@ def write_bucketed_table(
     bucket_cols: tuple[str, ...],
     n_buckets: int,
     sort_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
     """Hash-bucketed catalog table: co-locates rows by join/agg key at
     WRITE time so repeated equi-joins and groupBys on the bucket key
@@ -286,7 +285,7 @@ def write_bucketed_table(
     `sort_cols` additionally sorts within buckets (sort-merge joins then
     skip the per-task sort as well).
     """
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
+    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table_name)
@@ -349,57 +348,3 @@ def write_training_shards(
         json.dump(manifest, f)
     os.replace(tmp, os.path.join(path, "_MANIFEST.json"))
     return manifest
-
-
-# --- contract-enforced writes ----------------------------------------------
-
-
-class DataContractViolation(RuntimeError):
-    """Raised when a checked write's expectation suite fails; carries
-    the failing (constraint_name, metric) pairs."""
-
-    def __init__(self, failures: list[tuple[str, float]]):
-        self.failures = failures
-        super().__init__(
-            "data contract violated: "
-            + ", ".join(f"{c} (metric={m})" for c, m in failures)
-        )
-
-
-def checked_write(
-    df: DataFrame,
-    path: str,
-    expectations: dict,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet ONLY if the expectation suite passes — the
-    write-side data contract (dbt tests / Delta constraints shape):
-    producers fail loudly instead of publishing junk for every
-    downstream consumer to discover independently.
-
-    ``expectations`` maps the keyword arguments of
-    `validate.expectation_report` (completeness_cols, unique_cols,
-    bounds, allowed). The check is ONE aggregate pass; the frame is
-    persisted across check + write so the input is computed once, and
-    nothing is written at all on violation (no partial output to
-    clean up).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    from group_2_shopware_enterprise_data_engineering_project_spark.operators.validate import (
-        expectation_report,
-    )
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        report = expectation_report(df, **expectations).collect()
-        failures = [
-            (r["constraint_name"], float(r["metric"]))
-            for r in report
-            if not r["passed"]
-        ]
-        if failures:
-            raise DataContractViolation(failures)
-        df.write.mode(mode).parquet(path)
-    finally:
-        df.unpersist()

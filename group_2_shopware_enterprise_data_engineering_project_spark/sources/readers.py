@@ -27,45 +27,30 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """S2 — schema'd CSV scan. Malformed rows become typed NULLs
     (PERMISSIVE), which the validation layer then routes to quarantine —
     same split of concerns as the reference's validate-then-transform."""
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    json_array: bool = False,
-) -> DataFrame:
-    """S3 — NDJSON (default) or top-level JSON array (multiLine)."""
-    reader = spark.read.schema(schema)
-    if json_array:
-        reader = reader.option("multiLine", "true")
-    return reader.json(path)
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """S3 — NDJSON, one record per line."""
+    return spark.read.schema(schema).json(path)
 
 
 def decode_json_records(
-    df: DataFrame,
-    payload_col: str,
-    schema: T.StructType,
-    base64_encoded: bool = True,
+    df: DataFrame, payload_col: str, schema: T.StructType
 ) -> DataFrame:
-    """S5 — decode a column of (optionally base64'd) JSON record payloads
-    into typed columns; unparseable payloads yield NULL fields, which
-    validation rules then catch (record-level DLQ semantics)."""
-    raw = F.col(payload_col)
-    if base64_encoded:
-        raw = F.unbase64(raw).cast("string")
+    """S5 — decode a column of base64'd JSON record payloads into typed
+    columns; unparseable payloads yield NULL fields, which validation
+    rules then catch (record-level DLQ semantics)."""
+    raw = F.unbase64(F.col(payload_col)).cast("string")
     passthrough = [c for c in df.columns if c != payload_col]
     return df.select(
         *passthrough, F.from_json(raw, schema).alias("_rec")

@@ -48,12 +48,10 @@ def alerts(
     interactions: DataFrame,
     ts_col: str = "ingestion_time",
     rating_col: str = "rating",
-    threshold: int = ALERT_THRESHOLD,
-    watermark: str | None = "10 minutes",
 ) -> DataFrame:
-    """Windows whose negative count crosses the alert threshold
-    (reference fires SNS; here the alert rows ARE the output — any
-    sink can deliver them)."""
-    return negative_interaction_counts(
-        interactions, ts_col, rating_col, watermark
-    ).filter(F.col("negative_count") >= threshold)
+    """Windows whose negative count crosses ALERT_THRESHOLD (reference
+    fires SNS; here the alert rows ARE the output — any sink can
+    deliver them)."""
+    return negative_interaction_counts(interactions, ts_col, rating_col).filter(
+        F.col("negative_count") >= ALERT_THRESHOLD
+    )

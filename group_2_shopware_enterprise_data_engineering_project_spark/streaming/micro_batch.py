@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -98,12 +99,12 @@ def source_bytes(path: str) -> int:
     return total
 
 
-def state_shuffle_partitions(
-    spark: SparkSession,
-    src_bytes: int,
-    target_bytes: int = 2 << 20,
-    floor: int = 4,
-) -> int:
+#: Staged input bytes per stateful shuffle partition, and the floor.
+STATE_PARTITION_BYTES = 2 << 20
+STATE_PARTITION_FLOOR = 4
+
+
+def state_shuffle_partitions(spark: SparkSession, src_bytes: int) -> int:
     """Scale-adaptive partition count for STATEFUL streaming shuffles.
 
     A stateful operator (stream-stream join, windowed agg,
@@ -118,12 +119,13 @@ def state_shuffle_partitions(
     commits per batch; that fixed cost dominates small-stream wall
     time.
 
-    Sizing rule: one partition per ``target_bytes`` of staged input,
-    never fewer than ``floor``, never more than the session's
-    configured ``spark.sql.shuffle.partitions`` (which scales with
-    the deployment, so the cap binds — and this becomes a no-op — for
-    any input past ``default * target_bytes``; the rule only shrinks
-    the state-store count for small streams). The defaults are
+    Sizing rule: one partition per STATE_PARTITION_BYTES of staged
+    input, never fewer than STATE_PARTITION_FLOOR, never more than the
+    session's configured ``spark.sql.shuffle.partitions`` (which scales
+    with the deployment, so the cap binds — and this becomes a no-op —
+    for any input past ``default * STATE_PARTITION_BYTES``; the rule
+    only shrinks the state-store count for small streams). The values
+    are
     MEASURED, not guessed: a 5-point partition sweep at sf0.1
     (PERF.md r12) put every stateful headline query's optimum at 4-8
     partitions — below 4 the per-batch state commits stop dominating
@@ -133,7 +135,7 @@ def state_shuffle_partitions(
     instance count changes.
     """
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    derived = max(floor, -(-src_bytes // max(1, target_bytes)))
+    derived = max(STATE_PARTITION_FLOOR, -(-src_bytes // STATE_PARTITION_BYTES))
     return min(default, derived)
 
 
@@ -177,8 +179,7 @@ def run_available_now(
     concurrent batch query observing the transient override can only
     change plan width, never results (guarded by
     tools/concurrency_hash_check.py)."""
-    spark = stream_df.sparkSession
-    if state_partitions is None:
+    with _state_partitions_scope(stream_df.sparkSession, state_partitions):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .foreachBatch(batch_fn)
@@ -187,20 +188,22 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-        return q
+    return q
+
+
+@contextmanager
+def _state_partitions_scope(spark: SparkSession, n: int | None):
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` under
+    `_STATE_PARTITIONS_LOCK` for the enclosed run, restoring it after;
+    no lock and no override when ``n`` is None."""
+    if n is None:
+        yield
+        return
     with _STATE_PARTITIONS_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
         try:
-            q = (
-                stream_df.writeStream.outputMode(output_mode)
-                .foreachBatch(batch_fn)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return q
+            yield
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -235,11 +238,7 @@ def dlq_split_sink(
     def _batch(df: DataFrame, batch_id: int) -> None:
         ok, bad = validate.split(df, rules)
         valid_fn(ok, batch_id)
-        import pyspark.sql.functions as F
-
-        bad.withColumn("violations", F.to_json("violations")).write.mode(
-            "append"
-        ).parquet(dlq_path)
+        validate.write_rejected(bad, dlq_path, "append")
 
     return run_available_now(stream_df, checkpoint, _batch)
 

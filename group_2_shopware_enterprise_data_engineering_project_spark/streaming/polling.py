@@ -113,15 +113,10 @@ def run_polling_loop(
     poll: Callable[[], list[dict]],
     writer: BufferedNdjsonWriter,
     n_polls: int,
-    interval_s: float = 0.0,
-    sleep: Callable[[float], None] = time.sleep,
 ) -> None:
     """The reference's poll loop (api.py main): poll, buffer, flush on
     the writer's bounds; final drain on exit. ``n_polls`` bounds the
-    loop (production would run forever); ``sleep`` injectable for
-    tests."""
+    loop (production would run forever); pacing belongs to ``poll``."""
     for _ in range(n_polls):
         writer.add_all(poll())
-        if interval_s:
-            sleep(interval_s)
     writer.close()

@@ -29,23 +29,19 @@ DEFAULT_GAP = "30 minutes"
 
 
 def stream_session_metrics(
-    events: DataFrame,
-    gap: str = DEFAULT_GAP,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "0 seconds",
+    events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
 ) -> DataFrame:
     """Per-(user, session) metrics over a streaming DataFrame: event
-    count plus the session window bounds (end = last event + gap,
+    count plus the session window bounds (end = last event + DEFAULT_GAP,
     Spark's native session_window convention, same as the m9 batch
     query). Works on a batch DataFrame too (watermark skipped) — the
     batch/stream parity the Structured Streaming model promises.
     """
     df = events
     if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark(ts_col, "0 seconds")
     return (
-        df.groupBy(F.col(user_col), F.session_window(ts_col, gap))
+        df.groupBy(F.col(user_col), F.session_window(ts_col, DEFAULT_GAP))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             user_col,

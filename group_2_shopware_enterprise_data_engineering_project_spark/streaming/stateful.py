@@ -82,39 +82,6 @@ def streaming_exact_dedup(
     )
 
 
-RUNNING_COUNT_STATE = "n bigint"
-
-
-def running_counts(stream: DataFrame, key_col: str) -> DataFrame:
-    """Per-key cumulative event count, emitted once per key per
-    micro-batch it appears in — the stateful form of the reference's
-    accumulating KPI (ST7) without a merge table: the state store IS
-    the accumulator."""
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("n_total", T.LongType()),
-        ]
-    )
-
-    def _count(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n = state.get[0] if state.exists else 0
-        batch_n = sum(len(pdf) for pdf in pdfs)
-        n += batch_n
-        state.update((n,))
-        yield pd.DataFrame({"key": [str(key[0])], "n_total": [n]})
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _count,
-        outputStructType=out_schema,
-        stateStructType=RUNNING_COUNT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 #: (count, exact cents, sorted distinct types) — the running_user_stats
 #: state row. The distinct set rides as an array; its size is the
 #: domain's cardinality (event types: ~5), NOT the stream length.

@@ -61,14 +61,13 @@ WHITELIST: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/similarity.py", "_ivf_candidates"): (1, "probed-list query frame: n_queries * nprobe"),
     ("operators/similarity.py", "_lsh_search"): (1, "query-bucket frame: n_queries * n_tables"),
     ("operators/similarity.py", "_pq_encode"): (1, "PQ codebook: m * 256 rows"),
+    ("operators/similarity.py", "_query_corpus"): (1, "query vectors: n_queries rows"),
     ("operators/similarity.py", "_recall_curve"): (1, "curve settings: one row per setting"),
-    ("operators/similarity.py", "brute_force_topk"): (1, "query vectors: n_queries rows"),
     ("operators/similarity.py", "ivf_topk"): (1, "query frame"),
     ("operators/similarity.py", "ivfpq_topk"): (2, "coarse centroids + probe table (n_queries * n_probe)"),
     ("operators/similarity.py", "pq_distortion"): (1, "PQ codebook: m * 256 rows"),
     ("operators/similarity.py", "pq_seed_codebook"): (1, "seed codebook: m * 256 rows"),
     ("operators/similarity.py", "pq_topk"): (1, "query frame"),
-    ("operators/similarity.py", "prefix_recall_curve"): (1, "query frame"),
     ("operators/similarity.py", "quantized_topk"): (1, "query frame"),
     ("operators/similarity.py", "two_stage_topk"): (2, "query frame + stage-1 candidate ids (n_queries * k1)"),
     ("operators/skewjoin.py", "salted_sides"): (2, "hot-key list (top-n capped), both sides"),

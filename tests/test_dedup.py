@@ -738,7 +738,7 @@ def test_boilerplate_lines_learned_threshold(spark):
             (1, "body1\nfooter s1", "s1"),
             (2, "body2\nfooter s1", "s1"),
             # s2: same footer TEXT but a 1-doc source — below the
-            # min_docs floor, so NOTHING is learned there (an unguarded
+            # 2-document floor, so NOTHING is learned there (an unguarded
             # learner would delete the whole doc at 100% share); also
             # proves learning is per-source, not global
             (3, "body3\nfooter s1", "s2"),

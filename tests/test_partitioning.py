@@ -1,4 +1,4 @@
-"""Partitioning helpers: spread, salted aggregation, and the P14
+"""Partitioning helpers: spread and the P14
 partition-pruning proof on the K1 hour layout."""
 
 from __future__ import annotations
@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from group_2_shopware_enterprise_data_engineering_project_spark.functions.partitioning import (
-    salted_agg,
     spread,
 )
 from group_2_shopware_enterprise_data_engineering_project_spark.sinks import (
@@ -20,28 +19,6 @@ def test_spread_widens_only_narrow_plans(spark):
     assert spread(narrow).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     wide = spark.range(1000).repartition(64)
     assert spread(wide, min_partitions=8).rdd.getNumPartitions() == 64  # no downsample
-
-
-def test_salted_agg_matches_plain_agg(spark):
-    # heavily skewed: 90% of rows share one key
-    rows = [("hot" if i % 10 else f"k{i}", float(i)) for i in range(1000)]
-    df = spark.createDataFrame(rows, "k string, v double")
-    salted = salted_agg(
-        df,
-        ["k"],
-        {
-            "n": ("sum", F.count(F.lit(1))),
-            "total": ("sum", F.sum("v")),
-            "mx": ("max", F.max("v")),
-        },
-        salt_buckets=8,
-    )
-    plain = df.groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("total"), F.max("v").alias("mx")
-    )
-    a = {r.k: (r.n, r.total, r.mx) for r in salted.collect()}
-    b = {r.k: (r.n, r.total, r.mx) for r in plain.collect()}
-    assert a == b
 
 
 def test_p14_partition_pruning_on_hour_layout(spark, tmp_path):

@@ -197,14 +197,6 @@ def test_bucket_cap_bounds_subtask_size(spark):
     assert len(sizes) > 1
 
 
-def test_derive_num_planes_policy():
-    d = similarity.derive_num_planes
-    assert d(0) == 8 and d(1000) == 8  # floor: small corpora keep H=8
-    assert d(10**6) == 10
-    assert d(10**9) == 20
-    assert d(10**12) == 24  # ceiling
-
-
 def test_ivf_recall_at_k_monotone_and_probe_all_exact(emb):
     """Measured recall@k vs brute force: more probes never hurt, and
     probing every list IS brute force."""
@@ -447,16 +439,24 @@ def test_derive_semdedup_centroids_linear_policy():
     )
 
 
+def _pq_codes(df, codebook):
+    """(vec_id, codes) through the encoder fold that pq_topk and
+    ivfpq_topk run (`_pq_encode` over the packed codebook)."""
+    packed, m, _k = similarity._packed_codebook(codebook)
+    base = df.select("vec_id", similarity._as_double(F.col("embedding")).alias("v"))
+    return similarity._pq_encode(base, packed, m, "vec_id")
+
+
 def test_pq_encode_shape_and_range(emb):
     df, _ = emb
-    codes = similarity.pq_encode(df, similarity.pq_seed_codebook(df)).collect()
+    codes = _pq_codes(df, similarity.pq_seed_codebook(df)).collect()
     assert all(len(r.codes) == similarity.PQ_M for r in codes)
     flat = [c for r in codes for c in r.codes]
     assert min(flat) >= 0 and max(flat) < similarity.PQ_CODES
 
 
 def test_pq_distortion_consistent_with_encode(emb):
-    """Distortion ground truth from pq_encode itself: a vector's
+    """Distortion ground truth from the PQ encoder itself: a vector's
     sq_err must equal the sum of squared L2 to its ASSIGNED codes
     (computed in python over the collected codebook), and every
     codebook vector reconstructs itself exactly (sq_err == 0.0)."""
@@ -465,7 +465,7 @@ def test_pq_distortion_consistent_with_encode(emb):
     cb = {(r.sub, r.code): list(r.cv) for r in cb_df.collect()}
     codes = {
         r.vec_id: list(r.codes)
-        for r in similarity.pq_encode(df, cb_df).collect()
+        for r in _pq_codes(df, cb_df).collect()
     }
     got = {
         r.vec_id: r.sq_err

@@ -198,22 +198,26 @@ REPO = os.path.dirname(PKG)
 #: leave the list.
 UNCONSUMED_ALLOWLIST: dict[tuple[str, str], str] = {
     ("functions/layout.py", "linear_write"): "single-column layout baseline that tests/test_layout.py compares Z-order against",
-    ("functions/partitioning.py", "salted_agg"): "two-phase skewed-key aggregation, exercised only by tests/test_partitioning.py",
-    ("operators/similarity.py", "pq_codebook_kmeans"): "trained PQ codebook, exercised only by tests/test_similarity.py",
-    ("operators/similarity.py", "pq_encode"): "standalone PQ encoder; pq_topk and ivfpq_topk share its fold (_pq_encode) so each packs the codebook once; exercised only by tests/test_similarity.py",
-    ("operators/stats.py", "hll_merge"): "shard-wise HLL register merge, exercised only by tests/test_search_stats.py",
-    ("operators/text.py", "fingerprint"): "whole-document md5 key, exercised only by tests/test_dedup.py and tests/test_multimodal.py",
-    ("operators/transform.py", "extract_date_from_filename"): "reference filename-date parsing, exercised only by tests/test_transform.py",
-    ("operators/transform.py", "extract_partition_keys"): "reference partition-path parsing, exercised only by tests/test_transform.py",
-    ("operators/validate.py", "batch_is_valid"): "file-level validity gate, exercised only by tests/test_validate.py",
-    ("operators/validate.py", "quarantine_split"): "valid/rejected zone split, exercised only by tests/test_validate.py",
-    ("sinks.py", "checked_write"): "expectation-gated write, exercised only by tests/test_validate.py",
-    ("sources/tables.py", "load_tables"): "public loader of every testdata table; no caller",
-    ("sources/tables.py", "register_views"): "temp-view SQL surface, exercised only by tests/test_sources.py",
+    ("operators/similarity.py", "pq_codebook_kmeans"): "trained PQ codebook, the quality reference tests/test_similarity.py holds the seed codebook against",
+    ("sources/tables.py", "register_views"): "temp-view SQL surface for Athena-style analyst SQL, exercised only by tests/test_sources.py",
     ("streaming/micro_batch.py", "hour_partitioned_sink"): "no caller; sole user of the module's write_hour_partitioned import, which perfbench/layers.py patches",
-    ("streaming/polling.py", "run_polling_loop"): "reference poll loop, exercised only by tests/test_streaming.py",
-    ("streaming/stateful.py", "running_counts"): "stateful running count, exercised only by tests/test_streaming.py",
+    ("streaming/polling.py", "run_polling_loop"): "reference poll loop over BufferedNdjsonWriter (S6), exercised only by tests/test_streaming.py",
 }
+
+
+def _entry_trees() -> list[tuple[str, ast.Module]]:
+    """(path, parsed module) of the repo's entry points: bench.py,
+    __spark_entry__.py, tools/ and perfbench/."""
+    entry = [
+        (path, ast.parse(open(path).read(), filename=path))
+        for path in (
+            os.path.join(REPO, "bench.py"),
+            os.path.join(REPO, "__spark_entry__.py"),
+        )
+    ]
+    for sub in ("tools", "perfbench"):
+        entry += list(_package_trees(os.path.join(REPO, sub)))
+    return entry
 
 
 def _external_aliases(tree: ast.Module) -> set[str]:
@@ -240,17 +244,8 @@ def _unconsumed_public_names() -> set[tuple[str, str]]:
     an attribute of a name imported from outside the package
     (``F.transform`` does not consume a package ``transform``)."""
     pkg = list(_package_trees())
-    entry = [
-        (path, ast.parse(open(path).read(), filename=path))
-        for path in (
-            os.path.join(REPO, "bench.py"),
-            os.path.join(REPO, "__spark_entry__.py"),
-        )
-    ]
-    for sub in ("tools", "perfbench"):
-        entry += list(_package_trees(os.path.join(REPO, sub)))
     refs: dict[str, list[tuple[str, int]]] = {}
-    for path, tree in pkg + entry:
+    for path, tree in pkg + _entry_trees():
         external = _external_aliases(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
@@ -293,5 +288,119 @@ def test_every_package_function_has_a_consumer():
     stale = sorted(set(UNCONSUMED_ALLOWLIST) - found)
     assert not stale, (
         "allowlist entries that now have a consumer or no longer exist "
+        f"— remove them: {stale}"
+    )
+
+
+#: (module relative to the package, function, parameter) -> why the
+#: option stays although no program caller and no test sets it.
+#: Frozen under the same rules as UNCONSUMED_ALLOWLIST.
+UNSET_OPTION_ALLOWLIST: dict[tuple[str, str, str], str] = {
+    ("session.py", "get_spark", "master"): "deployment setting: the Spark master URL of a real cluster; every caller here runs the local default",
+}
+
+
+def _public_functions(tree: ast.Module):
+    """(owner name, def) for every public top-level function (owner =
+    its own name) and every public method or ``__init__`` of a public
+    top-level class (owner = the class name, since a constructor call
+    names the class)."""
+    for d in tree.body:
+        if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not d.name.startswith("_"):
+                yield d.name, d
+        elif isinstance(d, ast.ClassDef) and not d.name.startswith("_"):
+            for m in d.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
+                    m.name == "__init__" or not m.name.startswith("_")
+                ):
+                    yield (d.name if m.name == "__init__" else m.name), m
+
+
+def _package_options() -> dict[tuple[str, str, str], tuple[str, int | None]]:
+    """(module, function, parameter) -> (callee name, positional index
+    or None for keyword-only) of every defaulted parameter of a public
+    function or method outside ``queries/``. Column-name parameters
+    (``*_col``, ``*_cols``) are not options: they name the caller's
+    columns."""
+    out = {}
+    for path, tree in _package_trees():
+        rel = os.path.relpath(path, PKG)
+        if rel.startswith("queries" + os.sep):
+            continue
+        for owner, d in _public_functions(tree):
+            a = d.args
+            pos = a.posonlyargs + a.args
+            skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            named = [
+                (p.arg, i - skip)
+                for i, p in enumerate(pos)
+                if i >= len(pos) - len(a.defaults)
+            ] + [
+                (p.arg, None)
+                for p, dflt in zip(a.kwonlyargs, a.kw_defaults)
+                if dflt is not None
+            ]
+            for name, idx in named:
+                if not name.endswith(("_col", "_cols")):
+                    out[(rel, d.name, name)] = (owner, idx)
+    return out
+
+
+def _unset_options() -> set[tuple[str, str, str]]:
+    """Options that no call in package code, the entry points or the
+    tests passes, by keyword or by position. Calls match by callee name
+    (``f(...)``, ``x.f(...)``, ``Cls(...)`` for ``__init__``); a call
+    with ``*args`` sets every positional option and one with
+    ``**kwargs`` sets them all."""
+    tests = list(_package_trees(os.path.dirname(os.path.abspath(__file__))))
+    calls: dict[str, list[tuple[int, bool, bool, set[str]]]] = {}
+    for _path, tree in list(_package_trees()) + _entry_trees() + tests:
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            calls.setdefault(name, []).append(
+                (
+                    len(node.args),
+                    any(isinstance(x, ast.Starred) for x in node.args),
+                    any(k.arg is None for k in node.keywords),
+                    {k.arg for k in node.keywords if k.arg},
+                )
+            )
+
+    def is_set(param: str, owner: str, idx: int | None) -> bool:
+        return any(
+            param in kws or dstar or (idx is not None and (npos > idx or star))
+            for npos, star, dstar, kws in calls.get(owner, [])
+        )
+
+    return {
+        key
+        for key, (owner, idx) in _package_options().items()
+        if not is_set(key[2], owner, idx)
+    }
+
+
+def test_every_package_option_is_set():
+    """A defaulted parameter that no caller sets doubles the
+    configurations the oracles and tests would have to cover while
+    only the default ever runs. Tests count as setters here — a test
+    seam such as ``bucket_cap=8`` forcing the salt split is a real
+    use — so an option nobody sets is either a module constant or on
+    the frozen allowlist with its reason."""
+    found = _unset_options()
+    unlisted = sorted(found - set(UNSET_OPTION_ALLOWLIST))
+    assert not unlisted, (
+        "options that no caller and no test sets — make them module "
+        "constants, or list them in UNSET_OPTION_ALLOWLIST with a "
+        f"reason: {unlisted}"
+    )
+    stale = sorted(set(UNSET_OPTION_ALLOWLIST) - found)
+    assert not stale, (
+        "allowlist entries that now have a setter or no longer exist "
         f"— remove them: {stale}"
     )

@@ -251,39 +251,6 @@ def test_streaming_exact_dedup_across_batches(spark, tmp_path):
     assert rows["b"] == 2 and rows["c"] == 3
 
 
-def test_running_counts_accumulate_in_state(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from group_2_shopware_enterprise_data_engineering_project_spark.streaming.stateful import (
-        running_counts,
-    )
-
-    src = tmp_path / "in"
-    _write_jsonl(src / "f1.jsonl", [{"k": "a"}, {"k": "a"}, {"k": "b"}])
-    _write_jsonl(src / "f2.jsonl", [{"k": "a"}, {"k": "b"}, {"k": "b"}])
-
-    schema = T.StructType([T.StructField("k", T.StringType())])
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").json(str(src))
-    )
-    out = running_counts(stream, "k")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("counts_state_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM counts_state_test").collect()
-    # final state per key: totals across both batches
-    final = {}
-    for r in rows:
-        final[r.key] = max(final.get(r.key, 0), r.n_total)
-    assert final == {"a": 3, "b": 3}
-
-
 def test_time_bound_trigger_processing_time(spark, tmp_path):
     """ST1's time-bound flush half (reference api.py:22-23: flush on
     100 records OR 10s): a processingTime trigger drains files on a

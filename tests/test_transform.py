@@ -1,4 +1,4 @@
-"""Row-transform operators (P8-P13) and cleaning functions (P4-P5, P11)."""
+"""Row-transform operators (P8-P12) and cleaning functions (P4-P5, P11)."""
 
 from __future__ import annotations
 
@@ -19,8 +19,6 @@ from group_2_shopware_enterprise_data_engineering_project_spark.functions.timefn
 from group_2_shopware_enterprise_data_engineering_project_spark.operators.transform import (
     enforce_schema,
     extra_columns,
-    extract_date_from_filename,
-    extract_partition_keys,
     normalize_epoch,
     stamp_ingestion_time,
 )
@@ -69,20 +67,6 @@ def test_enforce_schema_strict_raises(spark):
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
-
-
-def test_partition_key_regex(spark):
-    df = spark.createDataFrame(
-        [("s3://b/events/year=2025/month=07/day=18/hour=16/f.parquet",)], ["path"]
-    )
-    r = extract_partition_keys(df, "path").collect()[0]
-    assert (r.year, r.month, r.day, r.hour) == ("2025", "07", "18", "16")
-
-
-def test_filename_date_regex(spark):
-    df = spark.createDataFrame([("pos_20250718_101530.csv",)], ["name"])
-    r = extract_date_from_filename(df, "name").collect()[0]
-    assert r.file_date == dt.date(2025, 7, 18)
 
 
 def test_blank_to_null_and_trim(spark):

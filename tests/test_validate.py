@@ -63,10 +63,13 @@ def test_summary_single_row(spark):
 
 
 def test_batch_gate(spark):
+    """The file-level gate (reference inventory_validate.py:244-247
+    rejects the whole file if ANY row fails) is the K8 summary's
+    invalid_rows == 0."""
     df = _df(spark)
-    assert not V.batch_is_valid(df, _rules())
+    assert V.summary(df, _rules()).first().invalid_rows > 0
     clean = df.filter("id IS NOT NULL AND stock >= 0 AND (threshold IS NULL OR threshold >= 0)")
-    assert V.batch_is_valid(clean, _rules())
+    assert V.summary(clean, _rules()).first().invalid_rows == 0
 
 
 def test_not_future_rule(spark):
@@ -86,33 +89,12 @@ def test_positive_key_rule(spark):
 
 def test_quarantine_split_writes_both_sides(spark, tmp_path):
     vp, rp = str(tmp_path / "valid"), str(tmp_path / "rejected")
-    V.quarantine_split(_df(spark), _rules(), valid_path=vp, rejected_path=rp)
+    valid, invalid = V.split(_df(spark), _rules())
+    valid.write.parquet(vp)
+    V.write_rejected(invalid, rp, "overwrite")
     assert spark.read.parquet(vp).count() == 2
     rej = spark.read.parquet(rp)
     assert rej.count() == 3
     # violations serialized as JSON string for the quarantine zone
     assert dict(rej.dtypes)["violations"] == "string"
 
-
-def test_checked_write_blocks_contract_violations(spark, tmp_path):
-    import os
-
-    from group_2_shopware_enterprise_data_engineering_project_spark.sinks import (
-        DataContractViolation,
-        checked_write,
-    )
-
-    bad = spark.createDataFrame(
-        [(1, "ok", 5.0), (None, "ok", 2.0)], "k long, s string, v double"
-    )
-    out = str(tmp_path / "contract")
-    import pytest as _pytest
-
-    with _pytest.raises(DataContractViolation) as ei:
-        checked_write(bad, out, {"completeness_cols": ["k"]})
-    assert "completeness:k" in str(ei.value)
-    assert not os.path.exists(out)  # nothing published on violation
-
-    good = spark.createDataFrame([(1, "ok", 5.0)], "k long, s string, v double")
-    checked_write(good, out, {"completeness_cols": ["k"], "unique_cols": ["k"]})
-    assert spark.read.parquet(out).count() == 1
